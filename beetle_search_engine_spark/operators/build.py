@@ -564,7 +564,7 @@ def build_index(
         # is free to assume docids exist.
         from concurrent.futures import ThreadPoolExecutor
 
-        _docids_pool = ThreadPoolExecutor(max_workers=1)
+        _docids_pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="write_docids")
         docids_fut = _docids_pool.submit(
             write_docids,
             numbered(staged, offsets, ["doc_id", *meta_cols]),
@@ -617,46 +617,52 @@ def build_index(
     # local concurrency, while a parquet round-trip scales linearly and
     # doubles as the resume point for multi-group builds.
     stage_path = f"{index_dir}/_stage/tokens"
-    # pruned numbering pass: only the text source columns ride through
-    # Arrow into the tokenizer (no doc_id strings, no meta)
-    tok_input = numbered(staged, offsets, sorted(set(fields.values())))
+    try:
+        # pruned numbering pass: only the text source columns ride through
+        # Arrow into the tokenizer (no doc_id strings, no meta)
+        tok_input = numbered(staged, offsets, sorted(set(fields.values())))
 
-    # LATE STEMMING (round 7): for the stemming JVM chain the stem legs
-    # inside tokenize_jvm re-evaluate the whole regex+explode subtree —
-    # there is no exchange boundary between the distinct-token leg and
-    # the join probe, so Catalyst computes the token stream twice (and
-    # ReuseExchange cannot fire; A/B'd in OPTIMIZATION_r07.md).  Instead
-    # the stage is written PRE-STEM (one regex pass, one exchange) and
-    # the stem dimension is built from the column-pruned stage read;
-    # both downstream consumers attach it with a broadcast join.  A doc
-    # holding two source tokens with one stem then contributes duplicate
-    # (field, term, docnum) rows — the encode kernel merges them after
-    # its sort (adjacent by construction), and df is corrected exactly
-    # below.  Positions builds keep the classic path (their position
-    # lists would need an interleaving merge).
-    from ..functions.analyzer import get_analyzer as _get_analyzer
-    from .tokenize import resolve_impl as _resolve_impl
+        # LATE STEMMING (round 7): for the stemming JVM chain the stem legs
+        # inside tokenize_jvm re-evaluate the whole regex+explode subtree —
+        # there is no exchange boundary between the distinct-token leg and
+        # the join probe, so Catalyst computes the token stream twice (and
+        # ReuseExchange cannot fire; A/B'd in OPTIMIZATION_r07.md).  Instead
+        # the stage is written PRE-STEM (one regex pass, one exchange) and
+        # the stem dimension is built from the column-pruned stage read;
+        # both downstream consumers attach it with a broadcast join.  A doc
+        # holding two source tokens with one stem then contributes duplicate
+        # (field, term, docnum) rows — the encode kernel merges them after
+        # its sort (adjacent by construction), and df is corrected exactly
+        # below.  Positions builds keep the classic path (their position
+        # lists would need an interleaving merge).
+        from ..functions.analyzer import get_analyzer as _get_analyzer
+        from .tokenize import resolve_impl as _resolve_impl
 
-    _master = str(spark.conf.get("spark.master", ""))
-    _impl = _resolve_impl(cfg.tokenizer, n_docs, _master)
-    late_stem = (
-        _impl == "jvm"
-        and _get_analyzer(cfg.analyzer).do_stem
-        and not cfg.index.store_positions
-    )
-    tokenize(
-        tok_input,
-        fields,
-        _impl,
-        analyzer_name=cfg.analyzer,
-        broadcast_stems=n_docs <= cfg.index.stem_broadcast_max_docs,
-        positions=cfg.index.store_positions,
-        n_docs_hint=n_docs,
-        apply_stems=not late_stem,
-    ).write.mode("overwrite").parquet(stage_path)
-    if docids_fut is not None:
-        docids_fut.result()  # surfaces any docids-write failure here
-        _docids_pool.shutdown(wait=False)
+        _master = str(spark.conf.get("spark.master", ""))
+        _impl = _resolve_impl(cfg.tokenizer, n_docs, _master)
+        late_stem = (
+            _impl == "jvm"
+            and _get_analyzer(cfg.analyzer).do_stem
+            and not cfg.index.store_positions
+        )
+        tokenize(
+            tok_input,
+            fields,
+            _impl,
+            analyzer_name=cfg.analyzer,
+            broadcast_stems=n_docs <= cfg.index.stem_broadcast_max_docs,
+            positions=cfg.index.store_positions,
+            n_docs_hint=n_docs,
+            apply_stems=not late_stem,
+        ).write.mode("overwrite").parquet(stage_path)
+        if docids_fut is not None:
+            docids_fut.result()  # surfaces any docids-write failure here
+    finally:
+        if docids_fut is not None:
+            # on a tokenize failure the docids write is cancelled if it
+            # never started, else awaited: no helper thread or Spark job
+            # outlives a failed build (the tokenize error is the one raised)
+            _docids_pool.shutdown(wait=True, cancel_futures=True)
     raw_tokens = spark.read.parquet(stage_path)
     _mark('tokenize -> stage parquet (+ overlapped docids write)')
 

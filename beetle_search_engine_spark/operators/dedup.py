@@ -214,12 +214,12 @@ def ngram_jaccard_pairs(
     )
     ta = tok_sets.select(F.col(id_col).alias("id_a"), F.col("_ts").alias("_ts_a"))
     tb = tok_sets.select(F.col(id_col).alias("id_b"), F.col("_ts").alias("_ts_b"))
-    inter_n = F.coalesce(
-        F.size(F.array_intersect(F.col("_ts_a"), F.col("_ts_b"))), F.lit(0)
-    )
     # size(NULL array) = -1; a candidate id absent from df keeps the old
-    # left-join semantics (counts as size 0)
-    sz = lambda c: F.greatest(F.coalesce(F.size(F.col(c)), F.lit(0)), F.lit(0))  # noqa: E731
+    # left-join semantics (counts as size 0) — and so does an intersection
+    # with such a missing side, array_intersect(NULL, _) being NULL
+    clamp = lambda e: F.greatest(F.coalesce(e, F.lit(0)), F.lit(0))  # noqa: E731
+    sz = lambda c: clamp(F.size(F.col(c)))  # noqa: E731
+    inter_n = clamp(F.size(F.array_intersect(F.col("_ts_a"), F.col("_ts_b"))))
     denom = sz("_ts_a") + sz("_ts_b") - inter_n
     jac = F.when(denom > 0, F.round(inter_n / denom, 6)).otherwise(F.lit(0.0))
     return (
@@ -319,6 +319,8 @@ def connected_components(
     no change), so the loop runs up to max_iter + 1 times — a graph of
     diameter exactly max_iter converges rather than raising.
     """
+    if algorithm not in ("label", "star"):
+        raise ValueError(f"unknown algorithm {algorithm!r} (label | star)")
     spark = pairs.sparkSession
 
     # Driver-local fast path (round 7): the same adaptive pattern as
@@ -410,8 +412,6 @@ def connected_components(
             pairs, a_col, b_col, id_out, comp_out, max_iter, _stage, staged_paths,
             checkpoint_dir,
         )
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r} (label | star)")
 
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).union(
         pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))

@@ -12,6 +12,13 @@
 Node boundaries appear exactly twice, as in the survey's plan: the term
 broadcast into the kernel closure and the final top-k merge.  The
 reference's equivalent path is search_bm25.py:27-39 (Whoosh searcher).
+
+The driver-local path (``prefer_local``, small indexes) runs no Spark job
+at all: pyarrow reads the same pruned posting rows, the same kernels
+score them on the driver, and the <= k result rows come back as an
+Arrow-backed ``LocalRelation`` (``_local_frame``), whose ``collect()`` is
+served from the driver without scheduling a job.  Every frame this
+module builds from driver rows takes that route.
 """
 
 from __future__ import annotations
@@ -20,6 +27,9 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from ..functions.analyzer import get_analyzer
 from ..functions.xxhash import pmod_bucket
@@ -28,6 +38,37 @@ from .parser import ParsedQuery, parse_query
 
 RESULT_SCHEMA = "doc_id string, score double, rank int"
 BATCH_RESULT_SCHEMA = "query_id string, " + RESULT_SCHEMA
+
+# The same schemas as StructTypes, built once here: parsing a DDL string
+# is a py4j round trip per call (tests/test_local_path.py pins them equal)
+_QUERY_ID = StructField("query_id", StringType())
+_SCORE_RANK = [StructField("score", DoubleType()), StructField("rank", IntegerType())]
+RESULT_STRUCT = StructType([StructField("doc_id", StringType()), *_SCORE_RANK])
+BATCH_RESULT_STRUCT = StructType([_QUERY_ID, *RESULT_STRUCT.fields])
+# docnum-keyed winners of the distributed paths, before the docid fetch
+_RANKED_STRUCT = StructType([StructField("docnum", LongType()), *_SCORE_RANK])
+_BATCH_RANKED_STRUCT = StructType([_QUERY_ID, *_RANKED_STRUCT.fields])
+
+
+def _local_frame(spark: SparkSession, columns, schema: StructType) -> DataFrame:
+    """Driver-side columns (one sequence per ``schema`` field, in order)
+    -> an Arrow-backed LocalRelation.  Below Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` an Arrow table
+    becomes a LocalRelation, so ``collect()`` is served on the driver with
+    no Spark job; a list of tuples would become a pickled RDD whose every
+    ``collect()`` runs jobs with Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    return _local_frame(spark, [[] for _ in schema.fields], schema)
 
 
 def read_index_metrics(index_dir: str) -> dict:
@@ -95,7 +136,7 @@ class BM25Index:
         return {t: pmod_bucket(t, n_buckets) for t in terms}
 
     def empty_result(self) -> DataFrame:
-        return self.spark.createDataFrame([], RESULT_SCHEMA)
+        return _empty_frame(self.spark, RESULT_STRUCT)
 
     def metrics(self) -> dict:
         """Build + storage-skew metrics from the group manifests (judge-
@@ -174,6 +215,37 @@ class BM25Index:
             if hasattr(self, attr):
                 delattr(self, attr)
 
+    def _pruned_scan(self, terms: list[str], buckets: dict[str, int]) -> DataFrame:
+        """The Spark posting scan of ``terms``: bucket-partition pruning
+        plus a term predicate pushed into the row groups."""
+        return self.postings.filter(
+            F.col("bucket").isin(sorted(set(buckets.values()))) & F.col("term").isin(terms)
+        )
+
+    def _multi_epoch(self) -> bool:
+        return len(self.stats.get("epochs", {"0": 0})) > 1
+
+    @staticmethod
+    def _summed_dfs(pdf) -> dict[tuple[str, str], int]:
+        """Multi-epoch index: a term's true df is the sum of its per-epoch
+        dfs (every posting row carries its own epoch's df)."""
+        per_epoch = pdf.groupby(["field", "term", "epoch"])["df"].first().reset_index()
+        agg = per_epoch.groupby(["field", "term"])["df"].sum()
+        return {(f, t): int(v) for (f, t), v in agg.items()}
+
+    @staticmethod
+    def _summed_dfs_spark(scan: DataFrame) -> dict[tuple[str, str], int]:
+        """``_summed_dfs`` as one tiny metadata aggregation over the
+        already-pruned Spark scan."""
+        rows = (
+            scan.groupBy("field", "term", "epoch")
+            .agg(F.first("df").alias("df"))
+            .groupBy("field", "term")
+            .agg(F.sum("df").alias("df"))
+            .collect()
+        )
+        return {(r["field"], r["term"]): int(r["df"]) for r in rows}
+
     def _search_every(self, pq: ParsedQuery, top_k: int) -> DataFrame:
         """Match-all ('*' — Whoosh's ``Every`` query via EveryPlugin):
         every live document scores the constant 1.0.  Tombstoned docs are
@@ -196,11 +268,7 @@ class BM25Index:
             tomb = self.spark.read.parquet(tomb_dir).select("docnum").distinct()
             live = live.join(tomb, "docnum", "left_anti")
         if pq.excluded:
-            buckets = self._buckets_for(pq.excluded)
-            scan = self.postings.filter(
-                F.col("bucket").isin(sorted(set(buckets.values())))
-                & F.col("term").isin(pq.excluded)
-            )
+            scan = self._pruned_scan(pq.excluded, self._buckets_for(pq.excluded))
             deleted = self.deleted if self.deleted is not None else np.empty(0, dtype=np.int64)
             ex = (
                 scan.select("field", "term", "docs", "tfs", "dls")
@@ -246,9 +314,10 @@ class BM25Index:
         # docnum tiebreak) is preserved verbatim; the 1.0-floor padding
         # sorts strictly below every match and is ordered by lowest
         # display id (the _search_every determinism rule) — no re-sort
-        return self.spark.createDataFrame(
-            [(d, s, i + 1) for i, (d, s) in enumerate(out)],
-            RESULT_SCHEMA,
+        return _local_frame(
+            self.spark,
+            [[d for d, _ in out], [s for _, s in out], list(range(1, len(out) + 1))],
+            RESULT_STRUCT,
         )
 
     def search(
@@ -261,10 +330,11 @@ class BM25Index:
         phrases) instead of treating it as a bag of words.
 
         ``prefer_local`` short-circuits the distributed kernel when the
-        index is small: the bucket-pruned posting rows are collected and
-        scored on the driver with the same kernels (2 small jobs instead
-        of a shuffle pipeline — interactive latency).  Defaults to
-        n_docs <= 200k; results identical by construction."""
+        index is small: pyarrow reads the bucket-pruned posting rows and
+        the same kernels score them on the driver.  That path runs no
+        Spark job, and its result is an Arrow ``LocalRelation`` whose
+        ``collect()`` runs none either (interactive latency).  Defaults
+        to n_docs <= 200k; results identical by construction."""
         if mode == "parse":
             pq = parse_query(query, self.analyzer, fields=set(self.stats.get("fields", [])))
         else:
@@ -300,25 +370,12 @@ class BM25Index:
             [*terms, *pq.excluded, *ex_phrase_terms, *pq.maybe_terms, *pq.filter_terms]
         ))
         buckets = self._buckets_for(all_terms)
-        scan = self.postings.filter(
-            F.col("bucket").isin(sorted(set(buckets.values()))) & F.col("term").isin(all_terms)
-        )
         if prefer_local is None:
             prefer_local = self.stats["n_docs"] <= 200_000
         if prefer_local:
-            return self._search_local(scan, all_terms, top_k, pq)
-        df_override = None
-        if len(self.stats.get("epochs", {"0": 0})) > 1:
-            # multi-epoch index: true df = sum of per-epoch dfs; one tiny
-            # metadata aggregation over the already-pruned scan
-            rows = (
-                scan.groupBy("field", "term", "epoch")
-                .agg(F.first("df").alias("df"))
-                .groupBy("field", "term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            df_override = {(r["field"], r["term"]): int(r["df"]) for r in rows}
+            return self._search_local(all_terms, buckets, top_k, pq)
+        scan = self._pruned_scan(all_terms, buckets)
+        df_override = self._summed_dfs_spark(scan) if self._multi_epoch() else None
         kernel = make_wand_kernel(
             terms, self.stats, top_k, mode, df_override, phrases,
             fielded=pq.fielded, excluded=pq.excluded,
@@ -340,12 +397,14 @@ class BM25Index:
         # dimension, so every query would pay a full scan of it at scale;
         # the docids parquet is docnum-contiguous-sorted, so the pushed
         # filter skips whole row groups.
-        ranked = self.spark.createDataFrame(
+        ranked = _local_frame(
+            self.spark,
             [
-                (int(r["docnum"]), float(r["score"]), i + 1)
-                for i, r in enumerate(top_rows)
+                [int(r["docnum"]) for r in top_rows],
+                [float(r["score"]) for r in top_rows],
+                list(range(1, len(top_rows) + 1)),
             ],
-            "docnum long, score double, rank int",
+            _RANKED_STRUCT,
         )
         pruned = self.docids.filter(F.col("docnum").isin([int(r["docnum"]) for r in top_rows]))
         return (
@@ -421,9 +480,7 @@ class BM25Index:
             return df.orderBy("query_id", "rank") if every_pqs else df
 
         if not parsed:
-            return _with_every(self.spark.createDataFrame(
-                [], BATCH_RESULT_SCHEMA
-            ))
+            return _with_every(_empty_frame(self.spark, BATCH_RESULT_STRUCT))
 
         def _q_terms(pq: ParsedQuery) -> list[str]:
             ex_ph = [t for ph in pq.excluded_phrases for t, _off in ph]
@@ -435,19 +492,17 @@ class BM25Index:
         per_q_terms = {qid: _q_terms(pq) for qid, pq in parsed.items()}
         all_terms = list(dict.fromkeys(t for ts in per_q_terms.values() for t in ts))
         buckets = self._buckets_for(all_terms)
-        scan = self.postings.filter(
-            F.col("bucket").isin(sorted(set(buckets.values()))) & F.col("term").isin(all_terms)
-        )
+        if prefer_local is None:
+            prefer_local = self.stats["n_docs"] <= 200_000
         df_override = None
-        if len(self.stats.get("epochs", {"0": 0})) > 1:
-            rows = (
-                scan.groupBy("field", "term", "epoch")
-                .agg(F.first("df").alias("df"))
-                .groupBy("field", "term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            df_override = {(r["field"], r["term"]): int(r["df"]) for r in rows}
+        if prefer_local:
+            pdf = self._pruned_rows(all_terms, buckets)
+            if self._multi_epoch():
+                df_override = self._summed_dfs(pdf)
+        else:
+            scan = self._pruned_scan(all_terms, buckets)
+            if self._multi_epoch():
+                df_override = self._summed_dfs_spark(scan)
         kernels = {
             qid: (
                 make_wand_kernel(
@@ -485,13 +540,7 @@ class BM25Index:
                 return pd.DataFrame({"query_id": [], "docnum": [], "score": []})
             return pd.concat(outs, ignore_index=True)[["query_id", "docnum", "score"]]
 
-        if prefer_local is None:
-            prefer_local = self.stats["n_docs"] <= 200_000
         if prefer_local:
-            try:
-                pdf = self._pruned_rows_arrow(all_terms, buckets)
-            except Exception:
-                pdf = scan.toPandas()
             import pandas as pd
 
             outs = [
@@ -502,30 +551,23 @@ class BM25Index:
                 {"query_id": [], "docnum": [], "score": []}
             )
             if len(res) == 0:
-                return _with_every(self.spark.createDataFrame(
-                    [], BATCH_RESULT_SCHEMA
-                ))
+                return _with_every(_empty_frame(self.spark, BATCH_RESULT_STRUCT))
             res = (
                 res.sort_values(["query_id", "score", "docnum"], ascending=[True, False, True])
                 .groupby("query_id")
                 .head(top_k)
             )
             res["rank"] = res.groupby("query_id").cumcount() + 1
-            docnums = sorted({int(d) for d in res["docnum"]})
-            try:
-                id_map = self._docids_arrow(docnums)
-            except Exception:
-                id_rows = (
-                    self.docids.filter(F.col("docnum").isin(docnums))
-                    .select("docnum", "doc_id").collect()
-                )
-                id_map = {r["docnum"]: r["doc_id"] for r in id_rows}
-            out = [
-                (qid, id_map[int(d)], float(s), int(rk))
-                for qid, d, s, rk in zip(res["query_id"], res["docnum"], res["score"], res["rank"])
-            ]
-            return _with_every(self.spark.createDataFrame(
-                out, BATCH_RESULT_SCHEMA
+            id_map = self._doc_ids(sorted({int(d) for d in res["docnum"]}))
+            return _with_every(_local_frame(
+                self.spark,
+                [
+                    list(res["query_id"]),
+                    [id_map[int(d)] for d in res["docnum"]],
+                    [float(x) for x in res["score"]],
+                    [int(x) for x in res["rank"]],
+                ],
+                BATCH_RESULT_STRUCT,
             ))
 
         from pyspark.sql import Window
@@ -540,12 +582,16 @@ class BM25Index:
             .collect()
         )
         if not top_rows:
-            return _with_every(self.spark.createDataFrame(
-                [], BATCH_RESULT_SCHEMA
-            ))
-        ranked = self.spark.createDataFrame(
-            [(r["query_id"], int(r["docnum"]), float(r["score"]), int(r["rank"])) for r in top_rows],
-            "query_id string, docnum long, score double, rank int",
+            return _with_every(_empty_frame(self.spark, BATCH_RESULT_STRUCT))
+        ranked = _local_frame(
+            self.spark,
+            [
+                [r["query_id"] for r in top_rows],
+                [int(r["docnum"]) for r in top_rows],
+                [float(r["score"]) for r in top_rows],
+                [int(r["rank"]) for r in top_rows],
+            ],
+            _BATCH_RANKED_STRUCT,
         )
         docnums = sorted({int(r["docnum"]) for r in top_rows})
         pruned = self.docids.filter(F.col("docnum").isin(docnums))
@@ -721,6 +767,15 @@ class BM25Index:
         )
         return self._arrow_postings.to_table(filter=flt).to_pandas()
 
+    def _pruned_rows(self, terms: list[str], buckets: dict[str, int]):
+        """The pruned posting rows as pandas: pyarrow when it can read the
+        index, else the same pruning through the Spark scan (e.g. a
+        filesystem pyarrow cannot open)."""
+        try:
+            return self._pruned_rows_arrow(terms, buckets)
+        except Exception:
+            return self._pruned_scan(terms, buckets).toPandas()
+
     def _docids_arrow(self, docnums: list[int]) -> dict[int, str]:
         import pyarrow.dataset as ds
 
@@ -735,28 +790,31 @@ class BM25Index:
         )
         return dict(zip(t.column("docnum").to_pylist(), t.column("doc_id").to_pylist()))
 
+    def _doc_ids(self, docnums: list[int]) -> dict[int, str]:
+        """docnum -> display id for the winners, pyarrow first (no job)."""
+        try:
+            return self._docids_arrow(docnums)
+        except Exception:
+            rows = (
+                self.docids.filter(F.col("docnum").isin(docnums))
+                .select("docnum", "doc_id").collect()
+            )
+            return {r["docnum"]: r["doc_id"] for r in rows}
+
     def _search_local(
         self,
-        scan: DataFrame,
         all_terms: list[str],
+        buckets: dict[str, int],
         top_k: int,
         pq: ParsedQuery,
     ) -> DataFrame:
-        """Driver-side scoring over the pruned scan (same kernels).
+        """Driver-side scoring of the pruned posting rows (same kernels).
         ``all_terms`` = scoring terms + excluded (NOT) terms — the fetch
         set; the kernel separates their roles via ``pq``."""
-        try:
-            buckets = self._buckets_for(all_terms)
-            pdf = self._pruned_rows_arrow(all_terms, buckets)
-        except Exception:
-            pdf = scan.toPandas()  # e.g. non-local filesystem without pyarrow support
+        pdf = self._pruned_rows(all_terms, buckets)
         if len(pdf) == 0:
             return self.empty_result()
-        df_override = None
-        if len(self.stats.get("epochs", {"0": 0})) > 1:
-            per_epoch = pdf.groupby(["field", "term", "epoch"])["df"].first().reset_index()
-            agg = per_epoch.groupby(["field", "term"])["df"].sum()
-            df_override = {(f, t): int(v) for (f, t), v in agg.items()}
+        df_override = self._summed_dfs(pdf) if self._multi_epoch() else None
         kernel = make_wand_kernel(
             pq.terms, self.stats, top_k, pq.mode, df_override, pq.phrases,
             fielded=pq.fielded, excluded=pq.excluded,
@@ -774,17 +832,16 @@ class BM25Index:
         if res is None or len(res) == 0:
             return self.empty_result()
         res = res.sort_values(["score", "docnum"], ascending=[False, True]).head(top_k)
-        docnums = [int(d) for d in res["docnum"]]
-        try:
-            id_map = self._docids_arrow(docnums)
-        except Exception:
-            id_rows = self.docids.filter(F.col("docnum").isin(docnums)).select("docnum", "doc_id").collect()
-            id_map = {r["docnum"]: r["doc_id"] for r in id_rows}
-        out = [
-            (id_map[int(d)], float(s), i + 1)
-            for i, (d, s) in enumerate(zip(res["docnum"], res["score"]))
-        ]
-        return self.spark.createDataFrame(out, RESULT_SCHEMA)
+        id_map = self._doc_ids([int(d) for d in res["docnum"]])
+        return _local_frame(
+            self.spark,
+            [
+                [id_map[int(d)] for d in res["docnum"]],
+                [float(x) for x in res["score"]],
+                list(range(1, len(res) + 1)),
+            ],
+            RESULT_STRUCT,
+        )
 
 
 def search_bm25(spark: SparkSession, index_dir: str, query: str, top_k: int = 10, mode: str = "and") -> DataFrame:

@@ -352,6 +352,22 @@ def test_cc_nonconvergence_raises(spark):
         connected_components(df, max_iter=2).collect()
 
 
+@pytest.mark.parametrize("local_pairs_max", ["100000", "0"])
+def test_cc_unknown_algorithm_raises_at_every_size(spark, local_pairs_max):
+    """``algorithm`` is validated before the driver-local union-find fast
+    path, so a typo raises whichever path the pair count selects."""
+    from beetle_search_engine_spark.operators.dedup import connected_components
+
+    df = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    prev = spark.conf.get("spark.beetle.cc.localPairsMax", "100000")
+    spark.conf.set("spark.beetle.cc.localPairsMax", local_pairs_max)
+    try:
+        with pytest.raises(ValueError, match="unknown algorithm"):
+            connected_components(df, algorithm="typo")
+    finally:
+        spark.conf.set("spark.beetle.cc.localPairsMax", prev)
+
+
 def test_cc_star_matches_label_propagation(spark):
     """Kiveris large-star/small-star returns identical components to
     min-label propagation on cliques, chains and reversed edges."""

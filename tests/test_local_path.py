@@ -1,0 +1,167 @@
+"""The driver-local query path answers without a Spark job: pyarrow reads
+the pruned postings, the kernels score on the driver, and the result is
+an Arrow-backed LocalRelation whose collect() schedules nothing."""
+
+from __future__ import annotations
+
+import itertools
+
+import pytest
+
+from beetle_search_engine_spark.config import EngineConfig, IndexConfig
+from beetle_search_engine_spark.operators.build import build_index
+from beetle_search_engine_spark.plans.query import (
+    BATCH_RESULT_SCHEMA,
+    RESULT_SCHEMA,
+    BM25Index,
+)
+
+CFG = EngineConfig(
+    analyzer="sql",
+    index=IndexConfig(n_buckets=4, bucket_groups=1, chunk_docs=8, encode_partitions=4),
+)
+
+_groups = itertools.count()
+
+
+@pytest.fixture(scope="module")
+def idx(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("local_path") / "idx")
+    rows = []
+    for i in range(20):
+        toks = ["alpha", f"filler{i}"]
+        if i % 2 == 0:
+            toks.append("beta gamma")
+        rows.append((f"d{i}", " ".join(toks * (1 + i % 3))))
+    corpus = spark.createDataFrame(rows, "doc_id string, content string")
+    build_index(spark, corpus, d, fields={"body": "content"}, cfg=CFG)
+    return BM25Index(spark, d)
+
+
+def _collect_counting_jobs(spark, df):
+    """(rows, ids of the Spark jobs that ``df.collect()`` submitted)."""
+    sc = spark.sparkContext
+    group = f"local-path-test-{next(_groups)}"
+    sc.setJobGroup(group, "collect under test")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _optimized_root(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+
+def _ddl_schema(spark, ddl: str):
+    return spark.createDataFrame([], ddl).schema
+
+
+def _assert_local(spark, df, ddl: str) -> list:
+    assert df.schema == _ddl_schema(spark, ddl)
+    assert _optimized_root(df) == "LocalRelation"
+    rows, jobs = _collect_counting_jobs(spark, df)
+    assert jobs == [], f"collect() of a local result ran Spark jobs {jobs}"
+    return rows
+
+
+def _triples(rows):
+    return [(r.doc_id, r.score, r.rank) for r in rows]
+
+
+def test_job_counting_sees_distributed_jobs(spark, idx):
+    """Positive control: the same counter does see the distributed path's
+    docid join, so the zero-job assertions below are not vacuous."""
+    df = idx.search("alpha", 3, "or", prefer_local=False)
+    rows, jobs = _collect_counting_jobs(spark, df)
+    assert rows and jobs
+
+
+@pytest.mark.parametrize(
+    "query,mode",
+    [("alpha beta", "and"), ("beta gamma filler3", "or"), ("alpha NOT gamma", "parse")],
+)
+def test_local_search_is_job_free_local_relation(spark, idx, query, mode):
+    rows = _assert_local(spark, idx.search(query, 5, mode, prefer_local=True), RESULT_SCHEMA)
+    assert rows
+    dist = idx.search(query, 5, mode, prefer_local=False).collect()
+    assert _triples(rows) == _triples(dist)
+    assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
+
+
+@pytest.mark.parametrize("query,mode", [("zzznope alpha", "and"), ("the of", "parse")])
+def test_empty_local_result_keeps_schema(spark, idx, query, mode):
+    rows = _assert_local(spark, idx.search(query, 5, mode, prefer_local=True), RESULT_SCHEMA)
+    assert rows == []
+
+
+def test_every_or_is_local_relation(spark, idx):
+    rows = _assert_local(spark, idx.search("* OR beta", 12, "parse"), RESULT_SCHEMA)
+    assert len(rows) == 12
+    # the ten beta docs outrank Every's 1.0 floor, the pads follow
+    assert all(r.score > 1.0 for r in rows[:10]) and rows[10].score == 1.0
+
+
+def test_search_many_local_is_job_free_local_relation(spark, idx):
+    queries = {"a": "alpha beta", "b": "gamma OR filler4", "c": "zzznope"}
+    df = idx.search_many(queries, 4, "parse", prefer_local=True)
+    rows = _assert_local(spark, df, BATCH_RESULT_SCHEMA)
+    assert {r.query_id for r in rows} == {"a", "b"}
+    dist = idx.search_many(queries, 4, "parse", prefer_local=False).collect()
+    key = lambda r: (r.query_id, r.doc_id, r.score, r.rank)  # noqa: E731
+    assert [key(r) for r in rows] == [key(r) for r in dist]
+
+
+def test_search_many_empty_is_local_relation(spark, idx):
+    for prefer_local in (True, False):
+        df = idx.search_many({"x": "the of"}, 4, "parse", prefer_local=prefer_local)
+        assert _assert_local(spark, df, BATCH_RESULT_SCHEMA) == []
+    df = idx.search_many({"x": "zzznope"}, 4, "parse", prefer_local=True)
+    assert _assert_local(spark, df, BATCH_RESULT_SCHEMA) == []
+
+
+def test_local_and_distributed_frames_union(spark, idx):
+    local = idx.search("alpha", 3, "or", prefer_local=True)
+    dist = idx.search("beta", 3, "or", prefer_local=False)
+    empty = idx.search("zzznope", 3, "and", prefer_local=True)
+    both = local.unionByName(dist).unionByName(empty)
+    assert both.schema == _ddl_schema(spark, RESULT_SCHEMA)
+    assert _triples(both.collect()) == _triples(local.collect()) + _triples(dist.collect())
+    batch = idx.search_many({"q": "alpha"}, 3, "parse", prefer_local=True).unionByName(
+        idx.search_many({"r": "beta"}, 3, "parse", prefer_local=False)
+    )
+    assert {r.query_id for r in batch.collect()} == {"q", "r"}
+
+
+def test_local_search_builds_no_spark_scan(spark, idx, monkeypatch):
+    """The Spark posting scan is only built by the pyarrow fallback."""
+    def no_scan(*_a, **_k):
+        raise AssertionError("Spark scan built on the pyarrow path")
+
+    want = _triples(idx.search("alpha beta", 5, "and", prefer_local=True).collect())
+    monkeypatch.setattr(idx, "_pruned_scan", no_scan)
+    assert _triples(idx.search("alpha beta", 5, "and", prefer_local=True).collect()) == want
+
+
+def test_local_search_spark_fallback_matches(spark, idx, monkeypatch):
+    """Without pyarrow access the local path reads the same pruned rows
+    through the Spark scan and answers identically."""
+    queries = [("alpha beta", "and"), ("beta OR filler5", "parse")]
+    want = [_triples(idx.search(q, 5, m, prefer_local=True).collect()) for q, m in queries]
+    batch_want = idx.search_many({f"q{i}": q for i, (q, _) in enumerate(queries)}, 5, "parse",
+                                 prefer_local=True).collect()
+
+    def no_arrow(*_a, **_k):
+        raise OSError("pyarrow cannot open this filesystem")
+
+    monkeypatch.setattr(idx, "_pruned_rows_arrow", no_arrow)
+    monkeypatch.setattr(idx, "_docids_arrow", no_arrow)
+    got = [_triples(idx.search(q, 5, m, prefer_local=True).collect()) for q, m in queries]
+    assert got == want
+    batch_got = idx.search_many({f"q{i}": q for i, (q, _) in enumerate(queries)}, 5, "parse",
+                                prefer_local=True).collect()
+    assert batch_got == batch_want

@@ -111,6 +111,28 @@ def test_jaccard_zero_overlap_candidate_scores_zero(spark):
     assert got == {(1, 2): 0.0, (1, 3): 0.0}
 
 
+def test_jaccard_candidate_missing_from_df_scores_zero_without_ansi(spark):
+    """A candidate id absent from ``df`` has a NULL token set, and with
+    ANSI mode off size(NULL) is -1 — the intersection size is clamped
+    like the set sizes, so the pair scores 0.0, never a negative."""
+    from beetle_search_engine_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "alpha beta")], "doc_id long, text string"
+    )
+    cand = spark.createDataFrame([(1, 2), (1, 99)], "id_a long, id_b long")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        got = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in ngram_jaccard_pairs(docs, candidates=cand, min_jaccard=0.0).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == {(1, 2): round(2 / 3, 6), (1, 99): 0.0}
+
+
 def test_lsh_band_size_must_divide_num_perm(spark):
     from beetle_search_engine_spark.operators.dedup import lsh_candidate_pairs
 
