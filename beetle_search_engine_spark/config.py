@@ -44,7 +44,9 @@ class IndexConfig:
     hot_df_threshold: int | None = None
     hot_salts: int = 16
     encode_partitions: int | None = None  # None -> spark default parallelism
-    bucket_groups: int = 8         # resume granularity (manifest per group)
+    # resume granularity: one postings dir + manifest per group
+    # (bucket % groups); all pending groups share one encode pass
+    bucket_groups: int = 8
     # store per-posting position lists (delta+varint) — enables quoted
     # phrase queries; costs ~1 extra varint per token occurrence
     store_positions: bool = False

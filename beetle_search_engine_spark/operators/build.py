@@ -9,9 +9,12 @@ Pipeline (all DataFrame, one Python kernel):
   tokens ── groupBy(field).sum(tf) ──────> avgdl per field      (map-side combine)
   tokens ── groupBy(field,term).count ──> df; df>threshold ──> hot set (broadcast)
   tokens ── [late-stem: ⋈ broadcast stem dim] ── +bucket +salt,
+         [filter bucket % groups ∈ pending groups],
          repartition(xxhash64(bucket,salt))
          ── sortWithinPartitions(fid,term,docnum)
-         ── mapInArrow(encode) ──> posting rows ──> parquet partitionBy(bucket)
+         ── mapInArrow(encode) ──> posting rows +group
+         ──> ONE parquet write partitionBy(group,bucket) into _stage/encode
+         ──> each group=g dir moved into postings/, then its manifest
 
 Round 7: jvm stemming builds stage PRE-STEM tokens (one regex pass) and
 attach the vocabulary-sized stem dimension from the stage read; the
@@ -33,11 +36,15 @@ owns a whole hot posting list; salted runs stay chunk-aligned and
 merge by concatenation at query time.  Their exact df is injected from a
 small broadcast map (collected from the df aggregation).
 
-Resume: the bucket space is split into ``bucket_groups`` groups; each
-group is one write + one manifest JSON (input fingerprint, counts,
-timings, skew ratio).  A rerun with the same corpus fingerprint skips
-completed groups (reference analog: skip-if-exists at
-src/index/build_splade.py:35-37 and DVC dep hashing in dvc.yaml).
+Resume: the bucket space is split into ``bucket_groups`` groups
+(bucket % groups); each group is one ``postings/group=g`` dir + one
+manifest JSON (input fingerprint, counts, timings, skew ratio).  Groups
+are the resume unit, not one job each: all groups pending in a build are
+encoded and written by a single pass, and a manifest is written only
+after its group's data is in place.  A rerun with the same corpus
+fingerprint skips completed groups and encodes the rest, again in one
+pass (reference analog: skip-if-exists at src/index/build_splade.py:35-37
+and DVC dep hashing in dvc.yaml).
 """
 
 from __future__ import annotations
@@ -880,21 +887,39 @@ def _encode_groups(
 ) -> list[dict]:
     """The salted, bucketed, group-resumable encode shared by full builds
     and optimize_index: token rows -> posting parquet + group manifests.
-    Bucket-major shuffle key: a reduce task owns whole buckets (salted
-    hot terms excepted), so partitionBy(bucket) writes ~1 file per bucket
+
+    Groups (bucket % ``bucket_groups``) are the resume and manifest unit,
+    not one job each.  A group whose manifest matches this fingerprint
+    and layout is skipped; every PENDING group is encoded in ONE pass —
+    one shuffle, sort, mapInArrow kernel and write, partitioned by
+    (group, bucket) into ``{root}/_stage/encode``.  Each pending group's
+    directory is then moved into ``postings/group=g`` (a group with no
+    postings gets an empty dir) and only after that its manifest is
+    written.  Bucket-major shuffle key: a reduce task owns whole buckets
+    (salted hot terms excepted), so the write produces ~1 file per bucket
     instead of tasks x buckets small files.
+
+    The pass runs ``encode_partitions`` (default: parallelism) tasks
+    however many groups are pending: every Python encode task carries a
+    fixed cost (~80 ms on 4 vCPU), so scaling the task count by the group
+    count hands the saving of the single pass back.
+
+    Trade-off: a crash INSIDE the encode job leaves no manifest for any
+    pending group, so the rerun re-encodes all of them; a crash while
+    groups are being moved leaves manifests only for the groups already
+    in place, and the rerun's stale-group cleanup removes the rest.
+    Groups stay the unit resume skips.  Each manifest's ``wall_s`` and
+    ``postings_per_sec`` describe the shared pass (encode + write of all
+    groups pending in it), not the group alone.
 
     ``out_root`` redirects postings + manifests to a staging root (the
     optimize_index path: encode beside the live index, swap after
     success); default writes into ``index_dir`` itself (full builds)."""
+    import shutil as _sh
+
     root = out_root or index_dir
     groups = cfg.index.bucket_groups
-    p_enc = cfg.index.encode_partitions or spark.sparkContext.defaultParallelism
-    field_names = sorted(stats["fields"])
-    kernel = _make_encode_kernel(cfg, stats, hot_df, field_names=field_names)
-    base, part_key, enc_cols = _encode_input(spark, tokens, cfg, hot_df, field_names)
-
-    group_metrics = []
+    metrics: dict[int, dict] = {}
     for g in range(groups):
         man_path = f"{root}/_manifest/group_{g}.json"
         if resume and os.path.exists(man_path):
@@ -905,31 +930,49 @@ def _encode_groups(
                 and man.get("layout_version") == INDEX_LAYOUT_VERSION
                 and man.get("layout_hash") == cfg_hash
             ):
-                man["skipped"] = True
-                group_metrics.append(man)
-                continue
-        tg = time.time()
-        sel = base.filter(F.pmod(F.col("bucket"), F.lit(groups)) == g)
-        enc = (
-            sel.repartition(p_enc, part_key)
-            .sortWithinPartitions("fid", "term", "docnum")
-            .select(*enc_cols)
-            .mapInArrow(kernel, schema=POSTINGS_SCHEMA)
-        )
+                metrics[g] = {**man, "skipped": True}
+    pending = [g for g in range(groups) if g not in metrics]
+    if not pending:
+        return [metrics[g] for g in range(groups)]
+
+    tg = time.time()
+    p_enc = cfg.index.encode_partitions or spark.sparkContext.defaultParallelism
+    field_names = sorted(stats["fields"])
+    kernel = _make_encode_kernel(cfg, stats, hot_df, field_names=field_names)
+    base, part_key, enc_cols = _encode_input(spark, tokens, cfg, hot_df, field_names)
+    group_of = F.pmod(F.col("bucket"), F.lit(groups))
+    if len(pending) < groups:
+        base = base.filter(group_of.isin(pending))
+    enc = (
+        base.repartition(p_enc, part_key)
+        .sortWithinPartitions("fid", "term", "docnum")
+        .select(*enc_cols)
+        .mapInArrow(kernel, schema=POSTINGS_SCHEMA)
+        .withColumn("group", group_of)
+    )
+    tmp = f"{root}/_stage/encode"
+    # token rows are narrow (~40 B); 64k-row Arrow batches cut the
+    # per-batch Python/carry overhead of the encode kernel ~6x vs the
+    # session default 10k (which is sized for wide document rows).
+    # Scoped to this action only — doc-level UDF batches stay small.
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(batch_key)
+    spark.conf.set(batch_key, "65536")
+    try:
+        enc.write.mode("overwrite").partitionBy("group", "bucket").parquet(tmp)
+    finally:
+        spark.conf.set(batch_key, old_batch)
+    wall = time.time() - tg
+    _mark(f'encode {len(pending)} groups write')
+
+    os.makedirs(f"{root}/postings", exist_ok=True)
+    for g in pending:
         out_path = f"{root}/postings/group={g}"
-        # token rows are narrow (~40 B); 64k-row Arrow batches cut the
-        # per-batch Python/carry overhead of the encode kernel ~6x vs the
-        # session default 10k (which is sized for wide document rows).
-        # Scoped to this action only — doc-level UDF batches stay small.
-        batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        old_batch = spark.conf.get(batch_key)
-        spark.conf.set(batch_key, "65536")
-        try:
-            enc.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
-        finally:
-            spark.conf.set(batch_key, old_batch)
-        _mark(f'encode group {g} write')
-        wall = time.time() - tg
+        _sh.rmtree(out_path, ignore_errors=True)
+        if os.path.isdir(f"{tmp}/group={g}"):
+            os.replace(f"{tmp}/group={g}", out_path)
+        else:
+            os.makedirs(out_path)  # no postings hash into this group
         agg = _group_metrics_agg(spark, out_path)
         man = {
             "group": g,
@@ -944,11 +987,12 @@ def _encode_groups(
             "skew_ratio": round(float(agg["max_bucket"] or 0) / max(float(agg["avg_bucket"] or 1), 1e-9), 3),
             "skipped": False,
         }
-        _mark(f'group {g} metrics agg')
-        with open(man_path, "w") as f:
+        with open(f"{root}/_manifest/group_{g}.json", "w") as f:
             json.dump(man, f, indent=1)
-        group_metrics.append(man)
-    return group_metrics
+        metrics[g] = man
+    _sh.rmtree(tmp, ignore_errors=True)
+    _mark('group moves + metrics agg')
+    return [metrics[g] for g in range(groups)]
 
 
 def _make_decode_kernel(deleted: np.ndarray, positions: bool):

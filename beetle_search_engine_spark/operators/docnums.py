@@ -120,6 +120,10 @@ def stage_corpus(
             .sortWithinPartitions(id_col)
             .withColumn("_pid", F.spark_partition_id())
             .write.mode("overwrite")
+            # one file per partition id whatever the session's
+            # spark.sql.files.maxRecordsPerFile says: numbered()'s
+            # row_index fast path needs exactly one file per _pid
+            .option("maxRecordsPerFile", 0)
             .parquet(stage_dir)
         )
         mx, tot, cnt = _file_stats(spark, stage_dir)
@@ -273,14 +277,24 @@ def numbered(h: DataFrame, offsets: dict[int, int], columns: list[str] | None = 
     the Python boundary).  Verified identical in
     tests/test_source_formats.py::test_numbered_row_index_parity.
 
-    Fallback (the original mapInPandas kernel) covers inputs where the
-    metadata column cannot be resolved (non-file-scan plans).
+    The one-file-per-``_pid`` layout is checked, not assumed: the fast
+    path is taken only when the scan's file count equals
+    ``len(offsets)`` (a pid split over several files would restart
+    row_index at 0 in each and hand out duplicate docnums).
+
+    Fallback (the original mapInPandas kernel) covers inputs where that
+    check fails or the metadata column cannot be resolved (non-file-scan
+    plans); it numbers a pid's rows in read order, so it too is exact
+    only while each pid is read by one task — stage_corpus therefore
+    writes one file per pid whatever the session settings.
 
     Column pruning note unchanged: prune per consumer — the docids
     writer asks for (doc_id) only and the tokenizer for the text columns
     only."""
     spark = h.sparkSession
     try:
+        if len(h.inputFiles()) != len(offsets):
+            raise ValueError("staged files are not one per _pid")
         ridx = F.col("_metadata.row_index")
         dense = [0] * (max(offsets) + 1) if offsets else [0]
         for pid, off in offsets.items():

@@ -51,14 +51,6 @@ def sql_tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     )
 
 
-def sql_tokens_pos(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, ord, term) with 1-based token position (for shingling)."""
-    return df.select(
-        F.col(id_col),
-        F.posexplode(token_array(F.col(text_col))).alias("pos", "term"),
-    ).select(F.col(id_col), (F.col("pos") + 1).alias("ord"), "term")
-
-
 def term_frequencies(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
     """(doc_id, term, tf) — SURVEY A1 as a Catalyst partial+final hash agg."""
     return (

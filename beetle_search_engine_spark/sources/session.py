@@ -8,6 +8,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Cores for a session: ``$SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on (``sched_getaffinity``; ``os.cpu_count()`` where
+    the platform has no affinity call)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "beetle-spark",
     cores: int | None = None,
@@ -22,7 +35,7 @@ def get_spark(
     actually scale; same as any real cluster).  ``cores`` then becomes
     spark.cores.max."""
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     import sys

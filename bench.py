@@ -24,7 +24,8 @@ times, recording every discarded attempt's raw runs in the JSON.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR       sf dir for the query suite (default sf0.1)
-  SPARK_GRAFT_CPUS         cores for the query suite (default 32)
+  SPARK_GRAFT_CPUS         cores for the query suite (default: the CPUs
+                           this process may run on)
   BEETLE_BENCH_DOCS        synthetic corpus size for build/scaling (default 150000)
   BEETLE_BENCH_SCALING     "0" to skip the scaling pairs (default on)
   BEETLE_BENCH_REPEATS     fixed K runs per core count (default 5; 3->4
@@ -54,8 +55,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from beetle_search_engine_spark.sources.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 BENCH_DOCS = int(os.environ.get("BEETLE_BENCH_DOCS", "150000"))  # big
 # enough that per-stage fixed costs are <10% of the 2-core build (noise
 # on this shared VM otherwise swings the headline ratio by ~0.05)

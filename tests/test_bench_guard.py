@@ -73,3 +73,16 @@ def test_scaling_block_survives_a_dark_core_count(monkeypatch):
     assert block["efficiency"] is None
     assert block["scaling_4x"]["efficiency"] == 0.75
     assert bench._weather_flags(block, 0.0) == []
+
+
+def test_default_cores_follows_cpu_affinity(monkeypatch):
+    """Without SPARK_GRAFT_CPUS a session gets the CPUs this process may
+    run on, not a fixed count that oversubscribes a small box."""
+    import os
+
+    from beetle_search_engine_spark.sources.session import default_cores
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3

@@ -95,3 +95,38 @@ def test_numbered_row_index_parity(spark, tmp_path):
     # and the fast path really is plan-only (no BatchEvalPython/MapInPandas)
     plan = D.numbered(h2, offsets2, ["doc_id"])._jdf.queryExecution().executedPlan().toString()
     assert "InPandas" not in plan and "EvalPython" not in plan
+
+
+def test_stage_corpus_numbers_densely_under_max_records_per_file(spark, tmp_path):
+    """A small session ``spark.sql.files.maxRecordsPerFile`` must not
+    split a staged partition over several files: the row_index fast path
+    would restart at 0 in each and hand out duplicate docnums."""
+    from beetle_search_engine_spark.operators import docnums as D
+
+    key = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(key, "7")
+    try:
+        h, offsets, _fp = D.stage_corpus(
+            generate_corpus(spark, 200, seed=3), str(tmp_path / "stage"), partitions=4
+        )
+        dn = sorted(r["docnum"] for r in D.numbered(h, offsets, ["doc_id"]).collect())
+    finally:
+        spark.conf.unset(key)
+    assert len(h.inputFiles()) == len(offsets)
+    assert dn == list(range(200))
+
+
+def test_numbered_checks_one_file_per_pid(spark, tmp_path):
+    """A _pid spread over several files is not taken down the row_index
+    fast path; numbered() falls back to the Python numbering kernel."""
+    from beetle_search_engine_spark.operators import docnums as D
+
+    path = str(tmp_path / "multi")
+    (
+        spark.range(40).selectExpr("cast(id as string) as doc_id", "0 as _pid")
+        .coalesce(1).write.option("maxRecordsPerFile", 10).parquet(path)
+    )
+    h = spark.read.parquet(path)
+    assert len(h.inputFiles()) == 4
+    plan = D.numbered(h, {0: 0}, ["doc_id"])._jdf.queryExecution().executedPlan().toString()
+    assert "InPandas" in plan

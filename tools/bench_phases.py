@@ -182,7 +182,7 @@ def main():
     timed("encshuf", lambda: noop(shuffled))
 
     kernel = B._make_encode_kernel(cfg, stats, hot_df, field_names=field_names)
-    enc = shuffled.mapInPandas(kernel, schema=B.POSTINGS_SCHEMA)
+    enc = shuffled.mapInArrow(kernel, schema=B.POSTINGS_SCHEMA)
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
     timed("enckern", lambda: noop(enc))

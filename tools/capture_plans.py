@@ -13,7 +13,7 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod  # noqa: E402
-from beetle_search_engine_spark.sources.session import get_spark  # noqa: E402
+from beetle_search_engine_spark.sources.session import default_cores, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -21,7 +21,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main():
     suffix = sys.argv[1]
     names = sys.argv[2:]
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     spark = get_spark("capture-plans", cores=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
