@@ -6,8 +6,7 @@ Pipeline (all DataFrame, one Python kernel):
   staged ── numbered(doc_id [+meta]) ──> docids dimension      [pruned pass]
   staged ── numbered(text cols) ── tokenize (Arrow UDF)
          ──> tokens (docnum, field, term, tf, dl)              [staged]
-  tokens ── groupBy(field).sum(tf) ──────> avgdl per field      (map-side combine)
-  tokens ── groupBy(field,term).count ──> df; df>threshold ──> hot set (broadcast)
+  tokens ── groupBy(field,term) df+tfsum ──> avgdl, vocab, hot set (broadcast)
   tokens ── [late-stem: ⋈ broadcast stem dim] ── +bucket +salt,
          [filter bucket % groups ∈ pending groups],
          repartition(xxhash64(bucket,salt))
@@ -15,6 +14,13 @@ Pipeline (all DataFrame, one Python kernel):
          ── mapInArrow(encode) ──> posting rows +group
          ──> ONE parquet write partitionBy(group,bucket) into _stage/encode
          ──> each group=g dir moved into postings/, then its manifest
+
+Shared write path: a full build, ``optimize_index`` (whose decoded
+postings ARE a token stage) and ``streaming.incremental.append_epoch``
+write postings through one copy of each step — ``_term_stats`` (avgdl,
+dl_totals, vocab, hot set), ``_encode_write`` (the encode plan under a
+64k Arrow batch), ``_manifest_ok`` (group resume check) and
+``_stored_config`` (layout + scoring read back from stats.json).
 
 Round 7: jvm stemming builds stage PRE-STEM tokens (one regex pass) and
 attach the vocabulary-sized stem dimension from the stage read; the
@@ -51,7 +57,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -376,6 +385,124 @@ def _encode_input(spark: SparkSession, tokens: DataFrame, cfg: EngineConfig, hot
     return base, part_key, enc_cols
 
 
+def _term_frame(tokens: DataFrame) -> DataFrame:
+    """Per-(field, term) df and tf sum: the one aggregation every index
+    statistic derives from."""
+    return tokens.groupBy("field", "term").agg(
+        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("tfsum")
+    )
+
+
+def _term_stats(
+    dfs: DataFrame, fields, n_docs: int, thr: int, exact_df: dict | None = None
+) -> tuple[dict, dict, int, dict]:
+    """(avgdl, dl_totals, vocab_size, hot_df) from a (field, term, df,
+    tfsum) frame over ``n_docs`` documents, in one collect.  ``hot_df``
+    holds the terms with df > ``thr``, after ``exact_df`` (late
+    stemming's exact recount) overrides the frame's df for its keys."""
+    # one pass gives avgdl, vocab size (per-field term counts) AND the
+    # hot candidates, so the frame is aggregated once, never cached
+    rows = dfs.groupBy("field").agg(
+        F.sum("tfsum").alias("s"),
+        F.count(F.lit(1)).alias("v"),
+        F.collect_list(F.when(F.col("df") > thr, F.struct("term", "df"))).alias("hot"),
+    ).collect()
+    avgdl = {r["field"]: float(r["s"]) / n_docs for r in rows}
+    # exact per-field token totals ride along so epoch appends can
+    # merge avgdl without mistaking the 1.0 empty-field placeholder
+    # below for real mass
+    dl_totals = {r["field"]: float(r["s"]) for r in rows}
+    for fname in fields:
+        avgdl.setdefault(fname, 1.0)
+        dl_totals.setdefault(fname, 0.0)
+    vocab_size = sum(int(r["v"]) for r in rows)
+    exact_df = exact_df or {}
+    hot_df = {}
+    for r in rows:
+        for h in r["hot"]:
+            key = (r["field"], h["term"])
+            d = exact_df.get(key, int(h["df"]))
+            if d > thr:
+                hot_df[key] = d
+    return avgdl, dl_totals, vocab_size, hot_df
+
+
+def _encode_write(
+    spark: SparkSession, tokens: DataFrame, cfg: EngineConfig, stats: dict, hot_df: dict,
+    path: str, epoch: int = 0, pending: list[int] | None = None,
+):
+    """The encode plan: token rows -> salted bucket shuffle -> sort ->
+    mapInArrow kernel -> parquet at ``path``, partitioned by bucket (an
+    epoch group) or, given the ``pending`` bucket groups, by (group,
+    bucket) over those groups' buckets only."""
+    field_names = sorted(stats["fields"])
+    kernel = _make_encode_kernel(cfg, stats, hot_df, epoch=epoch, field_names=field_names)
+    base, part_key, enc_cols = _encode_input(spark, tokens, cfg, hot_df, field_names)
+    group_of = F.pmod(F.col("bucket"), F.lit(cfg.index.bucket_groups))
+    if pending is not None and len(pending) < cfg.index.bucket_groups:
+        base = base.filter(group_of.isin(pending))
+    p_enc = cfg.index.encode_partitions or spark.sparkContext.defaultParallelism
+    enc = (
+        base.repartition(p_enc, part_key)
+        .sortWithinPartitions("fid", "term", "docnum")
+        .select(*enc_cols)
+        .mapInArrow(kernel, schema=POSTINGS_SCHEMA)
+    )
+    partition_by = ["bucket"]
+    if pending is not None:
+        enc, partition_by = enc.withColumn("group", group_of), ["group", "bucket"]
+    # token rows are narrow (~40 B); 64k-row Arrow batches cut the
+    # per-batch Python/carry overhead of the encode kernel ~6x vs the
+    # session default 10k (which is sized for wide document rows).
+    # Scoped to this action only — doc-level UDF batches stay small.
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(batch_key)
+    spark.conf.set(batch_key, "65536")
+    try:
+        enc.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+    finally:
+        spark.conf.set(batch_key, old_batch)
+
+
+def _manifest_ok(root: str, g: int, fp, cfg_hash: str) -> dict | None:
+    """Group ``g``'s manifest under ``root`` if it matches this corpus
+    fingerprint, layout version and config hash, else None."""
+    path = f"{root}/_manifest/group_{g}.json"
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        man = json.load(f)
+    if (
+        man.get("fingerprint") == fp
+        and man.get("layout_version") == INDEX_LAYOUT_VERSION
+        and man.get("layout_hash") == cfg_hash
+    ):
+        return man
+    return None
+
+
+# IndexConfig fields that fix an index's physical layout (stats.json
+# stores each; appends and merges must encode with the stored values)
+LAYOUT_FIELDS = ("n_buckets", "chunk_docs", "block_size", "blocks_per_row", "store_positions")
+
+
+def _stored_layout(stats: dict, index: IndexConfig) -> dict:
+    """The stored LAYOUT_FIELDS values (``index``'s for any missing)."""
+    return {k: stats.get(k, getattr(index, k)) for k in LAYOUT_FIELDS}
+
+
+def _stored_config(stats: dict, cfg: EngineConfig = DEFAULT, **index_kw) -> EngineConfig:
+    """``cfg`` with the scoring, analysis and layout stats.json froze
+    (plus IndexConfig overrides ``index_kw``)."""
+    return replace(
+        cfg,
+        bm25=BM25Params(k1=stats["k1"], b=stats["b"], field_boosts=dict(stats["field_boosts"])),
+        index=replace(cfg.index, **_stored_layout(stats, cfg.index), **index_kw),
+        tokenizer=stats.get("tokenizer", "auto"),
+        analyzer=stats.get("analyzer", "whoosh"),
+    )
+
+
 def _group_metrics_agg(spark: SparkSession, out_path: str) -> dict:
     """Per-group build metrics (postings/rows/bytes + per-bucket storage
     skew) over 3 tiny int columns of the just-written group.
@@ -444,6 +571,23 @@ def _group_metrics_agg(spark: SparkSession, out_path: str) -> dict:
         return {k: row[k] for k in ("postings", "rows", "bytes", "max_bucket", "avg_bucket")}
 
 
+def _build_metrics(t0: float, n_docs: int, groups: list[dict], vocab_size: int, n_hot_terms: int) -> dict:
+    wall = time.time() - t0
+    built = [m for m in groups if not m.get("skipped")]
+    return {
+        "wall_s": round(wall, 3),
+        "n_docs": n_docs,
+        "docs_per_sec": round(n_docs / max(wall, 1e-9), 1),
+        "postings": sum(m["postings"] for m in groups),
+        "compressed_bytes": sum(m["compressed_bytes"] for m in groups),
+        "vocab_size": vocab_size,
+        "n_hot_terms": n_hot_terms,
+        "groups_built": len(built),
+        "groups_skipped": len(groups) - len(built),
+        "groups": groups,
+    }
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -469,14 +613,6 @@ def build_index(
     fields = fields or {"body": "content"}
     os.makedirs(f"{index_dir}/_manifest", exist_ok=True)
     t0 = time.time()
-    debug = os.environ.get("BEETLE_BUILD_DEBUG") == "1"
-    _last = [t0]
-
-    def _mark(label):
-        if debug:
-            now = time.time()
-            print(f"[build] {label}: +{now - _last[0]:.2f}s (t={now - t0:.2f}s)", flush=True)
-            _last[0] = now
 
     # stage only what the build consumes (doc_id + field sources + meta):
     # the corpus may carry wide provenance columns (content_sha, commit,
@@ -495,13 +631,13 @@ def build_index(
         staged, offsets, fp = stage_corpus(
             corpus.select(*needed), f"{index_dir}/_stage/corpus", partitions=stage_partitions
         )
-    _mark('docnums + fingerprint')
     n_docs = fp["n_docs"]
     # hash of layout + scoring + fields + analyzer: a config change is a
     # rebuild even when the corpus fingerprint matches (a group bucketed
     # under an old n_buckets would otherwise serve queries pruning with
     # the new one)
     cfg_hash = cfg.layout_hash(fields)
+    groups = cfg.index.bucket_groups
 
     stats_path = f"{index_dir}/stats.json"
     prior = None
@@ -526,30 +662,20 @@ def build_index(
     # this corpus fingerprint (leftover epoch groups from an older corpus,
     # groups from a different bucket_groups config, aborted writes).
     # Without this, a rebuild leaves ghost postings that queries scan.
-    import re as _re
-    import shutil as _sh
-
     post_root = f"{index_dir}/postings"
     if os.path.isdir(post_root):
         for d in os.listdir(post_root):
-            m = _re.fullmatch(r"group=(\d+)", d)
+            m = re.fullmatch(r"group=(\d+)", d)
             if not m:
                 continue
             g = int(m.group(1))
-            keep = False
+            ours = g < 1000 and g < groups
+            if ours and _manifest_ok(index_dir, g, fp, cfg_hash):
+                continue
+            shutil.rmtree(f"{post_root}/{d}", ignore_errors=True)
             man_path = f"{index_dir}/_manifest/group_{g}.json"
-            if g < 1000 and g < cfg.index.bucket_groups and os.path.exists(man_path):
-                with open(man_path) as f:
-                    man = json.load(f)
-                keep = (
-                    man.get("fingerprint") == fp
-                    and man.get("layout_version") == INDEX_LAYOUT_VERSION
-                    and man.get("layout_hash") == cfg_hash
-                )
-            if not keep:
-                _sh.rmtree(f"{post_root}/{d}", ignore_errors=True)
-                if (g >= 1000 or g >= cfg.index.bucket_groups) and os.path.exists(man_path):
-                    os.remove(man_path)  # stale epoch/foreign manifest too
+            if not ours and os.path.exists(man_path):
+                os.remove(man_path)  # stale epoch/foreign manifest too
 
     docids_fut = None
     if prior is None:
@@ -557,10 +683,10 @@ def build_index(
         # overwrites only its epoch=0 partition, so stale epoch=N
         # partitions from a previous corpus (or pre-v4 flat files) would
         # otherwise survive and collide with the new docnum range
-        _sh.rmtree(f"{index_dir}/docids", ignore_errors=True)
+        shutil.rmtree(f"{index_dir}/docids", ignore_errors=True)
         # ... and any tombstones: a rebuild reassigns docnums, and it IS
         # the merge that makes deletions physical (Lucene optimize)
-        _sh.rmtree(f"{index_dir}/tombstones", ignore_errors=True)
+        shutil.rmtree(f"{index_dir}/tombstones", ignore_errors=True)
         # pruned pass: only (doc_id [+meta]) ride into the docids write
         # (docnum is a pure JVM projection since round 7).  Submitted on
         # a helper thread so its tasks BACKFILL the tokenize stage's
@@ -578,45 +704,19 @@ def build_index(
             f"{index_dir}/docids",
             meta_cols,
         )
-        _mark('write_docids submitted (overlaps tokenize)')
 
     # No-op resume fast path: a fully-complete index (valid prior stats
     # + every group manifest matching this fingerprint/layout) needs no
     # tokenize pass and no df aggregation — the heaviest stages of the
     # build — so a clean re-run costs only the staging fingerprint scan.
     if prior is not None:
-        complete = []
-        for g in range(cfg.index.bucket_groups):
-            mp = f"{index_dir}/_manifest/group_{g}.json"
-            if not os.path.exists(mp):
-                break
-            with open(mp) as mf:
-                man = json.load(mf)
-            if (
-                man.get("fingerprint") != fp
-                or man.get("layout_version") != INDEX_LAYOUT_VERSION
-                or man.get("layout_hash") != cfg_hash
-            ):
-                break
-            complete.append({**man, "skipped": True})
-        if len(complete) == cfg.index.bucket_groups:
-            import shutil as _sh
-
-            _sh.rmtree(f"{index_dir}/_stage", ignore_errors=True)
-            wall = time.time() - t0
-            _mark('no-op resume (all manifests match)')
-            return {
-                "wall_s": round(wall, 3),
-                "n_docs": n_docs,
-                "docs_per_sec": round(n_docs / max(wall, 1e-9), 1),
-                "postings": sum(m["postings"] for m in complete),
-                "compressed_bytes": sum(m["compressed_bytes"] for m in complete),
-                "vocab_size": prior.get("vocab_size", 0),
-                "n_hot_terms": prior.get("n_hot_terms", 0),
-                "groups_built": 0,
-                "groups_skipped": cfg.index.bucket_groups,
-                "groups": complete,
-            }
+        complete = [_manifest_ok(index_dir, g, fp, cfg_hash) for g in range(groups)]
+        if all(complete):
+            shutil.rmtree(f"{index_dir}/_stage", ignore_errors=True)
+            return _build_metrics(
+                t0, n_docs, [{**m, "skipped": True} for m in complete],
+                prior.get("vocab_size", 0), prior.get("n_hot_terms", 0),
+            )
 
     # Stage tokens to parquet once (columnar, splittable) rather than
     # JVM-cache them: the in-memory columnar store serializes/compresses
@@ -671,7 +771,6 @@ def build_index(
             # outlives a failed build (the tokenize error is the one raised)
             _docids_pool.shutdown(wait=True, cancel_futures=True)
     raw_tokens = spark.read.parquet(stage_path)
-    _mark('tokenize -> stage parquet (+ overlapped docids write)')
 
     stems_dim = None
     tokens = raw_tokens  # re-bound below for the late-stem path
@@ -684,17 +783,14 @@ def build_index(
     # from its vocabulary-sized OUTPUT (not from a second pass over the
     # token stream), and the token→stem mapping is applied vocab-side.
     thr = cfg.index.hot_df_threshold or max(5000, n_docs // 50)
-    dfs_u = raw_tokens.groupBy("field", "term").agg(
-        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("tfsum")
-    )
+    dfs_u = _term_frame(raw_tokens)
+    dfs, exact_df = dfs_u, {}
     if late_stem:
-        import pandas as _pd
-
         from ..functions.analyzer import _cached_stem
 
         def _stem_batch(batches):
             for pdf in batches:
-                yield _pd.DataFrame(
+                yield pd.DataFrame(
                     {"term": pdf["term"], "_stem": [_cached_stem(t) for t in pdf["term"]]}
                 )
 
@@ -712,7 +808,6 @@ def build_index(
         tokens = raw_tokens.join(_stems, "term").select(
             "docnum", "field", F.col("_stem").alias("term"), "tf", "dl"
         )
-        _mark('stems dim (vocab-side)')
         # vocab-side stem merge: summed row counts overcount df exactly
         # when one doc holds >= 2 source tokens sharing a stem.  That
         # can only matter for terms the build must know df EXACTLY for —
@@ -736,8 +831,6 @@ def build_index(
             for r in dfs.filter((F.col("df") > thr) & (F.col("_nsrc") > 1))
             .select("field", "term").collect()
         ]
-        _mark(f'late-stem cand collect ({len(cand)} candidates)')
-        exact_df: dict[tuple[str, str], int] = {}
         if cand:
             # source tokens of the candidates only — a tiny literal map
             # (no second stem broadcast, no full-stage probe): filter the
@@ -770,44 +863,15 @@ def build_index(
                 .collect()
             )
             exact_df = {(r["field"], r["term"]): int(r["df"]) for r in exact_rows}
-            _mark(f'late-stem exact df ({len(tok2stem)} source tokens)')
-    else:
-        dfs = dfs_u.persist(StorageLevel.MEMORY_ONLY)
-        exact_df = {}
-    if prior is None:
-        # one pass gives avgdl AND vocab size (per-field term counts)
-        avg_rows = dfs.groupBy("field").agg(
-            F.sum("tfsum").alias("s"), F.count(F.lit(1)).alias("v")
-        ).collect()
-        _mark('df/avgdl (tokens materialize)')
-        avgdl = {r["field"]: float(r["s"]) / n_docs for r in avg_rows}
-        # exact per-field token totals ride along so epoch appends can
-        # merge avgdl without mistaking the 1.0 empty-field placeholder
-        # below for real mass
-        dl_totals = {r["field"]: float(r["s"]) for r in avg_rows}
-        for fname in fields:
-            avgdl.setdefault(fname, 1.0)
-            dl_totals.setdefault(fname, 0.0)
-        vocab_size = sum(int(r["v"]) for r in avg_rows)
-    else:
-        avgdl = prior["avgdl"]
-        dl_totals = prior.get("dl_totals", {})
-        vocab_size = prior.get("vocab_size", 0)
 
-    # ---- hot-term detection (Zipf head -> salted encode).  Late-stem:
-    # candidates' row-count df is replaced by the exact recount, so the
-    # hot SET and every injected df equal the classic path bit-for-bit.
-    hot_rows = dfs.filter(F.col("df") > thr).select("field", "term", "df").collect()
-    hot_df = {}
-    for r in hot_rows:
-        key = (r["field"], r["term"])
-        d = exact_df.get(key, int(r["df"]))
-        if d > thr:
-            hot_df[key] = d
+    # ---- avgdl/vocab + hot-term detection (Zipf head -> salted encode).
+    # Late-stem: candidates' row-count df is replaced by the exact
+    # recount, so the hot SET and every injected df equal the classic
+    # path bit-for-bit.  A partial resume recomputes the same values the
+    # completed groups were encoded with (same fingerprint, same config).
+    avgdl, dl_totals, vocab_size, hot_df = _term_stats(dfs, fields, n_docs, thr, exact_df)
     dfs.unpersist()
-    if late_stem:
-        dfs_u.unpersist()
-    _mark('hot df + vocab')
+    dfs_u.unpersist()
 
     stats = {
         "n_docs": n_docs,
@@ -841,32 +905,16 @@ def build_index(
 
     # ---- salted, bucketed encode in resumable groups
     group_metrics = _encode_groups(
-        spark, tokens, index_dir, cfg, stats, hot_df, fp, cfg_hash, resume, _mark
+        spark, tokens, index_dir, cfg, stats, hot_df, fp, cfg_hash, resume
     )
     if stems_dim is not None:
         stems_dim.unpersist()
 
-    import shutil as _sh
-
-    _sh.rmtree(f"{index_dir}/_stage", ignore_errors=True)
+    shutil.rmtree(f"{index_dir}/_stage", ignore_errors=True)
     with open(stats_path, "w") as f:
         json.dump(stats, f, indent=1)
-    _mark('stage cleanup + stats')
 
-    wall = time.time() - t0
-    built = [m for m in group_metrics if not m.get("skipped")]
-    metrics = {
-        "wall_s": round(wall, 3),
-        "n_docs": n_docs,
-        "docs_per_sec": round(n_docs / max(wall, 1e-9), 1),
-        "postings": sum(m["postings"] for m in group_metrics),
-        "compressed_bytes": sum(m["compressed_bytes"] for m in group_metrics),
-        "vocab_size": vocab_size,
-        "n_hot_terms": len(hot_df),
-        "groups_built": len(built),
-        "groups_skipped": cfg.index.bucket_groups - len(built),
-        "groups": group_metrics,
-    }
+    metrics = _build_metrics(t0, n_docs, group_metrics, vocab_size, len(hot_df))
     with open(f"{index_dir}/_manifest/build.json", "w") as f:
         json.dump(metrics, f, indent=1)
     return metrics
@@ -882,7 +930,6 @@ def _encode_groups(
     fp: str,
     cfg_hash: str,
     resume: bool,
-    _mark=lambda s: None,
     out_root: str | None = None,
 ) -> list[dict]:
     """The salted, bucketed, group-resumable encode shared by full builds
@@ -915,60 +962,26 @@ def _encode_groups(
     ``out_root`` redirects postings + manifests to a staging root (the
     optimize_index path: encode beside the live index, swap after
     success); default writes into ``index_dir`` itself (full builds)."""
-    import shutil as _sh
-
     root = out_root or index_dir
     groups = cfg.index.bucket_groups
     metrics: dict[int, dict] = {}
     for g in range(groups):
-        man_path = f"{root}/_manifest/group_{g}.json"
-        if resume and os.path.exists(man_path):
-            with open(man_path) as f:
-                man = json.load(f)
-            if (
-                man.get("fingerprint") == fp
-                and man.get("layout_version") == INDEX_LAYOUT_VERSION
-                and man.get("layout_hash") == cfg_hash
-            ):
-                metrics[g] = {**man, "skipped": True}
+        man = _manifest_ok(root, g, fp, cfg_hash) if resume else None
+        if man is not None:
+            metrics[g] = {**man, "skipped": True}
     pending = [g for g in range(groups) if g not in metrics]
     if not pending:
         return [metrics[g] for g in range(groups)]
 
     tg = time.time()
-    p_enc = cfg.index.encode_partitions or spark.sparkContext.defaultParallelism
-    field_names = sorted(stats["fields"])
-    kernel = _make_encode_kernel(cfg, stats, hot_df, field_names=field_names)
-    base, part_key, enc_cols = _encode_input(spark, tokens, cfg, hot_df, field_names)
-    group_of = F.pmod(F.col("bucket"), F.lit(groups))
-    if len(pending) < groups:
-        base = base.filter(group_of.isin(pending))
-    enc = (
-        base.repartition(p_enc, part_key)
-        .sortWithinPartitions("fid", "term", "docnum")
-        .select(*enc_cols)
-        .mapInArrow(kernel, schema=POSTINGS_SCHEMA)
-        .withColumn("group", group_of)
-    )
     tmp = f"{root}/_stage/encode"
-    # token rows are narrow (~40 B); 64k-row Arrow batches cut the
-    # per-batch Python/carry overhead of the encode kernel ~6x vs the
-    # session default 10k (which is sized for wide document rows).
-    # Scoped to this action only — doc-level UDF batches stay small.
-    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old_batch = spark.conf.get(batch_key)
-    spark.conf.set(batch_key, "65536")
-    try:
-        enc.write.mode("overwrite").partitionBy("group", "bucket").parquet(tmp)
-    finally:
-        spark.conf.set(batch_key, old_batch)
+    _encode_write(spark, tokens, cfg, stats, hot_df, tmp, pending=pending)
     wall = time.time() - tg
-    _mark(f'encode {len(pending)} groups write')
 
     os.makedirs(f"{root}/postings", exist_ok=True)
     for g in pending:
         out_path = f"{root}/postings/group={g}"
-        _sh.rmtree(out_path, ignore_errors=True)
+        shutil.rmtree(out_path, ignore_errors=True)
         if os.path.isdir(f"{tmp}/group={g}"):
             os.replace(f"{tmp}/group={g}", out_path)
         else:
@@ -990,8 +1003,7 @@ def _encode_groups(
         with open(f"{root}/_manifest/group_{g}.json", "w") as f:
             json.dump(man, f, indent=1)
         metrics[g] = man
-    _sh.rmtree(tmp, ignore_errors=True)
-    _mark('group moves + metrics agg')
+    shutil.rmtree(tmp, ignore_errors=True)
     return [metrics[g] for g in range(groups)]
 
 
@@ -1049,30 +1061,17 @@ def config_from_stats(index_dir: str, stats: dict) -> EngineConfig:
     """Reconstruct the build config an index was written with from its
     stats.json (+ the on-disk group count).  Lets maintenance operators
     (optimize_index) run without the caller re-supplying the config."""
-    import re as _re
-
     man_dir = f"{index_dir}/_manifest"
     groups = 0
     if os.path.isdir(man_dir):
         for fn in os.listdir(man_dir):
-            m = _re.fullmatch(r"group_(\d+)\.json", fn)
+            m = re.fullmatch(r"group_(\d+)\.json", fn)
             if m and int(m.group(1)) < 1000:  # >=1000 are epoch groups
                 groups += 1
-    return EngineConfig(
-        bm25=BM25Params(
-            k1=stats["k1"], b=stats["b"], field_boosts=dict(stats["field_boosts"])
-        ),
-        index=IndexConfig(
-            n_buckets=stats["n_buckets"],
-            block_size=stats["block_size"],
-            blocks_per_row=stats["blocks_per_row"],
-            chunk_docs=stats["chunk_docs"],
-            hot_df_threshold=stats.get("hot_df_threshold"),
-            bucket_groups=max(groups, 1),
-            store_positions=bool(stats.get("store_positions", False)),
-        ),
-        tokenizer=stats.get("tokenizer", "auto"),
-        analyzer=stats.get("analyzer", "whoosh"),
+    return _stored_config(
+        stats,
+        hot_df_threshold=stats.get("hot_df_threshold"),
+        bucket_groups=max(groups, 1),
     )
 
 
@@ -1113,8 +1112,6 @@ def optimize_index(spark: SparkSession, index_dir: str, cfg: EngineConfig | None
     a loud open-time failure, never a silently half-merged index — with
     the full staged result still on disk for recovery.
     """
-    import shutil as _sh
-
     t0 = time.time()
     stats_path = f"{index_dir}/stats.json"
     with open(stats_path) as f:
@@ -1128,17 +1125,9 @@ def optimize_index(spark: SparkSession, index_dir: str, cfg: EngineConfig | None
         # the stale n_buckets and silently miss postings.  Loud beats
         # silent: validate every layout-affecting field.
         mismatched = {
-            k: (got, want)
-            for k, got, want in (
-                ("n_buckets", cfg.index.n_buckets, stats["n_buckets"]),
-                ("chunk_docs", cfg.index.chunk_docs, stats["chunk_docs"]),
-                ("block_size", cfg.index.block_size, stats["block_size"]),
-                ("blocks_per_row", cfg.index.blocks_per_row,
-                 stats.get("blocks_per_row", cfg.index.blocks_per_row)),
-                ("store_positions", cfg.index.store_positions,
-                 bool(stats.get("store_positions", False))),
-            )
-            if got != want
+            k: (getattr(cfg.index, k), want)
+            for k, want in _stored_layout(stats, cfg.index).items()
+            if getattr(cfg.index, k) != want
         }
         if mismatched:
             raise ValueError(
@@ -1186,25 +1175,11 @@ def optimize_index(spark: SparkSession, index_dir: str, cfg: EngineConfig | None
     )
     tokens = spark.read.parquet(stage)
 
-    # ---- 3. fresh stats over the survivors (same formulas as build)
+    # ---- 3. fresh stats over the survivors (same helper as build)
     thr = cfg.index.hot_df_threshold or max(5000, n_docs // 50)
-    dfs = (
-        tokens.groupBy("field", "term")
-        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("tfsum"))
-        .persist(StorageLevel.MEMORY_ONLY)
+    avgdl, dl_totals, vocab_size, hot_df = _term_stats(
+        _term_frame(tokens), stats["fields"], n_docs, thr
     )
-    avg_rows = dfs.groupBy("field").agg(
-        F.sum("tfsum").alias("s"), F.count(F.lit(1)).alias("v")
-    ).collect()
-    avgdl = {r["field"]: float(r["s"]) / n_docs for r in avg_rows}
-    dl_totals = {r["field"]: float(r["s"]) for r in avg_rows}
-    for fname in stats["fields"]:
-        avgdl.setdefault(fname, 1.0)
-        dl_totals.setdefault(fname, 0.0)
-    vocab_size = sum(int(r["v"]) for r in avg_rows)
-    hot_rows = dfs.filter(F.col("df") > thr).select("field", "term", "df").collect()
-    hot_df = {(r["field"], r["term"]): int(r["df"]) for r in hot_rows}
-    dfs.unpersist()
 
     opt_n = int(stats.get("optimize_count", 0)) + 1
     # rotate the fingerprint structurally (it is the corpus-identity dict
@@ -1246,11 +1221,11 @@ def optimize_index(spark: SparkSession, index_dir: str, cfg: EngineConfig | None
     # semantically correct (merged postings + still-stale stats ==
     # engine deletion semantics until the stats write lands).
     old_postings = f"{index_dir}/_stage/postings_old"
-    _sh.rmtree(old_postings, ignore_errors=True)
+    shutil.rmtree(old_postings, ignore_errors=True)
     os.replace(f"{index_dir}/postings", old_postings)
     os.replace(f"{stage_root}/postings", f"{index_dir}/postings")
     old_docids = f"{index_dir}/_stage/docids_old"
-    _sh.rmtree(old_docids, ignore_errors=True)
+    shutil.rmtree(old_docids, ignore_errors=True)
     os.replace(f"{index_dir}/docids", old_docids)
     os.replace(docids_tmp, f"{index_dir}/docids")
     man_dir = f"{index_dir}/_manifest"
@@ -1262,8 +1237,8 @@ def optimize_index(spark: SparkSession, index_dir: str, cfg: EngineConfig | None
         os.replace(f"{stage_root}/_manifest/{fn}", f"{man_dir}/{fn}")
     with open(stats_path, "w") as f:
         json.dump(new_stats, f, indent=1)
-    _sh.rmtree(tomb_dir, ignore_errors=True)
-    _sh.rmtree(f"{index_dir}/_stage", ignore_errors=True)
+    shutil.rmtree(tomb_dir, ignore_errors=True)
+    shutil.rmtree(f"{index_dir}/_stage", ignore_errors=True)
 
     wall = time.time() - t0
     metrics = {

@@ -19,26 +19,7 @@ _U127 = np.uint64(127)
 
 def varint_encode(values: np.ndarray) -> bytes:
     """LEB128-encode a non-negative int array (vectorized)."""
-    a = np.ascontiguousarray(values, dtype=np.uint64)
-    if a.size == 0:
-        return b""
-    if a.max() < 128:  # fast path: tf/dl are usually single-byte
-        return a.astype(np.uint8).tobytes()
-    # bytes needed per value = number of 7-bit groups
-    nb = np.ones(a.size, dtype=np.int64)
-    v = a >> _U7
-    while v.any():
-        nb += (v > 0)
-        v >>= _U7
-    pos = np.zeros(a.size, dtype=np.int64)
-    np.cumsum(nb[:-1], out=pos[1:])
-    out = np.zeros(int(nb.sum()), dtype=np.uint8)
-    for k in range(int(nb.max())):
-        m = nb > k
-        b = ((a[m] >> np.uint64(7 * k)) & _U127).astype(np.uint8)
-        b[nb[m] > k + 1] |= 128
-        out[pos[m] + k] = b
-    return out.tobytes()
+    return varint_encode_concat(values, np.empty(0, dtype=np.int64))[0].tobytes()
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
@@ -70,34 +51,27 @@ def varint_encode_concat(
     n = a.size
     if n == 0:
         return np.empty(0, dtype=np.uint8), np.zeros(len(row_starts) + 1, dtype=np.int64)
-    nb = np.ones(n, dtype=np.int64)
-    v = a >> _U7
-    while v.any():
-        nb += (v > 0)
-        v >>= _U7
-    pos = np.zeros(n, dtype=np.int64)
-    np.cumsum(nb[:-1], out=pos[1:])
-    out = np.zeros(int(nb.sum()), dtype=np.uint8)
-    for k in range(int(nb.max())):
-        m = nb > k
-        bts = ((a[m] >> np.uint64(7 * k)) & _U127).astype(np.uint8)
-        bts[nb[m] > k + 1] |= 128
-        out[pos[m] + k] = bts
+    if a.max() < 128:  # fast path: tf/dl are usually single-byte
+        out, pos = a.astype(np.uint8), np.arange(n, dtype=np.int64)
+    else:
+        # bytes needed per value = number of 7-bit groups
+        nb = np.ones(n, dtype=np.int64)
+        v = a >> _U7
+        while v.any():
+            nb += (v > 0)
+            v >>= _U7
+        pos = np.zeros(n, dtype=np.int64)
+        np.cumsum(nb[:-1], out=pos[1:])
+        out = np.zeros(int(nb.sum()), dtype=np.uint8)
+        for k in range(int(nb.max())):
+            m = nb > k
+            bts = ((a[m] >> np.uint64(7 * k)) & _U127).astype(np.uint8)
+            bts[nb[m] > k + 1] |= 128
+            out[pos[m] + k] = bts
     offsets = np.empty(len(row_starts) + 1, dtype=np.int64)
     offsets[:-1] = pos[row_starts]
     offsets[-1] = out.size
     return out, offsets
-
-
-def varint_encode_rows(values: np.ndarray, row_starts: np.ndarray) -> list[bytes]:
-    """Encode one array and slice it into per-row byte strings at
-    ``row_starts`` (value indices).  One vectorized pass for the whole
-    batch instead of one varint_encode call per posting row."""
-    buf, offsets = varint_encode_concat(values, row_starts)
-    if buf.size == 0 and len(offsets) == 1:
-        return []
-    b = buf.tobytes()
-    return [b[s:e] for s, e in zip(offsets[:-1].tolist(), offsets[1:].tolist())]
 
 
 def _docgaps_for_rows(docnums: np.ndarray, row_starts: np.ndarray) -> np.ndarray:
@@ -111,29 +85,26 @@ def _docgaps_for_rows(docnums: np.ndarray, row_starts: np.ndarray) -> np.ndarray
             # same silent-wrap hazard as encode_docgaps: a negative
             # within-row gap means a duplicate/unsorted docnum run
             raise ValueError(
-                "encode_docgap_rows needs strictly-increasing non-negative docnums per row"
+                "encode_docgap_concat needs strictly-increasing non-negative docnums per row"
             )
     return gaps.astype(np.uint64)
-
-
-def encode_docgap_rows(docnums: np.ndarray, row_starts: np.ndarray) -> list[bytes]:
-    """Gap-encode a batch of concatenated per-row sorted docnum runs: the
-    first value of each row is stored absolute (delta from -1), the rest as
-    (delta - 1) within the row."""
-    return varint_encode_rows(_docgaps_for_rows(docnums, row_starts), row_starts)
 
 
 def encode_docgap_concat(
     docnums: np.ndarray, row_starts: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Arrow-layout twin of :func:`encode_docgap_rows` (buffer, offsets)."""
+    """Gap-encode a batch of concatenated per-row sorted docnum runs: the
+    first value of each row is stored absolute (delta from -1), the rest as
+    (delta - 1) within the row.  Returns (buffer, offsets) as
+    :func:`varint_encode_concat`."""
     return varint_encode_concat(_docgaps_for_rows(docnums, row_starts), row_starts)
 
 
-def encode_positions_rows(
+def encode_positions_concat(
     allpos: np.ndarray, posting_starts: np.ndarray, row_starts: np.ndarray
-) -> list[bytes]:
-    """Encode per-posting ascending position lists, sliced per output row.
+) -> tuple[np.ndarray, np.ndarray]:
+    """Encode per-posting ascending position lists; return (buffer,
+    per-row offsets) as :func:`varint_encode_concat`.
 
     ``allpos``: every posting's positions concatenated (ascending within a
     posting); ``posting_starts``: value index where posting i's positions
@@ -143,26 +114,21 @@ def encode_positions_rows(
     """
     a = np.ascontiguousarray(allpos, dtype=np.int64)
     if a.size == 0:
-        return [b""] * len(row_starts)
-    gaps = np.empty(a.size, dtype=np.int64)
-    gaps[0] = a[0]
-    gaps[1:] = a[1:] - a[:-1] - 1
-    gaps[posting_starts] = a[posting_starts]  # posting-initial absolute
-    return varint_encode_rows(gaps.astype(np.uint64), posting_starts[row_starts])
-
-
-def encode_positions_concat(
-    allpos: np.ndarray, posting_starts: np.ndarray, row_starts: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Arrow-layout twin of :func:`encode_positions_rows`."""
-    a = np.ascontiguousarray(allpos, dtype=np.int64)
-    if a.size == 0:
         return np.empty(0, dtype=np.uint8), np.zeros(len(row_starts) + 1, dtype=np.int64)
     gaps = np.empty(a.size, dtype=np.int64)
     gaps[0] = a[0]
     gaps[1:] = a[1:] - a[:-1] - 1
     gaps[posting_starts] = a[posting_starts]  # posting-initial absolute
     return varint_encode_concat(gaps.astype(np.uint64), posting_starts[row_starts])
+
+
+def encode_positions_rows(
+    allpos: np.ndarray, posting_starts: np.ndarray, row_starts: np.ndarray
+) -> list[bytes]:
+    """:func:`encode_positions_concat` sliced into one bytes per row."""
+    buf, offsets = encode_positions_concat(allpos, posting_starts, row_starts)
+    b = buf.tobytes()
+    return [b[s:e] for s, e in zip(offsets[:-1].tolist(), offsets[1:].tolist())]
 
 
 def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

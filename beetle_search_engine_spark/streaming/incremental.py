@@ -27,13 +27,13 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
 from ..operators.build import (
-    POSTINGS_SCHEMA,
-    _encode_input,
-    _make_encode_kernel,
+    _encode_write,
+    _stored_config,
+    _term_frame,
+    _term_stats,
     build_index,
 )
 from ..operators.docnums import numbered, stage_corpus, write_docids
@@ -91,26 +91,31 @@ def append_epoch(
         numbered(staged, offsets, ["doc_id", *meta_cols]), f"{index_dir}/docids", meta_cols, epoch=epoch
     )
 
+    # physical layout + scoring params are frozen by the index, not the
+    # caller's cfg: epoch rows must stay chunk-aligned and bound-compatible
+    frozen = _stored_config(stats, cfg)
     stage_path = f"{index_dir}/_stage/epoch_tokens"
     tokenize(
         numbered(staged, offsets, sorted(set(fields.values()))),
         fields,
         cfg.tokenizer,
-        analyzer_name=stats.get("analyzer", "whoosh"),
-        positions=stats.get("store_positions", False),
+        analyzer_name=frozen.analyzer,
+        positions=frozen.index.store_positions,
         n_docs_hint=n_new,
     ).write.mode("overwrite").parquet(stage_path)
     tokens = spark.read.parquet(stage_path)
 
-    # updated global stats (weighted avgdl over old + new).  The exact
-    # per-field token totals come from stats["dl_totals"] when present:
-    # deriving old mass as avgdl*n would count the build's 1.0
-    # empty-field placeholder as real tokens and diverge from a clean
-    # rebuild (the fallback for pre-dl_totals indexes keeps that old
-    # approximation).  n_total counts DOCUMENTS (live n_docs + new), not
-    # the docnum offset, which can be sparse after an optimize.
+    # updated global stats (weighted avgdl over old + new), from one
+    # aggregation pass over the epoch's tokens.  The exact per-field
+    # token totals come from stats["dl_totals"] when present: deriving
+    # old mass as avgdl*n would count the build's 1.0 empty-field
+    # placeholder as real tokens and diverge from a clean rebuild (the
+    # fallback for pre-dl_totals indexes keeps that old approximation).
+    # n_total counts DOCUMENTS (live n_docs + new), not the docnum
+    # offset, which can be sparse after an optimize.
     n_total = int(stats["n_docs"]) + n_new
-    sums = {r["field"]: float(r["s"]) for r in tokens.groupBy("field").agg(F.sum("tf").alias("s")).collect()}
+    thr = cfg.index.hot_df_threshold or max(5000, n_total // 50)
+    _, sums, _, hot_df = _term_stats(_term_frame(tokens), fields, n_new, thr)
     dl_totals = dict(stats.get("dl_totals", {}))
     avgdl_new = {}
     for fname in set(stats["avgdl"]) | set(fields):
@@ -122,44 +127,11 @@ def append_epoch(
         dl_totals[fname] = total
         avgdl_new[fname] = total / n_total if total > 0 else 1.0
 
-    thr = cfg.index.hot_df_threshold or max(5000, n_total // 50)
-    dfs = tokens.groupBy("field", "term").agg(F.count(F.lit(1)).alias("df"))
-    hot_df = {
-        (r["field"], r["term"]): int(r["df"])
-        for r in dfs.filter(F.col("df") > thr).collect()
-    }
-
-    # physical layout + scoring params are frozen by the index, not the
-    # caller's cfg: epoch rows must stay chunk-aligned and bound-compatible
-    from dataclasses import replace
-
-    from ..config import BM25Params
-
-    cfg = EngineConfig(
-        bm25=BM25Params(k1=stats["k1"], b=stats["b"], field_boosts=dict(stats["field_boosts"])),
-        index=replace(
-            cfg.index,
-            n_buckets=stats["n_buckets"],
-            chunk_docs=stats["chunk_docs"],
-            block_size=stats["block_size"],
-            blocks_per_row=stats.get("blocks_per_row", cfg.index.blocks_per_row),
-            store_positions=stats.get("store_positions", False),
-        ),
-        analyzer=stats.get("analyzer", "whoosh"),
+    enc_stats = {"n_docs": n_total, "avgdl": avgdl_new, "fields": sorted(fields)}
+    _encode_write(
+        spark, tokens, frozen, enc_stats, hot_df,
+        f"{index_dir}/postings/group={1000 + epoch}", epoch=epoch,
     )
-    enc_stats = {"n_docs": n_total, "avgdl": avgdl_new}
-    field_names = sorted(fields)
-    kernel = _make_encode_kernel(cfg, enc_stats, hot_df, epoch=epoch, field_names=field_names)
-    p_enc = cfg.index.encode_partitions or spark.sparkContext.defaultParallelism
-
-    base, part_key, enc_cols = _encode_input(spark, tokens, cfg, hot_df, field_names)
-    enc = (
-        base.repartition(p_enc, part_key)
-        .sortWithinPartitions("fid", "term", "docnum")
-        .select(*enc_cols)
-        .mapInArrow(kernel, schema=POSTINGS_SCHEMA)
-    )
-    enc.write.mode("overwrite").partitionBy("bucket").parquet(f"{index_dir}/postings/group={1000 + epoch}")
 
     # NOTE: vocab_size stays the base build's value (counting the union
     # of distinct terms would need a full dictionary scan per epoch);

@@ -52,6 +52,7 @@ import shutil
 import subprocess
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -123,64 +124,68 @@ AB_QUERIES = [
 ]
 
 
-def run_queries() -> tuple[dict[str, float], dict[str, float], dict[str, dict]]:
+def _guarded(failed: dict[str, dict], name: str, fn) -> float | None:
+    """Wall seconds of one suite leaf ``fn()``, or None with the error and
+    its traceback tail recorded under ``failed[name]``.  Never raises: one
+    leaf that crashes must not take the rest of the suite or the JSON
+    line down with it (the suite-side twin of ``_bench_build``)."""
+    t0 = time.time()
+    try:
+        fn()
+    except Exception as e:
+        failed[name] = {"error": repr(e)[:200], "traceback_tail": traceback.format_exc()[-FAIL_TAIL_CHARS:]}
+        return None
+    return round(time.time() - t0, 3)
+
+
+def run_queries() -> tuple[dict, dict, dict, dict[str, dict]]:
+    """Suite walls, warm p50s, the A/B second pass and the failed leaves
+    (``{leaf: {"error", "traceback_tail"}}``; a failed leaf's wall is
+    None)."""
+    import statistics
+
     import __spark_entry__ as entrymod
     from beetle_search_engine_spark.sources.session import get_spark
 
     spark = get_spark("bench-queries", cores=CPUS, shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
+    failed: dict[str, dict] = {}
+
+    def leaf(name: str, key: str | None = None) -> float | None:
+        return _guarded(failed, key or name, lambda: qs[name](spark, SF_DIR).count())
+
     # engine entries build their indexes on first call; do that outside
     # the timed window and report the builds separately
     tag = SF_DIR.strip("/").replace("/", "_")
-    shutil.rmtree(f"/tmp/beetle_idx_{tag}", ignore_errors=True)
-    shutil.rmtree(f"/tmp/beetle_idx_{tag}_nostem", ignore_errors=True)
-    shutil.rmtree(f"/tmp/beetle_idx_{tag}_fielded", ignore_errors=True)
-    t0 = time.time()
-    entrymod._engine_index(spark, SF_DIR)
-    idx_build_s = time.time() - t0
-    t0 = time.time()
-    entrymod._engine_index_nostem(spark, SF_DIR)
-    nostem_build_s = time.time() - t0
-    t0 = time.time()
-    entrymod._engine_index_fielded(spark, SF_DIR)
-    fielded_build_s = time.time() - t0
-
-    out: dict[str, float] = {
-        "engine_index_build": round(idx_build_s, 3),
-        "engine_index_build_nostem": round(nostem_build_s, 3),
-        "engine_index_build_fielded": round(fielded_build_s, 3),
-    }
+    out: dict[str, float | None] = {}
+    for suffix, build in (
+        ("", entrymod._engine_index),
+        ("_nostem", entrymod._engine_index_nostem),
+        ("_fielded", entrymod._engine_index_fielded),
+    ):
+        shutil.rmtree(f"/tmp/beetle_idx_{tag}{suffix}", ignore_errors=True)
+        name = f"engine_index_build{suffix}"
+        out[name] = _guarded(failed, name, lambda b=build: b(spark, SF_DIR))
     for name in HEADLINE:
-        t0 = time.time()
-        df = qs[name](spark, SF_DIR)
-        n = df.count()
-        out[name] = round(time.time() - t0, 3)
-        _ = n
+        out[name] = leaf(name)
     # warm-query p50 for the flagship paths: each query re-run
     # P50_REPEATS times against the already-built (and plan-cached)
     # indexes — the round-over-round latency-regression signal
-    import statistics
-
-    p50: dict[str, float] = {}
+    p50: dict[str, float | None] = {}
     for name in P50_QUERIES:
-        times = []
-        for _ in range(P50_REPEATS):
-            t0 = time.time()
-            qs[name](spark, SF_DIR).count()
-            times.append(time.time() - t0)
-        p50[name] = round(statistics.median(times), 3)
+        times = [t for t in (leaf(name) for _ in range(P50_REPEATS)) if t is not None]
+        p50[name] = round(statistics.median(times), 3) if times else None
     # in-session A/B second pass over the weather-flagged suite (their
     # pass-1 walls are already in `out`): same session, minutes apart —
     # a real regression shows in BOTH passes, weather only in one
     suite_ab: dict[str, dict] = {}
     for name in AB_QUERIES:
-        t0 = time.time()
-        qs[name](spark, SF_DIR).count()
-        p2 = round(time.time() - t0, 3)
-        suite_ab[name] = {"pass1": out[name], "pass2": p2, "min": min(out[name], p2)}
+        p2 = leaf(name, f"{name}:pass2")
+        walls = [t for t in (out.get(name), p2) if t is not None]
+        suite_ab[name] = {"pass1": out.get(name), "pass2": p2, "min": min(walls) if walls else None}
     spark.stop()
-    return out, p50, suite_ab
+    return out, p50, suite_ab, failed
 
 
 def _bench_build_once(cores: int, tokenizer: str) -> dict:
@@ -448,7 +453,7 @@ def engine_skew() -> dict:
 
 
 def main():
-    queries, p50, suite_ab = run_queries()
+    queries, p50, suite_ab, failed = run_queries()
     result = {
         "metric": "bm25_engine_index_build_docs_per_sec",
         "unit": "docs/sec",  # queries sub-dict is in seconds
@@ -457,13 +462,15 @@ def main():
         "query_p50": p50,  # warm medians over P50_REPEATS runs
         "suite_ab": suite_ab,  # two-pass walls for the weather-flagged set
         "skew": engine_skew(),
+        "failed_leaves": failed,  # error + traceback tail per failed leaf
     }
     if RUN_SCALING:
         scaling = run_scaling()
         result["scaling"] = scaling
         result["value"] = scaling["scaling_4x"]["docs_per_sec_4n"]
     else:
-        result["value"] = round(1.0 / max(queries.get("engine_bm25_or", 1.0), 1e-9), 3)
+        bm25_or = queries.get("engine_bm25_or")
+        result["value"] = 0.0 if bm25_or is None else round(1.0 / max(bm25_or, 1e-9), 3)
     # The driver records only the LAST ~2000 chars of stdout and tries to
     # json-parse them — rounds 4-5 overflowed that window and recorded
     # parsed: null.  Emit a COMPACT line (full detail written next to the
@@ -471,8 +478,9 @@ def main():
     with open("BENCH/bench_full_last_run.json", "w") as f:
         json.dump(result, f, indent=1)
     compact = dict(result)
-    compact["queries"] = {k: round(v, 2) for k, v in queries.items()}
-    compact["query_p50"] = {k: round(v, 2) for k, v in p50.items()}
+    compact["queries"] = {k: None if v is None else round(v, 2) for k, v in queries.items()}
+    compact["query_p50"] = {k: None if v is None else round(v, 2) for k, v in p50.items()}
+    compact["failed_leaves"] = sorted(failed)  # tails stay in the detail file
     # suite_ab's pass1 walls are already `queries`; the pass2/min detail
     # lives in the full file (the per-query key names alone are ~370
     # chars — the single biggest chunk after queries itself)

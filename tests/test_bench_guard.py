@@ -86,3 +86,61 @@ def test_default_cores_follows_cpu_affinity(monkeypatch):
     assert default_cores() == len(os.sched_getaffinity(0))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_cores() == 3
+
+
+def _stub_suite(monkeypatch, tmp_path, raising: str):
+    """A fake ``__spark_entry__`` whose suite leaf ``raising`` raises and
+    every other leaf (and index build) succeeds, plus a fake session."""
+    import sys
+    import types
+
+    from beetle_search_engine_spark.sources import session
+
+    class _Frame:
+        def count(self):
+            return 1
+
+    def ok(_spark, _sf):
+        return _Frame()
+
+    def boom(_spark, _sf):
+        raise RuntimeError("leaf exploded")
+
+    qs = {n: ok for n in {*bench.HEADLINE, *bench.P50_QUERIES, *bench.AB_QUERIES}}
+    qs[raising] = boom
+    entry = types.SimpleNamespace(
+        queries=lambda: qs, _engine_index=ok, _engine_index_nostem=ok, _engine_index_fielded=ok
+    )
+    spark = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(setLogLevel=lambda _lvl: None), stop=lambda: None
+    )
+    monkeypatch.setitem(sys.modules, "__spark_entry__", entry)
+    monkeypatch.setattr(session, "get_spark", lambda *_a, **_k: spark)
+    # a private index tag, so the suite's index cleanup touches nothing real
+    monkeypatch.setattr(bench, "SF_DIR", str(tmp_path / "sf"))
+
+
+def test_a_raising_suite_leaf_is_recorded_and_the_suite_goes_on(monkeypatch, tmp_path):
+    _stub_suite(monkeypatch, tmp_path, raising="simhash16")
+    out, p50, suite_ab, failed = bench.run_queries()
+    assert set(failed) == {"simhash16", "simhash16:pass2"}
+    assert "leaf exploded" in failed["simhash16"]["error"]
+    assert failed["simhash16"]["traceback_tail"].rstrip().endswith("RuntimeError: leaf exploded")
+    assert out["simhash16"] is None
+    assert all(out[n] is not None for n in bench.HEADLINE if n != "simhash16")
+    assert all(out[f"engine_index_build{s}"] is not None for s in ("", "_nostem", "_fielded"))
+    assert all(v is not None for v in p50.values())
+    assert suite_ab["simhash16"] == {"pass1": None, "pass2": None, "min": None}
+    assert suite_ab["token_tf"]["min"] is not None
+
+
+def test_a_failed_flagship_leaf_still_prints_the_json_line(monkeypatch, tmp_path, capsys):
+    _stub_suite(monkeypatch, tmp_path, raising="engine_bm25_or")
+    monkeypatch.setattr(bench, "RUN_SCALING", False)
+    monkeypatch.chdir(tmp_path)
+    (tmp_path / "BENCH").mkdir()
+    bench.main()
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["queries"]["engine_bm25_or"] is None and line["query_p50"]["engine_bm25_or"] is None
+    assert line["failed_leaves"] == ["engine_bm25_or"]
+    assert line["value"] == 0.0
