@@ -1,13 +1,18 @@
 """BM25 query lifecycle (SURVEY.md §3.1 rebuilt Spark-first).
 
+One query path: ``search()`` is a batch of one, ``search_many()`` a
+batch of many, and both run
+
     query string
-      -> analyze_query (driver-side, same T1-T4 chain as indexing)
-      -> bucket ids for the query's terms (tiny JVM job: pmod(xxhash64))
-      -> bucket-pruned, term-filtered scan of the posting parquet
-         (partition pruning on bucket dirs + row-group pushdown on term)
-      -> groupBy(chunk).applyInPandas(block-max WAND kernel)  [bounded heap k]
-      -> global TakeOrderedAndProject (score desc, docnum asc) limit k
-      -> broadcast join with the docids dimension for display ids
+      -> _parse: analyze (driver-side, same T1-T4 chain as indexing) and
+         expand prefixes/ranges/wildcards against the term dictionary
+      -> _rank, over the union of the queries' _fetch_terms:
+         -> bucket-pruned, term-filtered scan of the posting parquet
+            (partition pruning on bucket dirs + row-group pushdown on term)
+         -> per chunk, each query's block-max WAND kernel  [bounded heap k]
+         -> per-query global top-k (score desc, docnum asc): a row_number
+            window partitioned by query_id
+         -> docid fetch for the winners' display ids
 
 Node boundaries appear exactly twice, as in the survey's plan: the term
 broadcast into the kernel closure and the final top-k merge.  The
@@ -18,7 +23,8 @@ at all: pyarrow reads the same pruned posting rows, the same kernels
 score them on the driver, and the <= k result rows come back as an
 Arrow-backed ``LocalRelation`` (``_local_frame``), whose ``collect()`` is
 served from the driver without scheduling a job.  Every frame this
-module builds from driver rows takes that route.
+module builds from driver rows takes that route.  Match-all queries
+('*', '* OR x') have no cursors; their own plans answer them.
 """
 
 from __future__ import annotations
@@ -45,9 +51,8 @@ _QUERY_ID = StructField("query_id", StringType())
 _SCORE_RANK = [StructField("score", DoubleType()), StructField("rank", IntegerType())]
 RESULT_STRUCT = StructType([StructField("doc_id", StringType()), *_SCORE_RANK])
 BATCH_RESULT_STRUCT = StructType([_QUERY_ID, *RESULT_STRUCT.fields])
-# docnum-keyed winners of the distributed paths, before the docid fetch
-_RANKED_STRUCT = StructType([StructField("docnum", LongType()), *_SCORE_RANK])
-_BATCH_RANKED_STRUCT = StructType([_QUERY_ID, *_RANKED_STRUCT.fields])
+# docnum-keyed winners of the distributed path, before the docid fetch
+_RANKED_STRUCT = StructType([_QUERY_ID, StructField("docnum", LongType()), *_SCORE_RANK])
 
 
 def _local_frame(spark: SparkSession, columns, schema: StructType) -> DataFrame:
@@ -103,9 +108,19 @@ class BM25Index:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        with open(f"{index_dir}/stats.json") as f:
-            self.stats = json.load(f)
+        self.refresh_stats()
         self.analyzer = get_analyzer(self.stats.get("analyzer", "whoosh"))
+
+    def refresh_stats(self) -> None:
+        """(Re-)read stats.json (at open, after an incremental append_epoch)
+        and what derives from it: committed epochs, scans, tombstones,
+        and an empty pyarrow dataset cache (the local fast path would
+        otherwise keep serving the pre-append file listing)."""
+        with open(f"{self.index_dir}/stats.json") as f:
+            self.stats = json.load(f)
+        self.epochs = sorted(int(e) for e in self.stats.get("epochs", {"0": None}))
+        self._epoch_groups = [1000 + e for e in self.epochs if e > 0]
+        self._datasets: dict = {}
         self.postings, self.docids = self._committed_scans()
         self._load_tombstones()
 
@@ -118,16 +133,36 @@ class BM25Index:
         with pre-append stats; the partition-column isin filters prune
         them for free (and a retried append overwrites them in place).
         Base groups (< 1000) are guarded by the group-manifest cleanup
-        at build time."""
-        epochs = sorted(int(e) for e in self.stats.get("epochs", {"0": None}))
-        committed_groups = [1000 + e for e in epochs if e > 0]
+        at build time.  ``_arrow_postings`` / ``_docids_arrow`` apply the
+        same filters to the pyarrow reads."""
         postings = self.spark.read.parquet(f"{self.index_dir}/postings")
         postings = postings.filter(
-            (F.col("group") < 1000) | F.col("group").isin(committed_groups)
+            (F.col("group") < 1000) | F.col("group").isin(self._epoch_groups)
         )
         docids = self.spark.read.parquet(f"{self.index_dir}/docids")
-        docids = docids.filter(F.col("epoch").isin(epochs))
+        docids = docids.filter(F.col("epoch").isin(self.epochs))
         return postings, docids
+
+    def _dataset(self, name: str):
+        """The cached pyarrow dataset of one index directory (``postings``
+        or ``docids``); ``refresh_stats`` drops the cache."""
+        if name not in self._datasets:
+            import pyarrow.dataset as ds
+
+            self._datasets[name] = ds.dataset(
+                f"{self.index_dir}/{name}", format="parquet", partitioning="hive"
+            )
+        return self._datasets[name]
+
+    def _arrow_postings(self, flt=None, columns: list[str] | None = None):
+        """Committed posting rows matching ``flt`` as a pyarrow table —
+        no Spark job, the same epoch pruning as ``_committed_scans``."""
+        import pyarrow.dataset as ds
+
+        committed = (ds.field("group") < 1000) | ds.field("group").isin(self._epoch_groups)
+        return self._dataset("postings").to_table(
+            columns=columns, filter=committed if flt is None else committed & flt
+        )
 
     def _buckets_for(self, terms: list[str]) -> dict[str, int]:
         # driver-local pure-Python XXH64, parity-tested vs Spark's
@@ -203,27 +238,12 @@ class BM25Index:
             self._load_tombstones()
         return n
 
-    def refresh_stats(self) -> None:
-        """Re-read stats.json (after an incremental append_epoch)."""
-        with open(f"{self.index_dir}/stats.json") as f:
-            self.stats = json.load(f)
-        self.postings, self.docids = self._committed_scans()
-        self._load_tombstones()
-        # drop cached pyarrow file listings (the local fast path would
-        # otherwise keep serving the pre-append snapshot)
-        for attr in ("_arrow_postings", "_arrow_docids"):
-            if hasattr(self, attr):
-                delattr(self, attr)
-
     def _pruned_scan(self, terms: list[str], buckets: dict[str, int]) -> DataFrame:
         """The Spark posting scan of ``terms``: bucket-partition pruning
         plus a term predicate pushed into the row groups."""
         return self.postings.filter(
             F.col("bucket").isin(sorted(set(buckets.values()))) & F.col("term").isin(terms)
         )
-
-    def _multi_epoch(self) -> bool:
-        return len(self.stats.get("epochs", {"0": 0})) > 1
 
     @staticmethod
     def _summed_dfs(pdf) -> dict[tuple[str, str], int]:
@@ -320,6 +340,12 @@ class BM25Index:
             RESULT_STRUCT,
         )
 
+    def _every(self, pq: ParsedQuery, top_k: int, prefer_local: bool | None) -> DataFrame:
+        """'*' and '* OR x': match-all has no cursors for the kernels."""
+        if pq.every_or:
+            return self._search_every_or(pq, top_k, prefer_local)
+        return self._search_every(pq, top_k)
+
     def search(
         self, query: str, top_k: int = 10, mode: str = "and", prefer_local: bool | None = None
     ) -> DataFrame:
@@ -335,84 +361,10 @@ class BM25Index:
         Spark job, and its result is an Arrow ``LocalRelation`` whose
         ``collect()`` runs none either (interactive latency).  Defaults
         to n_docs <= 200k; results identical by construction."""
-        if mode == "parse":
-            pq = parse_query(query, self.analyzer, fields=set(self.stats.get("fields", [])))
-        else:
-            pq = ParsedQuery(terms=self.analyzer.analyze_query(query), mode=mode)
-        if pq.every:
-            return self._search_every(pq, top_k)
-        if pq.every_or:
-            return self._search_every_or(pq, top_k, prefer_local)
-        if pq.empty:
-            return self.empty_result()
-        if (
-            pq.prefixes or pq.excluded_prefixes or pq.ranges
-            or pq.excluded_ranges or pq.wildcards or pq.excluded_wildcards
-        ):
-            pq = self._expand_prefixes(pq)
-            if pq is None or pq.empty:
-                return self.empty_result()
-        if (pq.phrases or pq.excluded_phrases or pq.slop_phrases
-                or pq.excluded_slop_phrases) and not self.stats.get("store_positions"):
-            raise ValueError(
-                "phrase query needs an index built with store_positions=True"
-            )
-        terms, mode, phrases = pq.terms, pq.mode, pq.phrases
-        # excluded (NOT) terms and negated-phrase terms ride the same
-        # pruned scan: their postings are needed to drop matching docs,
-        # but they never score
-        ex_phrase_terms = [t for ph in pq.excluded_phrases for t, _off in ph]
-        ex_phrase_terms += [t for ph, _s in pq.excluded_slop_phrases for t, _off in ph]
-        # maybe (ANDMAYBE) and filter (REQUIRE) terms need their postings
-        # on the scan too: one scores without gating, the other gates
-        # without scoring
-        all_terms = list(dict.fromkeys(
-            [*terms, *pq.excluded, *ex_phrase_terms, *pq.maybe_terms, *pq.filter_terms]
-        ))
-        buckets = self._buckets_for(all_terms)
-        if prefer_local is None:
-            prefer_local = self.stats["n_docs"] <= 200_000
-        if prefer_local:
-            return self._search_local(all_terms, buckets, top_k, pq)
-        scan = self._pruned_scan(all_terms, buckets)
-        df_override = self._summed_dfs_spark(scan) if self._multi_epoch() else None
-        kernel = make_wand_kernel(
-            terms, self.stats, top_k, mode, df_override, phrases,
-            fielded=pq.fielded, excluded=pq.excluded,
-            groups=pq.groups or None, excluded_phrases=pq.excluded_phrases or None,
-            deleted=self.deleted,
-            term_boosts=pq.boosts or None, maybe_terms=pq.maybe_terms or None,
-            filter_terms=pq.filter_terms or None, tree=pq.tree,
-            slop_phrases=pq.slop_phrases or None,
-            excluded_slop_phrases=pq.excluded_slop_phrases or None,
-        )
-        scored = scan.groupBy("chunk").applyInPandas(kernel, "docnum long, score double")
-        top_rows = (
-            scored.orderBy(F.desc("score"), F.asc("docnum")).limit(top_k).collect()
-        )  # k rows on the driver — the global top-k merge
-        if not top_rows:
-            return self.empty_result()
-        # docid fetch with the k docnums pushed into the scan as an IN
-        # filter: a broadcast join alone cannot prune the docids
-        # dimension, so every query would pay a full scan of it at scale;
-        # the docids parquet is docnum-contiguous-sorted, so the pushed
-        # filter skips whole row groups.
-        ranked = _local_frame(
-            self.spark,
-            [
-                [int(r["docnum"]) for r in top_rows],
-                [float(r["score"]) for r in top_rows],
-                list(range(1, len(top_rows) + 1)),
-            ],
-            _RANKED_STRUCT,
-        )
-        pruned = self.docids.filter(F.col("docnum").isin([int(r["docnum"]) for r in top_rows]))
-        return (
-            pruned.join(F.broadcast(ranked), "docnum", "inner")
-            .orderBy(F.asc("rank"))
-            .select("doc_id", "score", "rank")
-        )
-
+        pq = self._parse(query, mode)
+        if pq and (pq.every or pq.every_or):
+            return self._every(pq, top_k, prefer_local)
+        return self._rank({"q": pq} if pq else {}, top_k, prefer_local, RESULT_STRUCT)
 
     def search_many(
         self,
@@ -426,179 +378,179 @@ class BM25Index:
 
         The batch shape is the service-throughput plan: all queries'
         terms merge into ONE bucket-pruned, term-pushdown scan and ONE
-        applyInPandas pass — per (chunk) task, each query's kernel runs
-        over just its own cursors (a pandas term-mask, no extra scan).
-        Scheduling overhead (job launch, scan setup, shuffle) is paid
-        once for Q queries instead of Q times; per-query work is
-        unchanged.  Global selection is a per-query top-k window
-        (partitioned by query_id — parallel across queries), then one
-        shared docid fetch for the union of winners.
+        kernel pass (``_rank``) — per chunk, each query's kernel runs
+        over just its own cursors.  Scheduling overhead (job launch,
+        scan setup, shuffle) is paid once for Q queries instead of Q
+        times; per-query work is unchanged.
 
         Queries that parse to nothing contribute no rows.  A list input
-        gets ids "q0".."qN" in order.
+        gets ids "q0".."qN" in order.  Rows are grouped by query_id with
+        rank ascending within each.
         """
         if isinstance(queries, list):
             queries = {f"q{i}": q for i, q in enumerate(queries)}
-        fields = set(self.stats.get("fields", []))
-        parsed: dict[str, ParsedQuery] = {}
-        every_pqs: dict[str, ParsedQuery] = {}
-        for qid, qs in queries.items():
-            if mode == "parse":
-                pq = parse_query(qs, self.analyzer, fields=fields)
-            else:
-                pq = ParsedQuery(terms=self.analyzer.analyze_query(qs), mode=mode)
-            if pq.every or pq.every_or:
-                # match-all (and its OR-chain form) has no cursors for
-                # the batch kernel — answered by its own docids-dim plan
-                # and unioned into the result
-                every_pqs[qid] = pq
-                continue
-            if (
-                pq.prefixes or pq.excluded_prefixes or pq.ranges
-                or pq.excluded_ranges or pq.wildcards or pq.excluded_wildcards
-            ):
-                pq = self._expand_prefixes(pq)
-            if pq is None or pq.empty:
-                continue
-            if (pq.phrases or pq.excluded_phrases or pq.slop_phrases
-                or pq.excluded_slop_phrases) and not self.stats.get("store_positions"):
-                raise ValueError("phrase query needs an index built with store_positions=True")
-            parsed[qid] = pq
+        parsed = {qid: self._parse(qs, mode) for qid, qs in queries.items()}
+        every = {qid: pq for qid, pq in parsed.items() if pq and (pq.every or pq.every_or)}
+        df = self._rank(
+            {qid: pq for qid, pq in parsed.items() if pq and qid not in every},
+            top_k, prefer_local, BATCH_RESULT_STRUCT,
+        )
+        if not every:
+            return df
+        for qid, pq in every.items():
+            df = df.unionByName(self._every(pq, top_k, prefer_local).select(
+                F.lit(qid).alias("query_id"), "doc_id", "score", "rank"
+            ))
+        # re-assert the output contract after the unions
+        return df.orderBy("query_id", "rank")
 
-        def _with_every(df: DataFrame) -> DataFrame:
-            for eqid, epq in every_pqs.items():
-                one = (
-                    self._search_every_or(epq, top_k)
-                    if epq.every_or
-                    else self._search_every(epq, top_k)
-                )
-                df = df.unionByName(one.select(
-                    F.lit(eqid).alias("query_id"), "doc_id", "score", "rank"
-                ))
-            # re-assert the output contract after the unions: rows
-            # grouped by query_id, rank ascending within each
-            return df.orderBy("query_id", "rank") if every_pqs else df
+    def _parse(self, query: str, mode: str) -> ParsedQuery | None:
+        """query string -> ParsedQuery with its prefixes, ranges and
+        wildcards expanded; None when nothing can match.  Match-all
+        queries come back unexpanded (``_every``)."""
+        if mode == "parse":
+            pq = parse_query(query, self.analyzer, fields=set(self.stats.get("fields", [])))
+        else:
+            pq = ParsedQuery(terms=self.analyzer.analyze_query(query), mode=mode)
+        if pq.every or pq.every_or:
+            return pq
+        if pq.empty:
+            return None
+        if (
+            pq.prefixes or pq.excluded_prefixes or pq.ranges
+            or pq.excluded_ranges or pq.wildcards or pq.excluded_wildcards
+        ):
+            pq = self._expand_prefixes(pq)
+            if pq is None or pq.empty:
+                return None
+        if (pq.phrases or pq.excluded_phrases or pq.slop_phrases
+                or pq.excluded_slop_phrases) and not self.stats.get("store_positions"):
+            raise ValueError(
+                "phrase query needs an index built with store_positions=True"
+            )
+        return pq
+
+    @staticmethod
+    def _fetch_terms(pq: ParsedQuery) -> list[str]:
+        """The terms the posting scan reads for ``pq``.  Excluded (NOT)
+        and negated-phrase terms ride the scan because their postings
+        drop matching docs, though they never score; ANDMAYBE terms score
+        without gating, REQUIRE terms gate without scoring."""
+        ex_phrase_terms = [t for ph in pq.excluded_phrases for t, _off in ph]
+        ex_phrase_terms += [t for ph, _s in pq.excluded_slop_phrases for t, _off in ph]
+        return list(dict.fromkeys(
+            [*pq.terms, *pq.excluded, *ex_phrase_terms, *pq.maybe_terms, *pq.filter_terms]
+        ))
+
+    def _rank(
+        self, parsed: dict[str, ParsedQuery], top_k: int, prefer_local: bool | None,
+        schema: StructType,
+    ) -> DataFrame:
+        """Top-k of each parsed query — the only ``make_wand_kernel``
+        call site.  One fetch of the union of the queries' terms and one
+        multi-epoch df sum serve every query; a query whose fetch set is
+        smaller than the union gets a term mask (a one-query batch never
+        does).  ``schema`` (RESULT_STRUCT or BATCH_RESULT_STRUCT) names
+        the output columns.  Local: a LocalRelation.  Distributed: a
+        lazy docid join."""
+        import pandas as pd
 
         if not parsed:
-            return _with_every(_empty_frame(self.spark, BATCH_RESULT_STRUCT))
-
-        def _q_terms(pq: ParsedQuery) -> list[str]:
-            ex_ph = [t for ph in pq.excluded_phrases for t, _off in ph]
-            ex_ph += [t for ph, _s in pq.excluded_slop_phrases for t, _off in ph]
-            return list(dict.fromkeys(
-                [*pq.terms, *pq.excluded, *ex_ph, *pq.maybe_terms, *pq.filter_terms]
-            ))
-
-        per_q_terms = {qid: _q_terms(pq) for qid, pq in parsed.items()}
-        all_terms = list(dict.fromkeys(t for ts in per_q_terms.values() for t in ts))
-        buckets = self._buckets_for(all_terms)
+            return _empty_frame(self.spark, schema)
+        fetch = {qid: self._fetch_terms(pq) for qid, pq in parsed.items()}
+        union = list(dict.fromkeys(t for terms in fetch.values() for t in terms))
+        buckets = self._buckets_for(union)
         if prefer_local is None:
             prefer_local = self.stats["n_docs"] <= 200_000
-        df_override = None
+        multi_epoch = len(self.epochs) > 1
         if prefer_local:
-            pdf = self._pruned_rows(all_terms, buckets)
-            if self._multi_epoch():
-                df_override = self._summed_dfs(pdf)
+            pdf = self._pruned_rows(union, buckets)
+            if len(pdf) == 0:
+                return _empty_frame(self.spark, schema)
+            df_override = self._summed_dfs(pdf) if multi_epoch else None
         else:
-            scan = self._pruned_scan(all_terms, buckets)
-            if self._multi_epoch():
-                df_override = self._summed_dfs_spark(scan)
-        kernels = {
-            qid: (
+            scan = self._pruned_scan(union, buckets)
+            df_override = self._summed_dfs_spark(scan) if multi_epoch else None
+        kernels = [
+            (
+                qid,
                 make_wand_kernel(
                     pq.terms, self.stats, top_k, pq.mode, df_override, pq.phrases,
                     fielded=pq.fielded, excluded=pq.excluded,
-                    groups=pq.groups or None,
-                    excluded_phrases=pq.excluded_phrases or None,
+                    groups=pq.groups or None, excluded_phrases=pq.excluded_phrases or None,
                     deleted=self.deleted,
-                    term_boosts=pq.boosts or None,
-                    maybe_terms=pq.maybe_terms or None,
-                    filter_terms=pq.filter_terms or None,
-                    tree=pq.tree,
+                    term_boosts=pq.boosts or None, maybe_terms=pq.maybe_terms or None,
+                    filter_terms=pq.filter_terms or None, tree=pq.tree,
                     slop_phrases=pq.slop_phrases or None,
                     excluded_slop_phrases=pq.excluded_slop_phrases or None,
                 ),
-                set(per_q_terms[qid]),
+                None if len(fetch[qid]) == len(union) else set(fetch[qid]),
             )
             for qid, pq in parsed.items()
-        }
+        ]
 
-        def batch_kernel(pdf):
-            import pandas as pd
-
-            outs = []
-            for qid, (kern, termset) in kernels.items():
-                sub = pdf[pdf["term"].isin(termset)]
-                if len(sub) == 0:
-                    continue
-                r = kern(sub.reset_index(drop=True))
-                if len(r):
-                    r = r.copy()
-                    r["query_id"] = qid
-                    outs.append(r)
-            if not outs:
-                return pd.DataFrame({"query_id": [], "docnum": [], "score": []})
-            return pd.concat(outs, ignore_index=True)[["query_id", "docnum", "score"]]
+        def run(chunk):
+            """(query id, kernel rows) per query over one chunk's rows."""
+            for qid, kernel, mask in kernels:
+                rows = chunk if mask is None else (
+                    chunk[chunk["term"].isin(mask)].reset_index(drop=True)
+                )
+                if len(rows):
+                    out = kernel(rows)
+                    if len(out):
+                        yield qid, out
 
         if prefer_local:
-            import pandas as pd
+            per_q: dict[str, list] = {}
+            for _, chunk in pdf.groupby("chunk"):
+                for qid, out in run(chunk.reset_index(drop=True)):
+                    per_q.setdefault(qid, []).append(out)
+            top_rows = []  # (query_id, docnum, score, rank), like _RANKED_STRUCT
+            for qid, outs in sorted(per_q.items()):
+                top = pd.concat(outs, ignore_index=True).sort_values(
+                    ["score", "docnum"], ascending=[False, True]
+                ).head(top_k)
+                top_rows += [
+                    (qid, int(d), float(s), rank)
+                    for rank, (d, s) in enumerate(zip(top["docnum"], top["score"]), 1)
+                ]
+        else:
+            from pyspark.sql import Window
 
-            outs = [
-                batch_kernel(grp.reset_index(drop=True))
-                for _, grp in pdf.groupby("chunk")
-            ] if len(pdf) else []
-            res = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-                {"query_id": [], "docnum": [], "score": []}
+            def batch_kernel(chunk):
+                outs = [out.assign(query_id=qid) for qid, out in run(chunk)]
+                if not outs:
+                    return pd.DataFrame({"query_id": [], "docnum": [], "score": []})
+                return pd.concat(outs, ignore_index=True)[["query_id", "docnum", "score"]]
+
+            scored = scan.groupBy("chunk").applyInPandas(
+                batch_kernel, "query_id string, docnum long, score double"
             )
-            if len(res) == 0:
-                return _with_every(_empty_frame(self.spark, BATCH_RESULT_STRUCT))
-            res = (
-                res.sort_values(["query_id", "score", "docnum"], ascending=[True, False, True])
-                .groupby("query_id")
-                .head(top_k)
+            w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docnum"))
+            top_rows = (
+                scored.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= top_k)
+                .collect()
             )
-            res["rank"] = res.groupby("query_id").cumcount() + 1
-            id_map = self._doc_ids(sorted({int(d) for d in res["docnum"]}))
-            return _with_every(_local_frame(
-                self.spark,
-                [
-                    list(res["query_id"]),
-                    [id_map[int(d)] for d in res["docnum"]],
-                    [float(x) for x in res["score"]],
-                    [int(x) for x in res["rank"]],
-                ],
-                BATCH_RESULT_STRUCT,
-            ))
-
-        from pyspark.sql import Window
-
-        scored = scan.groupBy("chunk").applyInPandas(
-            batch_kernel, "query_id string, docnum long, score double"
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docnum"))
-        top_rows = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= top_k)
-            .collect()
-        )
         if not top_rows:
-            return _with_every(_empty_frame(self.spark, BATCH_RESULT_STRUCT))
-        ranked = _local_frame(
-            self.spark,
-            [
-                [r["query_id"] for r in top_rows],
-                [int(r["docnum"]) for r in top_rows],
-                [float(r["score"]) for r in top_rows],
-                [int(r["rank"]) for r in top_rows],
-            ],
-            _BATCH_RANKED_STRUCT,
-        )
-        docnums = sorted({int(r["docnum"]) for r in top_rows})
-        pruned = self.docids.filter(F.col("docnum").isin(docnums))
-        return _with_every(
+            return _empty_frame(self.spark, schema)
+        qids, docnums, scores, ranks = (list(c) for c in zip(*top_rows))
+        if prefer_local:
+            id_map = self._doc_ids(sorted(set(docnums)))
+            cols = {"query_id": qids, "doc_id": [id_map[d] for d in docnums],
+                    "score": scores, "rank": ranks}
+            return _local_frame(self.spark, [cols[f] for f in schema.fieldNames()], schema)
+        ranked = _local_frame(self.spark, [qids, docnums, scores, ranks], _RANKED_STRUCT)
+        # docid fetch with the winners pushed into the scan as an IN
+        # filter: a broadcast join alone cannot prune the docids
+        # dimension, so every query would pay a full scan of it at scale;
+        # the docids parquet is docnum-contiguous-sorted, so the pushed
+        # filter skips whole row groups.
+        pruned = self.docids.filter(F.col("docnum").isin(sorted(set(docnums))))
+        return (
             pruned.join(F.broadcast(ranked), "docnum", "inner")
             .orderBy(F.asc("query_id"), F.asc("rank"))
-            .select("query_id", "doc_id", "score", "rank")
+            .select(*schema.fieldNames())
         )
 
     def _expand_term_range(
@@ -614,30 +566,29 @@ class BM25Index:
         bucket partitions (terms are hash-bucketed), which is the
         documented cost of multi-term expansion — the same full
         term-dictionary walk Whoosh does, shrunk by row-group skipping.
-        A None bound is open-ended."""
+        A None bound is open-ended.  Reads committed epochs only, like
+        every other scan of this handle."""
+
+        def within(col):
+            """The range predicate on ``col`` (a pyarrow field or a Spark
+            column); None when both bounds are open."""
+            flt = None
+            if lo is not None:
+                flt = col >= lo if lo_incl else col > lo
+            if hi is not None:
+                h = col <= hi if hi_incl else col < hi
+                flt = h if flt is None else flt & h
+            return flt
+
         try:
             import pyarrow.dataset as ds
 
-            if not hasattr(self, "_arrow_postings"):
-                self._arrow_postings = ds.dataset(
-                    f"{self.index_dir}/postings", format="parquet", partitioning="hive"
-                )
-            flt = None
-            if lo is not None:
-                flt = ds.field("term") >= lo if lo_incl else ds.field("term") > lo
-            if hi is not None:
-                h = ds.field("term") <= hi if hi_incl else ds.field("term") < hi
-                flt = h if flt is None else (flt & h)
-            t = self._arrow_postings.to_table(columns=["term"], filter=flt)
+            t = self._arrow_postings(within(ds.field("term")), columns=["term"])
             return sorted(set(t.column("term").to_pylist()))
         except Exception:
-            cond = F.lit(True)
-            if lo is not None:
-                cond = cond & (F.col("term") >= lo if lo_incl else F.col("term") > lo)
-            if hi is not None:
-                cond = cond & (F.col("term") <= hi if hi_incl else F.col("term") < hi)
-            rows = self.postings.filter(cond).select("term").distinct().collect()
-            return sorted(r["term"] for r in rows)
+            flt = within(F.col("term"))
+            scan = self.postings if flt is None else self.postings.filter(flt)
+            return sorted(r["term"] for r in scan.select("term").distinct().collect())
 
     def _expand_prefix(self, prefix: str) -> list[str]:
         """Prefix expansion == term range [prefix, prefix+MAXCHAR)."""
@@ -755,17 +706,8 @@ class BM25Index:
         the same bucket-partition pruning + term predicate pushdown."""
         import pyarrow.dataset as ds
 
-        if not hasattr(self, "_arrow_postings"):
-            self._arrow_postings = ds.dataset(
-                f"{self.index_dir}/postings", format="parquet", partitioning="hive"
-            )
         flt = ds.field("bucket").isin(sorted(set(buckets.values()))) & ds.field("term").isin(terms)
-        # same committed-epoch pruning as the Spark scan (_committed_scans)
-        epochs = sorted(int(e) for e in self.stats.get("epochs", {"0": None}))
-        flt &= (ds.field("group") < 1000) | ds.field("group").isin(
-            [1000 + e for e in epochs if e > 0]
-        )
-        return self._arrow_postings.to_table(filter=flt).to_pandas()
+        return self._arrow_postings(flt).to_pandas()
 
     def _pruned_rows(self, terms: list[str], buckets: dict[str, int]):
         """The pruned posting rows as pandas: pyarrow when it can read the
@@ -779,13 +721,8 @@ class BM25Index:
     def _docids_arrow(self, docnums: list[int]) -> dict[int, str]:
         import pyarrow.dataset as ds
 
-        if not hasattr(self, "_arrow_docids"):
-            self._arrow_docids = ds.dataset(
-                f"{self.index_dir}/docids", format="parquet", partitioning="hive"
-            )
-        epochs = sorted(int(e) for e in self.stats.get("epochs", {"0": None}))
-        t = self._arrow_docids.to_table(
-            filter=ds.field("docnum").isin(docnums) & ds.field("epoch").isin(epochs),
+        t = self._dataset("docids").to_table(
+            filter=ds.field("docnum").isin(docnums) & ds.field("epoch").isin(self.epochs),
             columns=["docnum", "doc_id"],
         )
         return dict(zip(t.column("docnum").to_pylist(), t.column("doc_id").to_pylist()))
@@ -800,48 +737,6 @@ class BM25Index:
                 .select("docnum", "doc_id").collect()
             )
             return {r["docnum"]: r["doc_id"] for r in rows}
-
-    def _search_local(
-        self,
-        all_terms: list[str],
-        buckets: dict[str, int],
-        top_k: int,
-        pq: ParsedQuery,
-    ) -> DataFrame:
-        """Driver-side scoring of the pruned posting rows (same kernels).
-        ``all_terms`` = scoring terms + excluded (NOT) terms — the fetch
-        set; the kernel separates their roles via ``pq``."""
-        pdf = self._pruned_rows(all_terms, buckets)
-        if len(pdf) == 0:
-            return self.empty_result()
-        df_override = self._summed_dfs(pdf) if self._multi_epoch() else None
-        kernel = make_wand_kernel(
-            pq.terms, self.stats, top_k, pq.mode, df_override, pq.phrases,
-            fielded=pq.fielded, excluded=pq.excluded,
-            groups=pq.groups or None, excluded_phrases=pq.excluded_phrases or None,
-            deleted=self.deleted,
-            term_boosts=pq.boosts or None, maybe_terms=pq.maybe_terms or None,
-            filter_terms=pq.filter_terms or None, tree=pq.tree,
-            slop_phrases=pq.slop_phrases or None,
-            excluded_slop_phrases=pq.excluded_slop_phrases or None,
-        )
-        outs = [kernel(grp.reset_index(drop=True)) for _, grp in pdf.groupby("chunk")]
-        import pandas as pd
-
-        res = pd.concat(outs, ignore_index=True) if outs else None
-        if res is None or len(res) == 0:
-            return self.empty_result()
-        res = res.sort_values(["score", "docnum"], ascending=[False, True]).head(top_k)
-        id_map = self._doc_ids([int(d) for d in res["docnum"]])
-        return _local_frame(
-            self.spark,
-            [
-                [id_map[int(d)] for d in res["docnum"]],
-                [float(x) for x in res["score"]],
-                list(range(1, len(res) + 1)),
-            ],
-            RESULT_STRUCT,
-        )
 
 
 def search_bm25(spark: SparkSession, index_dir: str, query: str, top_k: int = 10, mode: str = "and") -> DataFrame:

@@ -25,6 +25,12 @@ QUERIES = {
     "phrase": '"beta gamma"',
     "require": "alpha REQUIRE beta",
     "prefix": "fille* beta",  # dictionary expansion inside a batch
+    "fielded": "body:alpha beta",
+    "wildcard": "fill?r1*",
+    "range": "[filler1 TO filler3] alpha",
+    "tree": "(alpha beta) OR (gamma filler3)",
+    "slop_phrase": '"alpha gamma"~3',
+    "andmaybe": "alpha ANDMAYBE gamma",
 }
 
 

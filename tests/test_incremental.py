@@ -165,6 +165,45 @@ def test_uncommitted_epoch_is_not_served(spark, tmp_path):
     assert local == before
 
 
+def test_term_expansion_reads_only_committed_epochs(spark, tmp_path, monkeypatch):
+    """The term-dictionary walk behind prefix/range/wildcard expansion
+    skips an uncommitted epoch's orphan postings on the pyarrow path,
+    exactly like the Spark fallback: terms that exist only there neither
+    count toward MAX_EXPANSION nor widen the scan."""
+    import pyarrow.dataset as ds
+
+    fields = {"body": "content"}
+    cfg = EngineConfig(index=IndexConfig(n_buckets=4, bucket_groups=1, chunk_docs=32))
+    idx_dir = str(tmp_path / "idx")
+    build_index(spark, generate_corpus(spark, 120, seed=31), idx_dir, fields=fields, cfg=cfg)
+    with open(f"{idx_dir}/stats.json") as f:
+        stats_before = f.read()
+    b = generate_corpus(spark, 60, seed=32).withColumn(
+        "path", F.concat(F.lit("b/"), F.col("path"))
+    ).withColumn("doc_id", F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256))
+    append_epoch(spark, idx_dir, b, fields=fields, cfg=cfg)
+    with open(f"{idx_dir}/stats.json", "w") as f:
+        f.write(stats_before)  # roll back the commit: group=1001 is an orphan
+
+    def terms(group_filter):
+        t = ds.dataset(f"{idx_dir}/postings", format="parquet", partitioning="hive").to_table(
+            columns=["term"], filter=group_filter
+        )
+        return set(t.column("term").to_pylist())
+
+    orphan_only = terms(ds.field("group") == 1001) - terms(ds.field("group") < 1000)
+    assert orphan_only  # the setup does leave terms only the orphan holds
+    idx = BM25Index(spark, idx_dir)
+    arrow = idx._expand_term_range(None, None)
+    assert not orphan_only & set(arrow)
+
+    def no_arrow(*_a, **_k):
+        raise OSError("pyarrow cannot open this filesystem")
+
+    monkeypatch.setattr(idx, "_dataset", no_arrow)
+    assert arrow == idx._expand_term_range(None, None)
+
+
 def test_append_epoch_rejects_mismatched_fields(spark, tmp_path):
     fields = {"title": "path", "body": "content"}
     cfg = EngineConfig(index=IndexConfig(n_buckets=4, bucket_groups=1, chunk_docs=32))

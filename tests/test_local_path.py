@@ -165,3 +165,19 @@ def test_local_search_spark_fallback_matches(spark, idx, monkeypatch):
     batch_got = idx.search_many({f"q{i}": q for i, (q, _) in enumerate(queries)}, 5, "parse",
                                 prefer_local=True).collect()
     assert batch_got == batch_want
+
+
+def test_distributed_batch_answers_every_or_on_the_distributed_path(spark, idx, monkeypatch):
+    """A '* OR x' member of a search_many(prefer_local=False) batch takes
+    the batch's path: it never reads the driver-local posting rows."""
+    queries = {"a": "* OR alpha", "b": "beta"}
+    want = idx.search_many(queries, 4, "parse", prefer_local=True).collect()
+
+    def no_local(*_a, **_k):
+        raise AssertionError("driver-local posting read on the distributed path")
+
+    monkeypatch.setattr(idx, "_pruned_rows", no_local)
+    got = idx.search_many(queries, 4, "parse", prefer_local=False).collect()
+    key = lambda r: (r.query_id, r.doc_id, r.score, r.rank)  # noqa: E731
+    assert [key(r) for r in got] == [key(r) for r in want]
+    assert {r.query_id for r in got} == {"a", "b"}
