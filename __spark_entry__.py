@@ -99,7 +99,7 @@ _BM25_CTES = _bm25_ctes(BM25_TERMS)
 
 def _bm25_tree_sql(tree: tuple, k: int = 10) -> str:
     """Nested-boolean-tree BM25 oracle (round 5).  Whoosh matcher
-    semantics, mirrored by operators/wand.kernel_tree: And matches when
+    semantics, mirrored by operators/wand.kernel_and's tree seed: And matches when
     ALL children match and sums them; Or matches when ANY child matches
     and sums only the MATCHING children — a doc matching branch (a b)
     but not (c d) scores a+b even when c is present.  Per-term scores

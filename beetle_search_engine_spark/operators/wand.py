@@ -1,30 +1,32 @@
 """Query-time top-k kernels (SURVEY.md §4.2.3, J7/K1).
 
-Runs per docnum *chunk* under ``groupBy("chunk").applyInPandas`` — the
-posting rows for the query's terms, already bucket-pruned at the scan,
-are shuffled by chunk so every chunk scores independently with a bounded
-min-heap; the global merge is a Catalyst TakeOrderedAndProject over at
-most (chunks x k) rows.
+Runs per docnum *chunk* — under ``groupBy("chunk").applyInPandas`` on
+the distributed path, one chunk after another on the driver-local path.
+The posting rows for the query's terms, already bucket-pruned at the
+scan, are grouped by chunk so every chunk scores independently and
+returns at most k rows; ``plans/query._rank`` merges each query's
+(chunks x k) rows into its global top-k on the driver.
 
-Two modes, mirroring the reference's query semantics:
+Two kernels, mirroring the reference's query semantics:
 
-* ``and`` (default) — Whoosh's MultifieldParser default AndGroup: every
-  query term required, matching in >=1 field (reference:
-  src/search/search_bm25.py:32-36).  Implemented as vectorized sorted-set
-  intersection rarest-term-first, with row-range (block) skipping: rows of
-  later terms whose [doc_lo, doc_hi] cannot intersect the candidate range
-  are never decoded.
+* conjunctive — ``and`` (default), ``group`` and nested-tree queries.
+  ``and`` is Whoosh's MultifieldParser default AndGroup: every query
+  term required, matching in >=1 field (reference:
+  src/search/search_bm25.py:32-36).  ``group`` is Whoosh's AndGroup with
+  infix Or (``x OR y z`` == And(Or(x,y), z)): clause intersection, each
+  clause the union of its OR'd members' docs, scoring every matching
+  member (Whoosh's UnionMatcher).  A nested tree (``(a b) OR (c d)``)
+  seeds the candidates with its exact match set and scores.  All three
+  then run the same vectorized sorted-set intersection rarest-clause-
+  first, with row-range (block) skipping — rows whose [doc_lo, doc_hi]
+  cannot intersect the candidate range are never decoded — and the same
+  NOT / tombstone / phrase gates.
 
 * ``or`` — disjunctive block-max WAND: row-granularity pivoting on
   suffix-max upper bounds, block-max window check against the heap floor,
   and vectorized exact scoring of surviving windows.  Rows whose bound
   cannot beat the current top-k floor are skipped without decoding.
-
-* ``group`` — Whoosh's AndGroup with infix Or (``x OR y z`` ==
-  And(Or(x,y), z)): the conjunctive kernel generalized from term
-  intersection to clause intersection (each clause = union of its OR'd
-  members' docs); scoring sums every matching member, Whoosh's
-  UnionMatcher semantics.
+  Dense queries switch to a vectorized term-at-a-time accumulation.
 
 Exact scores are recomputed in float64 from (tf, dl, df) — the stored
 float32 ``max_score``/``block_max`` are upper bounds only — so results are
@@ -35,6 +37,7 @@ from __future__ import annotations
 
 import heapq
 import math
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -361,13 +364,12 @@ def make_wand_kernel(
     tree's match set (And = intersection, Or = union); scoring follows
     Whoosh's matchers exactly — And sums all children, Or sums only the
     MATCHING children, so a doc matching branch (a b) but not (c d)
-    scores a+b even when c is present.  The flat ``groups`` clauses (in
-    tree mode: phrase singletons + planner-appended expansions) stay
-    AND-side gates beside the tree, as do excluded/phrase/REQUIRE
-    constraints; ANDMAYBE terms add score on top.  Tree queries run an
-    exact per-chunk evaluation (decode + set ops) — no block-max
-    pruning across the tree, the same cost class as the flat group
-    kernel.
+    scores a+b even when c is present.  The tree is evaluated exactly per
+    chunk (decode + set ops, no block-max pruning across it) and seeds
+    the conjunctive kernel: the flat ``groups`` clauses (in tree mode:
+    phrase singletons + planner-appended expansions) gate beside it, as
+    do excluded/phrase/REQUIRE constraints; ANDMAYBE terms add score on
+    top.
 
     ``taat_density``: when the query's AVERAGE per-cursor posting density
     (total postings / (chunk span x number of cursors), so always in
@@ -409,8 +411,19 @@ def make_wand_kernel(
         [t] for t in dict.fromkeys(filter_terms or [])
         if t not in _covered and t not in qterms
     ]
-    # the scoring pass covers query terms + ANDMAYBE terms, minus REQUIRE
-    scoring_terms = [t for t in [*qterms, *maybe] if t not in filter_set]
+    # the row scoring pass covers query terms + ANDMAYBE terms, minus
+    # REQUIRE terms and the tree's leaves (the tree scores those itself)
+    row_scored = [
+        t for t in [*qterms, *maybe] if t not in filter_set and t not in tree_set
+    ]
+    # positional gates, applied in order: (mask function, phrase args,
+    # keep the docs it marks?)
+    phrase_gates = (
+        [(_phrase_mask, (p,), True) for p in phrases]
+        + [(_phrase_mask, (p,), False) for p in ex_phrases]
+        + [(_slop_phrase_mask, (p, s), True) for p, s in sl_phrases]
+        + [(_slop_phrase_mask, (p, s), False) for p, s in ex_sl_phrases]
+    )
 
     def _allowed(c: _Cursor) -> bool:
         want = fielded.get(c.term)
@@ -449,7 +462,51 @@ def make_wand_kernel(
         bst = term_boosts.get(cursor.term, 1.0) if term_boosts else 1.0
         return d, (sc * bst if bst != 1.0 else sc)
 
-    # ---------------- conjunctive (AND) ----------------
+    def _dropped(cursors: dict):
+        """Sorted docnums no result may hold: NOT-term docs + tombstones."""
+        ex = _excluded_docs(cursors) if excluded_set else None
+        if deleted is not None:
+            ex = deleted if ex is None else np.union1d(ex, deleted)
+        return ex
+
+    def _tree_eval(by_term: dict):
+        """(sorted docs, scores) of the tree's match set.  Each term's
+        postings decode ONCE (cached) into a sorted (docs, scores) pair;
+        And intersects + sums all children, Or unions + sums matching
+        children only — Whoosh's Intersection/UnionMatcher semantics
+        vectorized as numpy set ops."""
+        _tc: dict[str, tuple] = {}
+
+        def term_eval(t: str):
+            """(sorted unique docs, summed scores) for one term across
+            its fields' cursors in this chunk."""
+            if t not in _tc:
+                parts = [contribs(c, r) for c in by_term.get(t, ()) for r in c.rows]
+                d = np.concatenate([p[0] for p in parts] or [np.empty(0, dtype=np.int64)])
+                ud, inv = np.unique(d, return_inverse=True)
+                us = np.zeros(ud.size, dtype=np.float64)
+                np.add.at(us, inv, np.concatenate([p[1] for p in parts] or [np.empty(0)]))
+                _tc[t] = (ud, us)
+            return _tc[t]
+
+        def node_eval(n):
+            if n[0] == "term":
+                return term_eval(n[1])
+            parts = [node_eval(c) for c in n[1]]
+            if n[0] == "and":
+                docs = reduce(
+                    lambda x, y: np.intersect1d(x, y, assume_unique=True), (d for d, _ in parts)
+                )
+                return docs, sum(s2[np.searchsorted(d2, docs)] for d2, s2 in parts)
+            docs = reduce(np.union1d, (d for d, _ in parts))
+            out = np.zeros(docs.size, dtype=np.float64)
+            for d2, s2 in parts:
+                out[np.searchsorted(docs, d2)] += s2
+            return docs, out
+
+        return node_eval(tree)
+
+    # ---------------- conjunctive (and / group / tree) ----------------
     def kernel_and(pdf: pd.DataFrame) -> pd.DataFrame:
         cursors = _cursors_from_pdf(pdf)
         by_term: dict[str, list[_Cursor]] = {}
@@ -459,10 +516,14 @@ def make_wand_kernel(
             by_term.setdefault(t, []).append(c)
         if any(all(t not in by_term for t in cl) for cl in clauses):
             return EMPTY  # a clause has no member present in this chunk
+        # a tree seeds the candidates with its match set and its leaves'
+        # scores; the flat clauses then gate beside it
+        cand, scores = _tree_eval(by_term) if tree is not None else (None, None)
+        if cand is not None and cand.size == 0:
+            return EMPTY
         order = sorted(
             clauses, key=lambda cl: sum(c.n for t in cl for c in by_term.get(t, ()))
         )
-        cand = None
         for cl in order:
             parts = []
             for t in cl:
@@ -477,37 +538,25 @@ def make_wand_kernel(
             # any member matches; a singleton degenerates to its postings)
             docs_t = parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
             if cand is None:
-                cand = docs_t
+                cand, scores = docs_t, np.zeros(docs_t.size, dtype=np.float64)
             else:
-                cand = np.intersect1d(cand, docs_t, assume_unique=True)
+                keep = np.isin(cand, docs_t, assume_unique=True)
+                cand, scores = cand[keep], scores[keep]
             if cand.size == 0:
                 return EMPTY
-        ex = _excluded_docs(cursors) if excluded_set else None
-        if deleted is not None:
-            ex = deleted if ex is None else np.union1d(ex, deleted)
+        ex = _dropped(cursors)
         if ex is not None:
-            cand = cand[~np.isin(cand, ex)]
+            keep = ~np.isin(cand, ex)
+            cand, scores = cand[keep], scores[keep]
+        for mask_fn, args, want in phrase_gates:
             if cand.size == 0:
                 return EMPTY
-        for phrase in phrases:
-            cand = cand[_phrase_mask(phrase, cand, cursors)]
-            if cand.size == 0:
-                return EMPTY
-        for phrase in ex_phrases:
-            # negated phrase: drop docs where it matches in any field
-            cand = cand[~_phrase_mask(phrase, cand, cursors)]
-            if cand.size == 0:
-                return EMPTY
-        for phrase, slop in sl_phrases:
-            cand = cand[_slop_phrase_mask(phrase, slop, cand, cursors)]
-            if cand.size == 0:
-                return EMPTY
-        for phrase, slop in ex_sl_phrases:
-            cand = cand[~_slop_phrase_mask(phrase, slop, cand, cursors)]
-            if cand.size == 0:
-                return EMPTY
-        scores = np.zeros(cand.size, dtype=np.float64)
-        for t in scoring_terms:
+            keep = mask_fn(*args, cand, cursors)
+            keep = keep if want else ~keep
+            cand, scores = cand[keep], scores[keep]
+        if cand.size == 0:
+            return EMPTY
+        for t in row_scored:
             for c in by_term.get(t, ()):
                 for r in c.rows:
                     if r.doc_hi < cand[0] or r.doc_lo > cand[-1]:
@@ -516,131 +565,7 @@ def make_wand_kernel(
                     idx = np.searchsorted(cand, d)
                     m = (idx < cand.size) & (cand[np.minimum(idx, cand.size - 1)] == d)
                     scores[idx[m]] += sc[m]
-        if cand.size > k:
-            sel = np.lexsort((cand, -scores))[:k]
-        else:
-            sel = np.lexsort((cand, -scores))
-        return pd.DataFrame({"docnum": cand[sel], "score": scores[sel]})
-
-    # ---------------- nested boolean tree ----------------
-    def kernel_tree(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Exact per-chunk evaluation of a nested And/Or tree.  Each
-        term's postings decode ONCE (cached) into a sorted (docs,
-        scores) pair; And intersects + sums all children, Or unions +
-        sums matching children only — Whoosh's Intersection/UnionMatcher
-        semantics vectorized as numpy set ops.  Flat clauses (phrase
-        singletons, expansions, REQUIRE) gate beside the tree; excluded
-        terms/phrases, tombstones and ANDMAYBE compose as in the
-        conjunctive kernel."""
-        cursors = _cursors_from_pdf(pdf)
-        by_term: dict[str, list[_Cursor]] = {}
-        for (f, t), c in cursors.items():
-            if t in excluded_set or not _allowed(c):
-                continue
-            by_term.setdefault(t, []).append(c)
-
-        _tc: dict[str, tuple] = {}
-
-        def term_eval(t: str):
-            """(sorted unique docs, summed scores) for one term across
-            its fields' cursors in this chunk."""
-            if t not in _tc:
-                pd_, ps_ = [], []
-                for c in by_term.get(t, ()):
-                    for r in c.rows:
-                        d, sc = contribs(c, r)
-                        pd_.append(d)
-                        ps_.append(sc)
-                if not pd_:
-                    _tc[t] = (np.empty(0, dtype=np.int64), np.empty(0))
-                else:
-                    d = np.concatenate(pd_)
-                    s = np.concatenate(ps_)
-                    ud, inv = np.unique(d, return_inverse=True)
-                    us = np.zeros(ud.size, dtype=np.float64)
-                    np.add.at(us, inv, s)
-                    _tc[t] = (ud, us)
-            return _tc[t]
-
-        def node_eval(n):
-            if n[0] == "term":
-                return term_eval(n[1])
-            parts = [node_eval(c) for c in n[1]]
-            if n[0] == "and":
-                docs = parts[0][0]
-                for d2, _ in parts[1:]:
-                    docs = np.intersect1d(docs, d2, assume_unique=True)
-                    if docs.size == 0:
-                        return docs, np.empty(0)
-                out = np.zeros(docs.size, dtype=np.float64)
-                for d2, s2 in parts:
-                    out += s2[np.searchsorted(d2, docs)]
-                return docs, out
-            docs = parts[0][0]
-            for d2, _ in parts[1:]:
-                docs = np.union1d(docs, d2)
-            if docs.size == 0:
-                return docs, np.empty(0)
-            out = np.zeros(docs.size, dtype=np.float64)
-            for d2, s2 in parts:
-                if d2.size:
-                    out[np.searchsorted(docs, d2)] += s2
-            return docs, out
-
-        cand, scores = node_eval(tree)
-        if cand.size == 0:
-            return EMPTY
-        for cl in clauses:  # AND-side gates beside the tree
-            parts = [term_eval(t)[0] for t in cl]
-            parts = [p for p in parts if p.size]
-            if not parts:
-                return EMPTY
-            docs_t = parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
-            keep = np.isin(cand, docs_t, assume_unique=True)
-            cand, scores = cand[keep], scores[keep]
-            if cand.size == 0:
-                return EMPTY
-        ex = _excluded_docs(cursors) if excluded_set else None
-        if deleted is not None:
-            ex = deleted if ex is None else np.union1d(ex, deleted)
-        if ex is not None:
-            keep = ~np.isin(cand, ex)
-            cand, scores = cand[keep], scores[keep]
-            if cand.size == 0:
-                return EMPTY
-        for phrase in phrases:
-            keep = _phrase_mask(phrase, cand, cursors)
-            cand, scores = cand[keep], scores[keep]
-            if cand.size == 0:
-                return EMPTY
-        for phrase in ex_phrases:
-            keep = ~_phrase_mask(phrase, cand, cursors)
-            cand, scores = cand[keep], scores[keep]
-            if cand.size == 0:
-                return EMPTY
-        for phrase, slop in sl_phrases:
-            keep = _slop_phrase_mask(phrase, slop, cand, cursors)
-            cand, scores = cand[keep], scores[keep]
-            if cand.size == 0:
-                return EMPTY
-        for phrase, slop in ex_sl_phrases:
-            keep = ~_slop_phrase_mask(phrase, slop, cand, cursors)
-            cand, scores = cand[keep], scores[keep]
-            if cand.size == 0:
-                return EMPTY
-        for t in scoring_terms:
-            if t in tree_set:
-                continue  # tree leaves scored inside the tree
-            d, sc = term_eval(t)
-            if d.size == 0:
-                continue
-            idx = np.searchsorted(cand, d)
-            m = (idx < cand.size) & (cand[np.minimum(idx, cand.size - 1)] == d)
-            scores[idx[m]] += sc[m]
-        if cand.size > k:
-            sel = np.lexsort((cand, -scores))[:k]
-        else:
-            sel = np.lexsort((cand, -scores))
+        sel = np.lexsort((cand, -scores))[:k]
         return pd.DataFrame({"docnum": cand[sel], "score": scores[sel]})
 
     # ---------------- disjunctive: vectorized TAAT (dense queries) -----
@@ -672,9 +597,7 @@ def make_wand_kernel(
         ]
         if not cursors:
             return EMPTY
-        ex = _excluded_docs(all_cursors) if excluded_set else None
-        if deleted is not None:
-            ex = deleted if ex is None else np.union1d(ex, deleted)
+        ex = _dropped(all_cursors)
         # density over the SCORING cursors only: a whole-pdf n-sum also
         # counts excluded/off-field terms' rows, whose posting mass
         # would inflate the estimate and flip a sparse query to TAAT
@@ -778,9 +701,6 @@ def make_wand_kernel(
             }
         )
 
-    # "group" (And over OR clauses) is the conjunctive kernel with
-    # non-singleton clauses; a nested tree takes its dedicated kernel;
-    # pure "or" keeps the block-max WAND path
-    if tree is not None:
-        return kernel_tree
-    return kernel_and if mode in ("and", "group") else kernel_or
+    # "group" (And over OR clauses) and a nested tree run the conjunctive
+    # kernel; pure "or" keeps the block-max WAND path
+    return kernel_and if tree is not None or mode in ("and", "group") else kernel_or

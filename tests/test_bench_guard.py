@@ -75,6 +75,58 @@ def test_scaling_block_survives_a_dark_core_count(monkeypatch):
     assert bench._weather_flags(block, 0.0) == []
 
 
+def _stub_scaling(monkeypatch, tmp_path, probe):
+    """One quiet scaling attempt (1/2/4 cores at 1000/1800/3000 docs/s)
+    over a two-document suite, with ``probe`` as the analyzer probe."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from perfbench import host
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.table({"text": ["def main return", "class value"]}), sf / "documents.parquet")
+    dps = {"1": 1000.0, "2": 1800.0, "4": 3000.0}
+
+    def fake_run(cmd, **_kw):
+        out = {**GOOD, "docs_per_sec": dps[cmd[cmd.index("--cores") + 1]]}
+        return subprocess.CompletedProcess(cmd, 0, stdout=json.dumps(out) + "\n", stderr="")
+
+    monkeypatch.setattr(bench.subprocess, "run", fake_run)
+    monkeypatch.setattr(bench, "_load_avg", lambda: 0.0)
+    monkeypatch.setattr(bench, "SF_DIR", str(sf))
+    monkeypatch.setattr(bench, "SCALING_N", 1)
+    monkeypatch.setenv("BEETLE_BENCH_REPEATS", "1")
+    monkeypatch.setattr(host, "analyzer_scaling", probe)
+
+
+def test_scaling_4x_ceiling_comes_from_the_analyzer_probe(monkeypatch, tmp_path):
+    """The hardware ceiling is measured once per scaling run by
+    perfbench's bare-analyzer probe, not a constant from another box."""
+    calls = []
+
+    def probe(texts, workers):
+        calls.append((texts, workers))
+        return {"workers": workers, "efficiency": 0.6}
+
+    _stub_scaling(monkeypatch, tmp_path, probe)
+    sc = bench.run_scaling()["scaling_4x"]
+    assert calls == [(["def main return", "class value"], 4)]
+    assert sc["efficiency"] == 0.75
+    assert sc["hw_ceiling_efficiency_at_4"] == 0.6
+    assert sc["engine_vs_ceiling"] == round(0.75 / 0.6, 3)
+
+
+def test_a_failed_ceiling_probe_is_recorded_not_raised(monkeypatch, tmp_path):
+    def probe(_texts, _workers):
+        raise OSError("no semaphores")
+
+    _stub_scaling(monkeypatch, tmp_path, probe)
+    sc = bench.run_scaling()["scaling_4x"]
+    assert sc["efficiency"] == 0.75
+    assert sc["hw_ceiling_efficiency_at_4"] is None and sc["engine_vs_ceiling"] is None
+    assert "no semaphores" in sc["hw_ceiling_error"]
+
+
 def test_default_cores_follows_cpu_affinity(monkeypatch):
     """Without SPARK_GRAFT_CPUS a session gets the CPUs this process may
     run on, not a fixed count that oversubscribes a small box."""

@@ -20,6 +20,7 @@ from hypothesis import strategies as st
 from beetle_search_engine_spark.config import BM25Params, EngineConfig, IndexConfig
 from beetle_search_engine_spark.operators.build import _make_encode_kernel
 from beetle_search_engine_spark.operators.wand import make_wand_kernel
+from beetle_search_engine_spark.plans.parser import tree_terms
 
 VOCAB = [f"t{i}" for i in range(12)]
 
@@ -77,7 +78,51 @@ def brute_force_group(postings, n_docs, avgdl, clauses, k=10, k1=1.2, b=0.75, bo
     return out[:k]
 
 
-def run_kernels(seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False):
+def brute_force_tree(postings, n_docs, avgdl, tree, k=10, k1=1.2, b=0.75, boosts=None):
+    """Whoosh matcher semantics over a nested And/Or tree: And matches
+    when every child matches and sums them all; Or matches when any
+    child matches and sums only the matching children."""
+    boosts = boosts or {"body": 1.0}
+
+    def ev(node) -> dict[int, float]:
+        out: dict[int, float] = {}
+        if node[0] == "term":
+            for field in boosts:
+                pl = postings.get((field, node[1]), {})
+                idf = math.log(n_docs / (len(pl) + 1.0)) + 1.0
+                for doc, (tf, dl) in pl.items():
+                    w = tf * boosts[field]
+                    s = idf * w * (k1 + 1.0) / (w + k1 * (1.0 - b + b * dl / avgdl[field]))
+                    out[doc] = out.get(doc, 0.0) + s
+            return out
+        kids = [ev(c) for c in node[1]]
+        for kid in kids:
+            for doc, s in kid.items():
+                out[doc] = out.get(doc, 0.0) + s
+        if node[0] == "and":
+            out = {d: s for d, s in out.items() if all(d in kid for kid in kids)}
+        return out
+
+    return sorted(ev(tree).items(), key=lambda x: (-x[1], x[0]))[:k]
+
+
+def random_tree(rng):
+    """A two-level And/Or tree over VOCAB: the root's children are
+    terms or nodes of the other operator, each over 2-3 terms."""
+    top = rng.choice(["and", "or"])
+    inner = "or" if top == "and" else "and"
+
+    def leaf():
+        return ("term", rng.choice(VOCAB))
+
+    kids = [
+        (inner, tuple(leaf() for _ in range(rng.randint(2, 3)))) if rng.random() < 0.7 else leaf()
+        for _ in range(rng.randint(2, 3))
+    ]
+    return (top, tuple(kids))
+
+
+def run_kernels(seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False, tree=False):
     rng = random.Random(seed)
     cfg = EngineConfig(
         bm25=BM25Params(field_boosts={"body": 1.0}),
@@ -154,8 +199,13 @@ def run_kernels(seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False):
         out_frames.extend(rb.to_pandas() for rb in kernel(iter(batches)))
     enc = pd.concat(out_frames, ignore_index=True)
 
-    # query: 1-3 random terms, or (groups) 1-3 clauses of 1-3 members
-    if groups:
+    # query: 1-3 random terms, (groups) 1-3 clauses of 1-3 members, or
+    # (tree) a random two-level And/Or tree
+    qtree = random_tree(rng) if tree else None
+    if tree:
+        clauses = None
+        terms = tree_terms(qtree)
+    elif groups:
         clauses = [
             [rng.choice(VOCAB) for _ in range(rng.randint(1, 3))]
             for _ in range(rng.randint(1, 3))
@@ -166,7 +216,7 @@ def run_kernels(seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False):
         terms = [rng.choice(VOCAB) for _ in range(rng.randint(1, 3))]
     k = rng.choice([3, 10])
     wk = make_wand_kernel(
-        terms, stats, k, mode, taat_density=taat_density, groups=clauses
+        terms, stats, k, mode, taat_density=taat_density, groups=clauses, tree=qtree
     )
     results = []
     for chunk, grp in enc[enc.term.isin(terms)].groupby("chunk"):
@@ -175,7 +225,9 @@ def run_kernels(seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False):
     got = got.sort_values(["score", "docnum"], ascending=[False, True]).head(k)
     got_pairs = [(int(d), float(s)) for d, s in zip(got.docnum, got.score)]
 
-    if groups:
+    if tree:
+        want = brute_force_tree(postings, n_docs, avgdl, qtree, k=k)
+    elif groups:
         want = brute_force_group(postings, n_docs, avgdl, clauses, k=k)
     else:
         want = brute_force(postings, n_docs, avgdl, terms=terms, mode=mode, k=k)
@@ -221,13 +273,15 @@ def test_taat_equals_wand(seed, n_docs):
     seed=st.integers(0, 10_000),
     n_docs=st.integers(5, 120),
     hot_salts=st.sampled_from([1, 2, 3]),
+    tree=st.booleans(),
 )
-@settings(max_examples=120, deadline=None)
-def test_group_kernel_matches_brute_force(seed, n_docs, hot_salts):
+@settings(max_examples=240, deadline=None)
+def test_group_kernel_matches_brute_force(seed, n_docs, hot_salts, tree):
     """mode='group' (Whoosh And-of-Or): random clause structures vs the
     brute-force clause semantics — candidate iff every clause has a
-    matching member, score = sum over ALL matched terms."""
-    got, want = run_kernels(seed, n_docs, "group", hot_salts, groups=True)
+    matching member, score = sum over ALL matched terms.  With ``tree``,
+    a random nested And/Or tree vs the brute-force Whoosh matchers."""
+    got, want = run_kernels(seed, n_docs, "group", hot_salts, groups=not tree, tree=tree)
     assert len(got) == len(want), (got, want)
     for (gd, gs), (wd, ws) in zip(got, want):
         assert abs(gs - ws) < 1e-9, (got, want)

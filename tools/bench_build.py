@@ -15,7 +15,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from beetle_search_engine_spark.config import EngineConfig, IndexConfig  # noqa: E402
 from beetle_search_engine_spark.operators.build import build_index  # noqa: E402

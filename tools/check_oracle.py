@@ -2,18 +2,19 @@
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01,
 compare row count + column names + order-insensitive values.
 
-Usage: PYTHONPATH=/root/repo python tools/check_oracle.py [sf_dir] [name ...]
+Usage: python tools/check_oracle.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from beetle_search_engine_spark.sources.session import get_spark  # noqa: E402
@@ -34,8 +35,6 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main():
-    import os
-
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     os.environ["SPARK_GRAFT_ORACLE_SF"] = sf_dir  # data-dependent oracles
     # (ivf_ann_cosine centroid literals) re-fit on the checked sf tier
