@@ -50,9 +50,11 @@ class IndexConfig:
     # store per-posting position lists (delta+varint) — enables quoted
     # phrase queries; costs ~1 extra varint per token occurrence
     store_positions: bool = False
-    # JVM tokenizer: above this corpus size the distinct-token stem
-    # dimension is attached with a shuffle join instead of a broadcast
-    # (a web-scale code corpus's identifier vocabulary will not broadcast)
+    # jvm builds and appends of a stemming preset: above this many docs
+    # (of the build, or of the appended epoch) the write path's stem
+    # dimension (build._stem_stage) is attached to the pre-stem token
+    # stage with a shuffle join instead of a broadcast (a web-scale code
+    # corpus's identifier vocabulary will not broadcast)
     stem_broadcast_max_docs: int = 2_000_000
 
 
@@ -61,12 +63,13 @@ class EngineConfig:
     bm25: BM25Params = field(default_factory=BM25Params)
     index: IndexConfig = field(default_factory=IndexConfig)
     # "auto" (default): python chain below tokenize.AUTO_JVM_DOCS docs,
-    # jvm at/above.  "jvm": T1-T3 as Catalyst expressions + Porter over the
-    # *distinct-token* dimension only — the plan that survives 100x
+    # jvm at/above.  "jvm": T1-T3 as Catalyst expressions, emitting
+    # pre-stem rows; the write path then runs Porter over the
+    # *vocabulary* only (build._stem_stage) — the plan that survives 100x
     # (per-doc Python string churn saturates memory bandwidth first).
     # "python": full analyzer chain per doc in one Arrow mapInPandas —
     # zero shuffles, fastest measured at sandbox scales.  All three are
-    # parity-tested to produce identical token rows.
+    # parity-tested to produce identical posting rows.
     tokenizer: str = "auto"
     # analysis-chain preset (functions/analyzer.py): "whoosh" = the
     # reference chain incl. Porter; "sql" = the stem-free ANSI-SQL-

@@ -6,8 +6,9 @@ Pipeline (all DataFrame, one Python kernel):
   staged ── numbered(doc_id [+meta]) ──> docids dimension      [pruned pass]
   staged ── numbered(text cols) ── tokenize (Arrow UDF)
          ──> tokens (docnum, field, term, tf, dl)              [staged]
+  tokens ── [jvm + stemming preset: _stem_stage, stem dim ⋈ stage read]
   tokens ── groupBy(field,term) df+tfsum ──> avgdl, vocab, hot set (broadcast)
-  tokens ── [late-stem: ⋈ broadcast stem dim] ── +bucket +salt,
+  tokens ── +bucket +salt,
          [filter bucket % groups ∈ pending groups],
          repartition(xxhash64(bucket,salt))
          ── sortWithinPartitions(fid,term,docnum)
@@ -22,11 +23,13 @@ dl_totals, vocab, hot set), ``_encode_write`` (the encode plan under a
 64k Arrow batch), ``_manifest_ok`` (group resume check) and
 ``_stored_config`` (layout + scoring read back from stats.json).
 
-Round 7: jvm stemming builds stage PRE-STEM tokens (one regex pass) and
-attach the vocabulary-sized stem dimension from the stage read; the
-encode kernel merges same-doc stem collisions and is mapInArrow end to
-end (no per-row Python objects).  Docnums are a pure JVM projection
-(_metadata.row_index).  See OPTIMIZATION_r07.md.
+Stemming: the jvm tokenizer stages PRE-STEM tokens (one regex pass);
+every jvm build and append of a stemming preset, positions included,
+stems the stage read in ONE place, ``_stem_stage`` (vocabulary-sized stem
+dimension, exact df recount for hot candidates).  The encode kernel
+merges same-doc stem collisions (tf summed, positions interleaved) and
+is mapInArrow end to end (no per-row Python objects).  Docnums are a
+pure JVM projection (_metadata.row_index).  See OPTIMIZATION_r07.md.
 
 Physical layout: rows hold up to block_size*blocks_per_row postings each,
 chunk-aligned (a row never spans a chunk_docs docnum boundary), binary
@@ -69,9 +72,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, BM25Params, EngineConfig, IndexConfig
+from ..functions.analyzer import _cached_stem, get_analyzer
 from .codecs import decode_docgaps, decode_positions, varint_decode
 from .docnums import numbered, stage_corpus, write_docids
-from .tokenize import TOKENS_SCHEMA, TOKENS_SCHEMA_POS, tokenize
+from .tokenize import TOKENS_SCHEMA, TOKENS_SCHEMA_POS, resolve_impl, tokenize
 
 INDEX_LAYOUT_VERSION = 4  # bump when POSTINGS_SCHEMA / stats layout changes
 
@@ -159,23 +163,26 @@ def _make_encode_kernel(
         if n == 0:
             return None
         tneq = _term_neq(terms, n)
-        if posflat is None:
-            # late-stem merge: two source tokens of one doc stemming to
-            # the same term arrive as adjacent duplicate (fid, term,
-            # docnum) rows after the encode sort — merge them (sum tf)
-            # BEFORE span detection (df = run length) and gap encoding
-            # (strictly increasing docnums per row).  No-op when the
-            # stage was pre-merged (classic and positions paths).
-            dup = np.zeros(n, dtype=bool)
-            dup[1:] = (fids[1:] == fids[:-1]) & (docs[1:] == docs[:-1]) & ~tneq
-            if dup.any():
-                keep = np.flatnonzero(~dup)
-                tfs = np.add.reduceat(tfs, keep)
-                fids, buckets = fids[keep], buckets[keep]
-                docs, dls = docs[keep], dls[keep]
-                terms = terms.take(pa.array(keep))
-                n = docs.size
-                tneq = _term_neq(terms, n)
+        # stem merge: two source tokens of one doc stemming to the same
+        # term arrive as adjacent duplicate (fid, term, docnum) rows after
+        # the encode sort — merge them (sum tf, union positions) BEFORE
+        # span detection (df = run length) and gap encoding (strictly
+        # increasing docnums per row).  A merged posting's positions are
+        # already contiguous in posflat; one lexsort keyed by posting
+        # orders them.  No-op for a pre-stemmed (python chain) stage.
+        dup = np.zeros(n, dtype=bool)
+        dup[1:] = (fids[1:] == fids[:-1]) & (docs[1:] == docs[:-1]) & ~tneq
+        if dup.any():
+            if posflat is not None:
+                posting = np.repeat(np.cumsum(~dup), tfs)
+                posflat = posflat[np.lexsort((posflat, posting))]
+            keep = np.flatnonzero(~dup)
+            tfs = np.add.reduceat(tfs, keep)
+            fids, buckets = fids[keep], buckets[keep]
+            docs, dls = docs[keep], dls[keep]
+            terms = terms.take(pa.array(keep))
+            n = docs.size
+            tneq = _term_neq(terms, n)
         key_change = np.empty(n, dtype=bool)
         key_change[0] = True
         key_change[1:] = (fids[1:] != fids[:-1]) | tneq
@@ -425,6 +432,81 @@ def _term_stats(
             if d > thr:
                 hot_df[key] = d
     return avgdl, dl_totals, vocab_size, hot_df
+
+
+def _stem_stage(
+    raw: DataFrame, stem: bool, thr: int, broadcast: bool
+) -> tuple[DataFrame, DataFrame, dict, list[DataFrame]]:
+    """The one stemming point of a jvm-tokenized stage: (tokens, dfs,
+    exact_df, held) from the staged token rows ``raw``.
+
+    ``dfs`` is the (field, term, df, tfsum) frame ``_term_stats`` reads.
+    Without ``stem`` the stage is final: tokens = ``raw``.  With it,
+    ``raw`` holds PRE-STEM rows (``tokenize_jvm`` never stems), so Python
+    stems the vocabulary-sized term dimension of the aggregated frame,
+    not the token stream, and the mapping is attached to the stage read
+    (broadcast, or a shuffle join when ``broadcast`` is False — a
+    web-scale identifier vocabulary will not broadcast); ``pos`` rides
+    along.  A doc holding two source tokens with one stem then has
+    duplicate (field, term, docnum) rows, which the encode kernel merges
+    after its sort.  Staging once and stemming the stage read runs the
+    regex+explode subtree once; a stem join inside the tokenizer would
+    run it twice (no exchange boundary for ReuseExchange, see
+    OPTIMIZATION_r07.md).
+
+    Summed row counts overcount df exactly when one doc holds >= 2
+    source tokens sharing a stem.  Only the hot set needs df exactly (it
+    is injected into the encode kernel for salted terms; every other df
+    is the kernel's post-merge run length), and overcounts are one-sided,
+    so candidates = row-count df > ``thr`` with several source tokens are
+    a superset of the true hot set: ``exact_df`` recounts just those from
+    a distinct over their rows.  ``held`` lists the persisted frames the
+    caller unpersists once the encode has run."""
+    dfs = _term_frame(raw)
+    if not stem:
+        return raw, dfs, {}, []
+
+    def _stem_batch(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"term": pdf["term"], "_stem": [_cached_stem(t) for t in pdf["term"]]}
+            )
+
+    dfs_u = dfs.persist(StorageLevel.MEMORY_ONLY)
+    stems_dim = (
+        dfs_u.select("term").distinct()
+        .mapInPandas(_stem_batch, "term string, _stem string")
+        .persist(StorageLevel.MEMORY_ONLY)
+    )
+    tokens = raw.join(F.broadcast(stems_dim) if broadcast else stems_dim, "term").select(
+        "docnum", "field", F.col("_stem").alias("term"), "tf", "dl",
+        *(["pos"] if "pos" in raw.columns else []),
+    )
+    dfs = (
+        dfs_u.join(F.broadcast(stems_dim), "term")
+        .groupBy("field", F.col("_stem").alias("term"))
+        .agg(
+            F.sum("df").alias("df"),
+            F.sum("tfsum").alias("tfsum"),
+            F.count(F.lit(1)).alias("_nsrc"),
+        )
+    ).persist(StorageLevel.MEMORY_ONLY)
+    cand = sorted({
+        r["term"]
+        for r in dfs.filter((F.col("df") > thr) & (F.col("_nsrc") > 1)).select("term").collect()
+    })
+    exact_df = {}
+    if cand:
+        src = F.broadcast(stems_dim.filter(F.col("_stem").isin(cand)))
+        exact_df = {
+            (r["field"], r["term"]): int(r["df"])
+            for r in raw.join(src, "term")
+            .select("field", F.col("_stem").alias("term"), "docnum")
+            .distinct()
+            .groupBy("field", "term").agg(F.count(F.lit(1)).alias("df"))
+            .collect()
+        }
+    return tokens, dfs, exact_df, [dfs, stems_dim, dfs_u]
 
 
 def _encode_write(
@@ -728,39 +810,13 @@ def build_index(
         # pruned numbering pass: only the text source columns ride through
         # Arrow into the tokenizer (no doc_id strings, no meta)
         tok_input = numbered(staged, offsets, sorted(set(fields.values())))
-
-        # LATE STEMMING (round 7): for the stemming JVM chain the stem legs
-        # inside tokenize_jvm re-evaluate the whole regex+explode subtree —
-        # there is no exchange boundary between the distinct-token leg and
-        # the join probe, so Catalyst computes the token stream twice (and
-        # ReuseExchange cannot fire; A/B'd in OPTIMIZATION_r07.md).  Instead
-        # the stage is written PRE-STEM (one regex pass, one exchange) and
-        # the stem dimension is built from the column-pruned stage read;
-        # both downstream consumers attach it with a broadcast join.  A doc
-        # holding two source tokens with one stem then contributes duplicate
-        # (field, term, docnum) rows — the encode kernel merges them after
-        # its sort (adjacent by construction), and df is corrected exactly
-        # below.  Positions builds keep the classic path (their position
-        # lists would need an interleaving merge).
-        from ..functions.analyzer import get_analyzer as _get_analyzer
-        from .tokenize import resolve_impl as _resolve_impl
-
-        _master = str(spark.conf.get("spark.master", ""))
-        _impl = _resolve_impl(cfg.tokenizer, n_docs, _master)
-        late_stem = (
-            _impl == "jvm"
-            and _get_analyzer(cfg.analyzer).do_stem
-            and not cfg.index.store_positions
-        )
+        impl = resolve_impl(cfg.tokenizer, n_docs, str(spark.conf.get("spark.master", "")))
         tokenize(
             tok_input,
             fields,
-            _impl,
+            impl,
             analyzer_name=cfg.analyzer,
-            broadcast_stems=n_docs <= cfg.index.stem_broadcast_max_docs,
             positions=cfg.index.store_positions,
-            n_docs_hint=n_docs,
-            apply_stems=not late_stem,
         ).write.mode("overwrite").parquet(stage_path)
         if docids_fut is not None:
             docids_fut.result()  # surfaces any docids-write failure here
@@ -770,108 +826,19 @@ def build_index(
             # never started, else awaited: no helper thread or Spark job
             # outlives a failed build (the tokenize error is the one raised)
             _docids_pool.shutdown(wait=True, cancel_futures=True)
-    raw_tokens = spark.read.parquet(stage_path)
-
-    stems_dim = None
-    tokens = raw_tokens  # re-bound below for the late-stem path
-
-    # ---- one aggregation pass over the STAGED rows feeds everything:
-    # df + per-term tf sums (map-side combined); avgdl/vocab/hot derive
-    # from this much smaller frame.  In the late-stem path the heavy agg
-    # runs over the PRE-STEM rows (identical cost to the classic path —
-    # no token-stream broadcast probe), the stem dimension is derived
-    # from its vocabulary-sized OUTPUT (not from a second pass over the
-    # token stream), and the token→stem mapping is applied vocab-side.
+    # ---- one aggregation pass over the STAGED rows feeds every
+    # statistic (avgdl, vocab, hot set); a jvm stage of a stemming preset
+    # is stemmed here, vocabulary-side (see _stem_stage).  A partial
+    # resume recomputes the same values the completed groups were
+    # encoded with (same fingerprint, same config).
     thr = cfg.index.hot_df_threshold or max(5000, n_docs // 50)
-    dfs_u = _term_frame(raw_tokens)
-    dfs, exact_df = dfs_u, {}
-    if late_stem:
-        from ..functions.analyzer import _cached_stem
-
-        def _stem_batch(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {"term": pdf["term"], "_stem": [_cached_stem(t) for t in pdf["term"]]}
-                )
-
-        dfs_u = dfs_u.persist(StorageLevel.MEMORY_ONLY)
-        stems_dim = (
-            dfs_u.select("term").distinct()
-            .mapInPandas(_stem_batch, "term string, _stem string")
-            .persist(StorageLevel.MEMORY_ONLY)
-        )
-        _stems = (
-            F.broadcast(stems_dim)
-            if n_docs <= cfg.index.stem_broadcast_max_docs
-            else stems_dim
-        )
-        tokens = raw_tokens.join(_stems, "term").select(
-            "docnum", "field", F.col("_stem").alias("term"), "tf", "dl"
-        )
-        # vocab-side stem merge: summed row counts overcount df exactly
-        # when one doc holds >= 2 source tokens sharing a stem.  That
-        # can only matter for terms the build must know df EXACTLY for —
-        # the hot set (df is injected into the encode kernel for salted
-        # terms; every other term's df is derived inside the kernel from
-        # the post-merge run length).  Overcounts are one-sided
-        # (row_sum >= true df), so candidates = row_sum > thr is a
-        # SUPERSET of the true hot set; re-derive exact df just for the
-        # multi-source candidates from a distinct over their rows.
-        dfs = (
-            dfs_u.join(F.broadcast(stems_dim), "term")
-            .groupBy("field", F.col("_stem").alias("term"))
-            .agg(
-                F.sum("df").alias("df"),
-                F.sum("tfsum").alias("tfsum"),
-                F.count(F.lit(1)).alias("_nsrc"),
-            )
-        ).persist(StorageLevel.MEMORY_ONLY)
-        cand = [
-            (r["field"], r["term"])
-            for r in dfs.filter((F.col("df") > thr) & (F.col("_nsrc") > 1))
-            .select("field", "term").collect()
-        ]
-        if cand:
-            # source tokens of the candidates only — a tiny literal map
-            # (no second stem broadcast, no full-stage probe): filter the
-            # PRE-STEM stage to those tokens, remap, distinct, count
-            cand_terms = sorted({t for _f, t in cand})
-            src_rows = stems_dim.filter(F.col("_stem").isin(cand_terms)).collect()
-            tok2stem = {r["term"]: r["_stem"] for r in src_rows}
-            if len(tok2stem) <= 10_000:
-                remapped = raw_tokens.filter(
-                    F.col("term").isin(sorted(tok2stem))
-                ).select(
-                    "field",
-                    F.create_map(
-                        *[F.lit(x) for kv in tok2stem.items() for x in kv]
-                    )[F.col("term")].alias("term"),
-                    "docnum",
-                )
-            else:
-                # a literal map this large would bloat the plan — join
-                # the (still vocabulary-bounded) source-token dim instead
-                _src = F.broadcast(
-                    stems_dim.filter(F.col("_stem").isin(cand_terms))
-                )
-                remapped = raw_tokens.join(_src, "term").select(
-                    "field", F.col("_stem").alias("term"), "docnum"
-                )
-            exact_rows = (
-                remapped.distinct()
-                .groupBy("field", "term").agg(F.count(F.lit(1)).alias("df"))
-                .collect()
-            )
-            exact_df = {(r["field"], r["term"]): int(r["df"]) for r in exact_rows}
-
-    # ---- avgdl/vocab + hot-term detection (Zipf head -> salted encode).
-    # Late-stem: candidates' row-count df is replaced by the exact
-    # recount, so the hot SET and every injected df equal the classic
-    # path bit-for-bit.  A partial resume recomputes the same values the
-    # completed groups were encoded with (same fingerprint, same config).
+    tokens, dfs, exact_df, held = _stem_stage(
+        spark.read.parquet(stage_path),
+        impl == "jvm" and get_analyzer(cfg.analyzer).do_stem,
+        thr,
+        n_docs <= cfg.index.stem_broadcast_max_docs,
+    )
     avgdl, dl_totals, vocab_size, hot_df = _term_stats(dfs, fields, n_docs, thr, exact_df)
-    dfs.unpersist()
-    dfs_u.unpersist()
 
     stats = {
         "n_docs": n_docs,
@@ -904,11 +871,13 @@ def build_index(
     }
 
     # ---- salted, bucketed encode in resumable groups
-    group_metrics = _encode_groups(
-        spark, tokens, index_dir, cfg, stats, hot_df, fp, cfg_hash, resume
-    )
-    if stems_dim is not None:
-        stems_dim.unpersist()
+    try:
+        group_metrics = _encode_groups(
+            spark, tokens, index_dir, cfg, stats, hot_df, fp, cfg_hash, resume
+        )
+    finally:
+        for frame in held:
+            frame.unpersist()
 
     shutil.rmtree(f"{index_dir}/_stage", ignore_errors=True)
     with open(stats_path, "w") as f:

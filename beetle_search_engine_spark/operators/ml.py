@@ -517,7 +517,7 @@ def pq_encode(
 
 def _np_adc(codes, luts_np):
     """Sum the per-subspace LUT rows selected by a codes matrix — the
-    shared inner kernel of every ADC scan (inline, stored, and IVFPQ
+    shared inner kernel of the kernel ADC scans (inline and IVFPQ
     per-cluster).  Accumulates in codebook order j=0..m-1, matching
     pq_adc_col's expression order so all paths agree bit-for-bit."""
     import numpy as np
@@ -526,36 +526,6 @@ def _np_adc(codes, luts_np):
     for j, lut in enumerate(luts_np):
         adc += lut[codes[:, j]]
     return adc
-
-
-def adc_scan_stored(codes_df: DataFrame, luts, id_col: str = "vec_id") -> DataFrame:
-    """(id, adc) over a STORED codes table via an Arrow numpy kernel —
-    MEASURED AND REJECTED for the stored hot path (kept as the recorded
-    alternative + kernel-parity surface).  Round 6 re-measured the two
-    forms at 2M rows (BENCH/BASELINE.md "ADC scan A/B, round 6"): the
-    ``pq_adc_col`` expression scan wins 3.3x (0.20 s vs 0.70 s warm at
-    m=8/ksub=16; 0.21 s vs 0.65 s at the FAISS-realistic m=16/ksub=256)
-    even though its tree gets ZERO WholeStageCodegen spans — m element_at
-    lookups per row are cheap enough interpreted, while this kernel pays
-    Arrow ser/de on every (id, codes) row.  The round-5 "13x cliff"
-    belongs to the ENCODE tree (m*ksub*dsub ≈ 128+ subexpressions per
-    row, see pq_encode) — it was misattributed to this ADC-only scan;
-    the inline paths keep their fused kernels because encode forces the
-    rows through Python anyway and the ADC rides along free."""
-    import numpy as np
-    import pandas as pd
-
-    luts_np = [np.asarray(lut, dtype=np.float64) for lut in luts]
-
-    def kern(it):
-        for pdf in it:
-            codes = np.asarray(pdf["codes"].to_list(), dtype=np.int64)
-            yield pd.DataFrame({id_col: pdf[id_col], "adc": _np_adc(codes, luts_np)})
-
-    id_type = dict(codes_df.dtypes)[id_col]
-    return codes_df.select(id_col, "codes").mapInPandas(
-        kern, f"{id_col} {id_type}, adc double"
-    )
 
 
 def pq_adc_col(codes_col, luts) -> F.Column:
@@ -712,8 +682,8 @@ def pq_search_stored(
     table (driver read of m*ksub rows).  The scan is the pure-expression
     ``pq_adc_col`` (m element_at lookups + adds per row, JVM-side, zero
     Python in the hot path): the round-6 A/B at 2M rows measured it 3.3x
-    FASTER than the Arrow kernel alternative (adc_scan_stored's
-    docstring has the numbers) — the round-5 "13x cliff" belongs to the
+    FASTER than an Arrow numpy kernel scan (BENCH/BASELINE.md "ADC scan
+    A/B, round 6" has the numbers) — the round-5 "13x cliff" belongs to the
     inline ENCODE tree, not this small ADC tree; tests/test_pq.py pins
     stored-vs-inline rank identity across the swap."""
     cbs = _read_codebooks(spark, pq_path)
@@ -943,7 +913,7 @@ def ivfpq_search_stored(
     / nprobe=4: 0.50 s vs 0.62 s for the per-cluster Arrow kernel it
     replaced — same win as pq_search_stored's, smaller margin because
     the kernel amortized Arrow cost over the branchy LUT select (see
-    adc_scan_stored's docstring for the full re-measurement record)."""
+    BENCH/BASELINE.md "ADC scan A/B, round 6" for the full record)."""
     import numpy as np
 
     crows = spark.read.parquet(f"{path}/centroids").collect()

@@ -6,23 +6,19 @@ stem-free DuckDB-reproducible chain):
 
 * :func:`tokenize_jvm` — T1-T3 (regex tokenize, per-token lowercase,
   stop/minsize) run as Catalyst expressions (codegen, no Python in the
-  per-token path); T4 (Porter) runs in Python over the batch's *distinct*
-  tokens only — a vocabulary-sized dimension, ~3 orders of magnitude
-  smaller than the token stream — then a join + re-aggregation merges
-  tokens that stem to the same term.  This keeps the memory-bandwidth-
-  heavy string work in the JVM, which matters both for absolute speed and
-  for parallel scaling (Python string churn saturates a node's memory
-  bandwidth long before its cores).  The stem dimension is broadcast by
-  default; pass ``broadcast_stems=False`` to use a shuffle join instead —
-  a 100 TB code corpus has an identifier vocabulary that will not
-  broadcast (build_index flips this automatically above
-  ``IndexConfig.stem_broadcast_max_docs``).  For stem-free presets the
-  whole path is pure Catalyst — zero Python.
+  per-token path).  This keeps the memory-bandwidth-heavy string work in
+  the JVM, which matters both for absolute speed and for parallel
+  scaling (Python string churn saturates a node's memory bandwidth long
+  before its cores).  Its rows are PRE-STEM: T4 (Porter) is not run here
+  even for a stemming preset.  The index write path stems them once, over
+  the vocabulary-sized term dimension (``build._stem_stage``), and its
+  encode kernel merges same-doc rows whose tokens share a stem.  For
+  stem-free presets the rows are final — zero Python.
 
 * :func:`tokenize_python` — the whole chain per document inside
   mapInPandas (SURVEY.md M6).  Shares functions/analyzer.py with the
   pure-Python oracle, so it is the semantic reference; a parity test pins
-  the JVM path to it.
+  the JVM path to it (JVM rows stemmed and merged on the test side).
 
 ``impl="auto"`` picks by corpus size (``n_docs_hint``): the Python chain
 wins at sandbox scales (this VM's memory bandwidth, not CPU, is the
@@ -102,21 +98,14 @@ def tokenize_jvm(
     corpus: DataFrame,
     fields: dict[str, str],
     analyzer_name: str = "whoosh",
-    broadcast_stems: bool = True,
     positions: bool = False,
-    apply_stems: bool = True,
 ) -> DataFrame:
-    """JVM tokenize/stop + distinct-token Python stemming (if the preset
-    stems at all — the 'sql' preset is pure Catalyst end-to-end).
-
-    ``apply_stems=False`` (round 7, build-internal): emit PRE-STEM tokens
-    in the ``term`` column and skip the stem dimension entirely.  The
-    stemming preset's stem legs otherwise re-evaluate the whole
-    regex+explode subtree (no exchange boundary → no ReuseExchange), so
-    ``build_index`` stages the un-stemmed aggregation once and attaches
-    stems from the *staged parquet* instead — one regex pass over the
-    corpus instead of two.  Callers other than the build keep the
-    default (semantics of the preset, parity-tested)."""
+    """T1-T3 of the preset as Catalyst expressions: one row per (doc,
+    field, token).  For a stemming preset ``term`` holds the PRE-STEM
+    token — T4 and the merge of tokens sharing a stem are the index
+    write path's job (``build._stem_stage`` + the encode kernel), so
+    Python runs once per vocabulary term, never per token, and the
+    regex+explode subtree is evaluated once."""
     analyzer = get_analyzer(analyzer_name)
     parts = []
     for fname, col in sorted(fields.items()):
@@ -146,7 +135,7 @@ def tokenize_jvm(
                     "docnum",
                     "field",
                     F.size(F.col("kept")).alias("dl"),
-                    F.posexplode("kept").alias("tokpos", "token"),
+                    F.posexplode("kept").alias("tokpos", "term"),
                 )
             )
         else:
@@ -157,34 +146,12 @@ def tokenize_jvm(
                     "docnum",
                     "field",
                     F.size("toks").alias("dl"),
-                    F.explode("toks").alias("token"),
+                    F.explode("toks").alias("term"),
                 )
             )
     exploded = parts[0]
     for p in parts[1:]:
         exploded = exploded.unionByName(p)
-
-    if analyzer.do_stem and apply_stems:
-        from ..functions.analyzer import _cached_stem
-
-        def stem_batch(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {"token": pdf["token"], "term": [_cached_stem(t) for t in pdf["token"]]}
-                )
-
-        # vocabulary-sized dimension (distinct is map-side combined);
-        # broadcast keeps the stem attach map-side, so the whole tokenize
-        # costs ONE shuffle (the tf aggregation).  At vocabularies too
-        # large to broadcast — a 100 TB code corpus's identifier space —
-        # broadcast_stems=False makes this a shuffle join on token
-        # (same semantics, one extra shuffle, no driver/executor OOM).
-        stems = exploded.select("token").distinct().mapInPandas(stem_batch, "token string, term string")
-        if broadcast_stems:
-            stems = F.broadcast(stems)
-        exploded = exploded.join(stems, "token")
-    else:
-        exploded = exploded.withColumn("term", F.col("token"))
 
     aggs = [F.count(F.lit(1)).cast("int").alias("tf"), F.first("dl").alias("dl")]
     if positions:
@@ -265,15 +232,15 @@ def tokenize(
     fields: dict[str, str],
     impl: str = "jvm",
     analyzer_name: str = "whoosh",
-    broadcast_stems: bool = True,
     positions: bool = False,
     n_docs_hint: int | None = None,
-    apply_stems: bool = True,
 ) -> DataFrame:
+    """Token rows of ``corpus`` by the resolved ``impl``.  The python
+    chain's rows are final; the jvm chain's rows of a stemming preset are
+    pre-stem (see :func:`tokenize_jvm`), and stemming them is the write
+    path's job."""
     master = str(corpus.sparkSession.conf.get("spark.master", ""))
     impl = resolve_impl(impl, n_docs_hint, master)
     if impl == "jvm":
-        return tokenize_jvm(
-            corpus, fields, analyzer_name, broadcast_stems, positions, apply_stems
-        )
+        return tokenize_jvm(corpus, fields, analyzer_name, positions)
     return tokenize_python(corpus, fields, analyzer_name, positions)

@@ -29,15 +29,16 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import DEFAULT, EngineConfig
+from ..functions.analyzer import get_analyzer
 from ..operators.build import (
     _encode_write,
+    _stem_stage,
     _stored_config,
-    _term_frame,
     _term_stats,
     build_index,
 )
 from ..operators.docnums import numbered, stage_corpus, write_docids
-from ..operators.tokenize import tokenize
+from ..operators.tokenize import resolve_impl, tokenize
 
 
 def append_epoch(
@@ -95,18 +96,18 @@ def append_epoch(
     # caller's cfg: epoch rows must stay chunk-aligned and bound-compatible
     frozen = _stored_config(stats, cfg)
     stage_path = f"{index_dir}/_stage/epoch_tokens"
+    impl = resolve_impl(cfg.tokenizer, n_new, str(spark.conf.get("spark.master", "")))
     tokenize(
         numbered(staged, offsets, sorted(set(fields.values()))),
         fields,
-        cfg.tokenizer,
+        impl,
         analyzer_name=frozen.analyzer,
         positions=frozen.index.store_positions,
-        n_docs_hint=n_new,
     ).write.mode("overwrite").parquet(stage_path)
-    tokens = spark.read.parquet(stage_path)
 
     # updated global stats (weighted avgdl over old + new), from one
-    # aggregation pass over the epoch's tokens.  The exact per-field
+    # aggregation pass over the epoch's tokens (a jvm stage of a stemming
+    # preset is stemmed by the build's _stem_stage).  The exact per-field
     # token totals come from stats["dl_totals"] when present: deriving
     # old mass as avgdl*n would count the build's 1.0 empty-field
     # placeholder as real tokens and diverge from a clean rebuild (the
@@ -115,7 +116,13 @@ def append_epoch(
     # offset, which can be sparse after an optimize.
     n_total = int(stats["n_docs"]) + n_new
     thr = cfg.index.hot_df_threshold or max(5000, n_total // 50)
-    _, sums, _, hot_df = _term_stats(_term_frame(tokens), fields, n_new, thr)
+    tokens, dfs, exact_df, held = _stem_stage(
+        spark.read.parquet(stage_path),
+        impl == "jvm" and get_analyzer(frozen.analyzer).do_stem,
+        thr,
+        n_new <= cfg.index.stem_broadcast_max_docs,
+    )
+    _, sums, _, hot_df = _term_stats(dfs, fields, n_new, thr, exact_df)
     dl_totals = dict(stats.get("dl_totals", {}))
     avgdl_new = {}
     for fname in set(stats["avgdl"]) | set(fields):
@@ -128,10 +135,14 @@ def append_epoch(
         avgdl_new[fname] = total / n_total if total > 0 else 1.0
 
     enc_stats = {"n_docs": n_total, "avgdl": avgdl_new, "fields": sorted(fields)}
-    _encode_write(
-        spark, tokens, frozen, enc_stats, hot_df,
-        f"{index_dir}/postings/group={1000 + epoch}", epoch=epoch,
-    )
+    try:
+        _encode_write(
+            spark, tokens, frozen, enc_stats, hot_df,
+            f"{index_dir}/postings/group={1000 + epoch}", epoch=epoch,
+        )
+    finally:
+        for frame in held:
+            frame.unpersist()
 
     # NOTE: vocab_size stays the base build's value (counting the union
     # of distinct terms would need a full dictionary scan per epoch);

@@ -135,26 +135,3 @@ def test_plan_shapes(spark, cbs, tmp_path):
     row = codes.first()
     assert len(row.codes) == 8 and all(0 <= c < 16 for c in row.codes)
 
-
-def test_adc_scan_stored_matches_expression(spark, cbs, tmp_path):
-    """adc_scan_stored (the measured-and-rejected Arrow-kernel form of
-    the stored ADC scan, kept as the recorded alternative) stays
-    bit-compatible with the pq_adc_col expression scan that replaced it
-    — the parity surface its docstring promises."""
-    from beetle_search_engine_spark.operators.ml import (
-        _read_query_vec_np,
-        adc_scan_stored,
-    )
-
-    emb = spark.read.parquet(EMB)
-    q = _read_query_vec_np(EMB, 0)
-    luts = _pq_luts_np(q, cbs)
-    codes = pq_encode(emb, cbs)
-    expr = {
-        r.vec_id: r.adc
-        for r in codes.withColumn("adc", pq_adc_col("codes", luts)).collect()
-    }
-    kern = {r.vec_id: r.adc for r in adc_scan_stored(codes, luts).collect()}
-    assert kern.keys() == expr.keys()
-    for vid, w in expr.items():
-        assert abs(kern[vid] - w) <= 1e-9 * max(1.0, abs(w)), vid

@@ -124,10 +124,11 @@ def test_optimize_after_deletes_recounts_the_survivors(spark, tmp_path, stats_ca
     assert stats_calls[-1]["out"] == _expected(survivors, len(survivors), THR)
 
 
-def test_append_counts_the_epoch_and_merges_avgdl(spark, tmp_path, stats_calls):
+@pytest.mark.parametrize("tokenizer", ["python", "jvm"])
+def test_append_counts_the_epoch_and_merges_avgdl(spark, tmp_path, stats_calls, tokenizer):
     base, new = _docs("d", 40, seed=3), _docs("n", 24, seed=4)
     d = str(tmp_path / "idx")
-    cfg = _cfg("python")
+    cfg = _cfg(tokenizer)
     build_index(spark, _frame(spark, base), d, fields=FIELDS, cfg=cfg)
     append_epoch(spark, d, _frame(spark, new), fields=FIELDS, cfg=cfg)
     assert stats_calls[-1]["n_docs"] == 24
@@ -183,3 +184,37 @@ def test_posting_rows_do_not_depend_on_the_arrow_batch_size(spark, tmp_path, mon
         spark.conf.set(key, old)
     assert ref[0] and ref[1]
     assert tiny == ref
+
+
+def test_encode_kernel_merges_same_doc_rows_with_their_positions():
+    """Two adjacent rows of one (fid, term, docnum) — two source tokens
+    of one doc that share a stem — become one posting: tf summed,
+    positions interleaved in ascending order."""
+    import pyarrow as pa
+
+    from beetle_search_engine_spark.operators.codecs import (
+        decode_docgaps,
+        decode_positions,
+        varint_decode,
+    )
+
+    cfg = _cfg("jvm", positions=True, thr=100)
+    stats = {"n_docs": 10, "avgdl": {"body": 3.0}, "fields": ["body"]}
+    kernel = B._make_encode_kernel(cfg, stats, {})
+    rb = pa.RecordBatch.from_pydict(
+        {
+            "bucket": pa.array([1, 1], pa.int32()),
+            "fid": pa.array([0, 0], pa.int8()),
+            "term": ["index", "index"],
+            "docnum": pa.array([3, 3], pa.int64()),
+            "tf": pa.array([2, 1], pa.int32()),
+            "dl": pa.array([5, 5], pa.int32()),
+            "pos": pa.array([[0, 4], [2]], pa.list_(pa.int32())),
+        }
+    )
+    (out,) = list(kernel(iter([rb])))
+    (row,) = out.to_pylist()
+    assert (row["term"], row["n"], row["df"]) == ("index", 1, 1)
+    assert list(decode_docgaps(row["docs"])) == [3]
+    assert list(varint_decode(row["tfs"])) == [3]
+    assert list(decode_positions(row["pos"], [3])[0]) == [0, 2, 4]

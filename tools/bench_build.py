@@ -3,6 +3,7 @@ worker (BASELINE.json north_rule: >=0.8 between N and 4N; sandbox stand-in
 for N vs 4N executor clusters is local[N] vs local[4N] on the same input).
 
 Run standalone:  python tools/bench_build.py --cores 8 --docs 40000
+(``--tokenizer jvm --positions`` times the jvm positions build).
 Prints one JSON line {cores, docs, build_s, docs_per_sec, postings}.
 """
 
@@ -31,6 +32,7 @@ def main():
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--queries", type=int, default=0, help="also time N engine queries")
     ap.add_argument("--tokenizer", default="auto", help="auto|python|jvm — pin jvm to measure the at-scale configuration")
+    ap.add_argument("--positions", action="store_true", help="store position lists (IndexConfig.store_positions)")
     ap.add_argument("--master", default=None, help="e.g. spark://127.0.0.1:7077 for the local standalone cluster")
     args = ap.parse_args()
 
@@ -62,6 +64,7 @@ def main():
             bucket_groups=1,
             chunk_docs=1 << 14,
             encode_partitions=layout_parts,
+            store_positions=args.positions,
         )
     )
     # materialize input (parquet) outside the timed window, with a FIXED
@@ -91,6 +94,7 @@ def main():
         "cores": args.cores,
         "master": args.master or "local",
         "tokenizer": args.tokenizer,
+        "positions": args.positions,
         "docs": args.docs,
         "build_s": round(build_s, 3),
         "docs_per_sec": round(args.docs / build_s, 1),
