@@ -385,6 +385,18 @@ def _lemma_case_sql(c: str) -> str:
 _LR_CACHE: dict[str, tuple] = {}
 
 
+def _pinned(x: float) -> float:
+    """``x`` rounded to 4 decimal places, so that the fitted LR weights
+    render to the same SQL literal text in every process.  Two fits of
+    the sf0.01 corpus in two processes differ by up to 6e-10 per weight
+    (7.4e-8 summed over the 829 literals: Spark's aggregation order feeds
+    L-BFGS), so on this grid a literal differs between two fits with
+    probability ~0.07%.  The rounding moves a margin by at most 5e-5 per
+    term occurrence (<= 0.01 for sf0.01's longest, 99-token document;
+    its min |margin| is 0.41)."""
+    return round(x, 4)
+
+
 def _weak_strong_artifacts(spark, sf_dir):
     """Fit the TF-IDF + LR pipeline ONCE per (process, corpus) and share
     the fitted artifacts between the queries() entry and oracle_sql():
@@ -393,7 +405,7 @@ def _weak_strong_artifacts(spark, sf_dir):
     the margin>0 predictions hash-checkable.  shuffle=False: the hash
     split is deterministic under any partitioning (its membership is
     itself oracle-proven by weak_label_split).  Returns (model, preds,
-    {term: coef*idf}, intercept)."""
+    {term: coef*idf}, intercept), the weights and intercept ``_pinned``."""
     if sf_dir in _LR_CACHE:
         return _LR_CACHE[sf_dir]
     from beetle_search_engine_spark.operators.ml import train_weak_to_strong
@@ -406,15 +418,15 @@ def _weak_strong_artifacts(spark, sf_dir):
     vocab2 = stages[2].vocabulary
     idfv = stages[4].idf.toArray()
     coef = stages[5].coefficients.toArray()
-    intercept = float(stages[5].intercept)
+    intercept = _pinned(float(stages[5].intercept))
     n1 = len(vocab1)
     weights: dict[str, float] = {}
     for i, t in enumerate(vocab1):
-        w = float(coef[i] * idfv[i])
+        w = _pinned(float(coef[i] * idfv[i]))
         if w != 0.0:
             weights[t] = w
     for j, t in enumerate(vocab2):  # bigrams contain a space: no collision
-        w = float(coef[n1 + j] * idfv[n1 + j])
+        w = _pinned(float(coef[n1 + j] * idfv[n1 + j]))
         if w != 0.0:
             weights[t] = w
     _LR_CACHE[sf_dir] = (model, preds, weights, intercept)
@@ -1843,7 +1855,7 @@ def oracle_sql() -> dict[str, str]:
 
                 _act = _gs("oracle-lr", cores=8, shuffle_partitions=8)
             _m, _p, _W, _B = _weak_strong_artifacts(_act, _osf)
-            _wvals = ", ".join(f"('{t}', {float(w)!r})" for t, w in sorted(_W.items()))
+            _wvals = ", ".join(f"('{t}', {w!r})" for t, w in sorted(_W.items()))
             _lem = _lemma_case_sql("t")
             o["weak_to_strong_labels"] = f"""
       WITH toks AS (

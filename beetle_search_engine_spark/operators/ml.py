@@ -11,10 +11,11 @@ sklearn and
 Spark ML differ in solver details and tf-idf normalization, so outputs are
 model-equivalent, not bit-identical (documented; SURVEY K2/K3 notes).
 
-IVF ANN: KMeans(seed) coarse quantizer over the embedding table; queries
-probe the nprobe nearest centroids and scan only those clusters — the
-classic FAISS IVF layout (reference uses IndexFlatL2, build_faiss.py:30)
-re-expressed as cluster-pruned DataFrame scans.
+IVF ANN: a deterministic numpy k-means coarse quantizer over a bounded
+sample of the embedding table (``fit_centroids_np``); queries probe the
+nprobe nearest centroids and scan only those clusters — the classic FAISS
+IVF layout (reference uses IndexFlatL2, build_faiss.py:30) re-expressed
+as cluster-pruned DataFrame scans.
 """
 
 from __future__ import annotations
@@ -335,17 +336,6 @@ def ivf_search_deterministic(
     return _cosine_topk(cand, [float(x) for x in q], top_k, "vec_id", "embedding")
 
 
-def ivf_index(emb: DataFrame, n_clusters: int = 16, seed: int = 42, vec_col: str = "embedding"):
-    """Coarse-quantize the embedding table: returns (assigned DataFrame
-    with a cluster column, fitted KMeans model)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    v = emb.withColumn("_v", array_to_vector(F.col(vec_col).cast("array<double>")))
-    km = KMeans(k=n_clusters, seed=seed, featuresCol="_v", predictionCol="cluster").fit(v)
-    return km.transform(v).drop("_v"), km
-
-
 def _nearest_clusters(q, centers: list[tuple[int, list[float]]], nprobe: int) -> list[int]:
     """Driver-side coarse quantization: the nprobe cluster ids nearest
     the query vector (centers: [(cluster_id, center_vec)])."""
@@ -369,64 +359,6 @@ def _cosine_topk(vecs: DataFrame, q, top_k: int, id_col: str, vec_col: str) -> D
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(top_k)
     )
-
-
-def write_ivf_index(assigned: DataFrame, km, path: str) -> None:
-    """Persist the IVF layout the way FAISS persists its index
-    (reference: build_faiss.py:36-43 write_index + doc-id JSON): vectors
-    as parquet PARTITIONED BY cluster — so a probe is a partition-pruned
-    scan that never opens non-probed clusters' files — plus a k-row
-    centroid parquet table (the coarse quantizer)."""
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(f"{path}/vectors")
-    centers = [(i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())]
-    # k-row dimension table, same role as FAISS's stored quantizer
-    assigned.sparkSession.createDataFrame(
-        centers, "cluster int, center array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_probe_stored(
-    spark,
-    path: str,
-    query_vec,
-    top_k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Query a stored IVF index: rank centroids on the driver (k tiny
-    rows), then scan ONLY the nprobe nearest cluster partitions — the
-    plan shows PartitionFilters [cluster IN (...)], so non-probed
-    clusters' files are never opened (the on-disk analog of FAISS's
-    inverted lists)."""
-    crows = spark.read.parquet(f"{path}/centroids").collect()  # k tiny rows
-    probe = _nearest_clusters(query_vec, [(r["cluster"], r["center"]) for r in crows], nprobe)
-    vecs = spark.read.parquet(f"{path}/vectors").filter(F.col("cluster").isin(probe))
-    if exclude_id is not None:
-        vecs = vecs.filter(F.col(id_col) != exclude_id)
-    return _cosine_topk(vecs, query_vec, top_k, id_col, vec_col)
-
-
-def ivf_search(
-    assigned: DataFrame,
-    km,
-    query_id: int,
-    top_k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe the nprobe clusters nearest the query vector, exact cosine
-    inside them only (cluster-pruned scan — at scale, cluster is a
-    partition column and pruning skips whole files)."""
-    qrows = assigned.filter(F.col(id_col) == query_id).select(vec_col).take(1)
-    if not qrows:
-        raise KeyError(f"{id_col} {query_id} not found in the assigned frame")
-    q = qrows[0][0]
-    probe = _nearest_clusters(q, list(enumerate(km.clusterCenters())), nprobe)
-    vecs = assigned.filter(F.col("cluster").isin(probe) & (F.col(id_col) != query_id))
-    return _cosine_topk(vecs, q, top_k, id_col, vec_col)
 
 
 # --- Product quantization (the FAISS IndexPQ analog) ------------------
@@ -648,9 +580,8 @@ def _read_codebooks(spark, path: str):
 
 
 def write_pq_index(emb: DataFrame, codebooks, path: str, id_col="vec_id", vec_col="embedding") -> None:
-    """Persist the PQ layout the way write_ivf_index persists IVF's:
-    the compressed codes table (the ADC scan target) plus the codebooks
-    dimension (_write_codebooks)."""
+    """Persist the PQ layout: the compressed codes table (the ADC scan
+    target) plus the codebooks dimension (_write_codebooks)."""
     pq_encode(emb, codebooks, id_col, vec_col).write.mode("overwrite").parquet(
         f"{path}/codes"
     )

@@ -22,15 +22,20 @@ search_bm25.py:27-39 (Whoosh searcher).
 The driver-local path (``prefer_local``, small indexes) runs no Spark job
 at all: pyarrow reads the same pruned posting rows, the same kernels
 score them on the driver, and the <= k result rows come back as an
-Arrow-backed ``LocalRelation`` (``_local_frame``), whose ``collect()`` is
-served from the driver without scheduling a job.  Every frame this
-module builds from driver rows takes that route.  Match-all queries
-('*', '* OR x') have no cursors; their own plans answer them.
+Arrow-backed ``LocalRelation`` (``BM25Index._local_frame``), whose
+``collect()`` is served from the driver without scheduling a job.  Every
+frame this module builds from driver rows takes that route, and crosses
+into the JVM only to hand over the Arrow stream.  Opening or refreshing
+a handle touches no JVM either: the Spark scans (``postings``,
+``docids``) are built on first use, by the distributed path or a Spark
+fallback.  Match-all queries ('*', '* OR x') have no cursors; their own
+plans answer them.
 """
 
 from __future__ import annotations
 
 import json
+from functools import cached_property
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -61,27 +66,6 @@ _NO_SCORED = pd.DataFrame({
     "docnum": pd.Series(dtype="int64"),
     "score": pd.Series(dtype="float64"),
 })
-
-
-def _local_frame(spark: SparkSession, columns, schema: StructType) -> DataFrame:
-    """Driver-side columns (one sequence per ``schema`` field, in order)
-    -> an Arrow-backed LocalRelation.  Below Spark's
-    ``spark.sql.execution.arrow.localRelationThreshold`` an Arrow table
-    becomes a LocalRelation, so ``collect()`` is served on the driver with
-    no Spark job; a list of tuples would become a pickled RDD whose every
-    ``collect()`` runs jobs with Python workers."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow = to_arrow_schema(schema)
-    table = pa.Table.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
-    )
-    return spark.createDataFrame(table, schema)
-
-
-def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
-    return _local_frame(spark, [[] for _ in schema.fields], schema)
 
 
 def _top_rows(scored, top_k: int) -> list[tuple]:
@@ -118,9 +102,12 @@ def read_index_metrics(index_dir: str) -> dict:
 
 
 class BM25Index:
-    """Handle over a built index directory; caches stats + scan DataFrames
+    """Handle over a built index directory; caches stats, tombstones and
+    the pyarrow datasets the local path reads, and builds the Spark scans
+    only when a distributed call or a Spark fallback first needs them
     (the reference reopens its index from disk on every query,
-    search_bm25.py:27 — here the driver holds the cached plan).
+    search_bm25.py:27 — here the driver holds the cached plan).  Opening
+    a handle runs no Spark job and makes no py4j round trip.
 
     Queries analyze with the chain the index was BUILT with (the preset
     name is recorded in stats.json) — the reference relies on declaring
@@ -130,40 +117,88 @@ class BM25Index:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
+        self._jvm_frame = None  # JVM handles of _local_frame, set by its first call
         self.refresh_stats()
         self.analyzer = get_analyzer(self.stats.get("analyzer", "whoosh"))
 
     def refresh_stats(self) -> None:
         """(Re-)read stats.json (at open, after an incremental append_epoch)
-        and what derives from it: committed epochs, scans, tombstones,
-        and an empty pyarrow dataset cache (the local fast path would
-        otherwise keep serving the pre-append file listing)."""
+        and what derives from it: committed epochs and tombstones.  It
+        also drops the pyarrow dataset cache (the local fast path would
+        otherwise keep serving the pre-append file listing) and the Spark
+        scans, which the next use rebuilds over the new epochs."""
         with open(f"{self.index_dir}/stats.json") as f:
             self.stats = json.load(f)
         self.epochs = sorted(int(e) for e in self.stats.get("epochs", {"0": None}))
         self._epoch_groups = [1000 + e for e in self.epochs if e > 0]
         self._datasets: dict = {}
-        self.postings, self.docids = self._committed_scans()
+        self.__dict__.pop("postings", None)
+        self.__dict__.pop("docids", None)
         self._load_tombstones()
 
-    def _committed_scans(self) -> tuple[DataFrame, DataFrame]:
-        """Postings/docids scans filtered to the epochs COMMITTED in
-        stats.json — append_epoch's commit point is the stats write, so
-        a crash between its postings/docids writes and that commit
-        leaves orphan ``group=1000+e`` / ``epoch=e`` partitions on disk.
-        An unfiltered read would serve those half-committed documents
-        with pre-append stats; the partition-column isin filters prune
-        them for free (and a retried append overwrites them in place).
-        Base groups (< 1000) are guarded by the group-manifest cleanup
-        at build time.  ``_arrow_postings`` / ``_docids_arrow`` apply the
-        same filters to the pyarrow reads."""
-        postings = self.spark.read.parquet(f"{self.index_dir}/postings")
-        postings = postings.filter(
+    # Both Spark scans are filtered to the epochs COMMITTED in stats.json —
+    # append_epoch's commit point is the stats write, so a crash between
+    # its postings/docids writes and that commit leaves orphan
+    # ``group=1000+e`` / ``epoch=e`` partitions on disk.  An unfiltered
+    # read would serve those half-committed documents with pre-append
+    # stats; the partition-column isin filters prune them for free (and a
+    # retried append overwrites them in place).  Base groups (< 1000) are
+    # guarded by the group-manifest cleanup at build time.
+    # ``_arrow_postings`` / ``_docids_arrow`` apply the same filters to the
+    # pyarrow reads.  Each scan costs a schema-inference job when built.
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        """The committed posting rows as a Spark scan."""
+        return self.spark.read.parquet(f"{self.index_dir}/postings").filter(
             (F.col("group") < 1000) | F.col("group").isin(self._epoch_groups)
         )
-        docids = self.spark.read.parquet(f"{self.index_dir}/docids")
-        docids = docids.filter(F.col("epoch").isin(self.epochs))
-        return postings, docids
+
+    @cached_property
+    def docids(self) -> DataFrame:
+        """The committed docnum -> doc_id dimension as a Spark scan."""
+        return self.spark.read.parquet(f"{self.index_dir}/docids").filter(
+            F.col("epoch").isin(self.epochs)
+        )
+
+    def _local_frame(self, columns, schema: StructType) -> DataFrame:
+        """Driver-side columns (one sequence per ``schema`` field, in order)
+        -> an Arrow-backed LocalRelation.  Below Spark's
+        ``spark.sql.execution.arrow.localRelationThreshold`` an Arrow
+        stream becomes a LocalRelation, so ``collect()`` is served on the
+        driver with no Spark job; a list of tuples would become a pickled
+        RDD whose every ``collect()`` runs jobs with Python workers.
+
+        These are the JVM calls of PySpark's own Arrow-table conversion
+        minus the py4j round trips that buy nothing here: the
+        PythonSQLUtils methods and the session's SQLConf are resolved once
+        per handle, on the first frame.  The conf is still read on every
+        frame, for the string offset width the JVM expects
+        (``arrow.useLargeVarTypes``)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        spark = self.spark
+        if self._jvm_frame is None:
+            utils = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+            self._jvm_frame = (utils.readArrowStreamFromFile, utils.toDataFrame, spark._jconf)
+        read_stream, to_frame, sql_conf = self._jvm_frame
+        arrow = to_arrow_schema(schema, prefers_large_types=sql_conf.arrowUseLargeVarTypes())
+        table = pa.Table.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
+        )
+        # a temp file, or a socket when the session encrypts its IO
+        jiter = spark.sparkContext._serialize_to_jvm(
+            table.to_batches(), ArrowStreamSerializer(), read_stream,
+            lambda: spark._jvm.ArrowIteratorServer(),
+        )
+        df = DataFrame(to_frame(jiter, schema.json(), spark._jsparkSession), spark)
+        df._schema = schema
+        return df
+
+    def _empty_frame(self, schema: StructType) -> DataFrame:
+        return self._local_frame([[] for _ in schema.fields], schema)
 
     def _dataset(self, name: str):
         """The cached pyarrow dataset of one index directory (``postings``
@@ -178,7 +213,7 @@ class BM25Index:
 
     def _arrow_postings(self, flt=None, columns: list[str] | None = None):
         """Committed posting rows matching ``flt`` as a pyarrow table —
-        no Spark job, the same epoch pruning as ``_committed_scans``."""
+        no Spark job, the same epoch pruning as the ``postings`` scan."""
         import pyarrow.dataset as ds
 
         committed = (ds.field("group") < 1000) | ds.field("group").isin(self._epoch_groups)
@@ -353,8 +388,7 @@ class BM25Index:
         # docnum tiebreak) is preserved verbatim; the 1.0-floor padding
         # sorts strictly below every match and is ordered by lowest
         # display id (the _search_every determinism rule) — no re-sort
-        return _local_frame(
-            self.spark,
+        return self._local_frame(
             [[d for d, _ in out], [s for _, s in out], list(range(1, len(out) + 1))],
             RESULT_STRUCT,
         )
@@ -474,7 +508,7 @@ class BM25Index:
         with ``_top_rows``.  Local: a LocalRelation.  Distributed: a lazy
         docid join."""
         if not parsed:
-            return _empty_frame(self.spark, schema)
+            return self._empty_frame(schema)
         fetch = {qid: self._fetch_terms(pq) for qid, pq in parsed.items()}
         union = list(dict.fromkeys(t for terms in fetch.values() for t in terms))
         buckets = self._buckets_for(union)
@@ -484,7 +518,7 @@ class BM25Index:
         if prefer_local:
             pdf = self._pruned_rows(union, buckets)
             if len(pdf) == 0:
-                return _empty_frame(self.spark, schema)
+                return self._empty_frame(schema)
             df_override = self._summed_dfs(pdf) if multi_epoch else None
         else:
             scan = self._pruned_scan(union, buckets)
@@ -532,14 +566,14 @@ class BM25Index:
             ).toPandas()
         top_rows = _top_rows(scored, top_k)
         if not top_rows:
-            return _empty_frame(self.spark, schema)
+            return self._empty_frame(schema)
         qids, docnums, scores, ranks = (list(c) for c in zip(*top_rows))
         if prefer_local:
             id_map = self._doc_ids(sorted(set(docnums)))
             cols = {"query_id": qids, "doc_id": [id_map[d] for d in docnums],
                     "score": scores, "rank": ranks}
-            return _local_frame(self.spark, [cols[f] for f in schema.fieldNames()], schema)
-        ranked = _local_frame(self.spark, [qids, docnums, scores, ranks], _RANKED_STRUCT)
+            return self._local_frame([cols[f] for f in schema.fieldNames()], schema)
+        ranked = self._local_frame([qids, docnums, scores, ranks], _RANKED_STRUCT)
         # docid fetch with the winners pushed into the scan as an IN
         # filter: a broadcast join alone cannot prune the docids
         # dimension, so every query would pay a full scan of it at scale;

@@ -102,3 +102,18 @@ def test_readme_counts_match_registry(spark):
     assert m2 and int(m2.group(1)) == len(oracles)
     m3 = re.search(r"inside; the (\d+) entries", text)
     assert m3 and int(m3.group(1)) == len(qs) - 50
+
+
+@pytest.mark.parametrize("w", [0.1, -1.2345678901234567, 6.93480000466e-4, -43.9465286389, 2.0])
+def test_weak_strong_literals_ignore_fit_jitter(w):
+    """weak_to_strong_labels' oracle renders each fitted weight (and the
+    intercept) from its ``_pinned`` value, so a one-ulp jitter of the fit,
+    or one of the 6e-10 seen between two processes' fits, leaves the SQL
+    text unchanged."""
+    import math
+
+    literal = repr(entrymod._pinned(w))
+    for jittered in (math.nextafter(w, math.inf), math.nextafter(w, -math.inf),
+                     w + 6e-10, w - 6e-10):
+        assert repr(entrymod._pinned(jittered)) == literal
+    assert abs(entrymod._pinned(w) - w) <= 5e-5

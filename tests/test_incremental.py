@@ -163,6 +163,39 @@ def test_uncommitted_epoch_is_not_served(spark, tmp_path):
         for r in BM25Index(spark, idx_dir).search("spark", 10, "or", prefer_local=True).collect()
     ]
     assert local == before
+    # ...and so does the Spark scan's committed-epoch filter (120 docs
+    # resolve prefer_local=None to the local path)
+    dist = [
+        (r.doc_id, r.score)
+        for r in BM25Index(spark, idx_dir).search("spark", 10, "or", prefer_local=False).collect()
+    ]
+    assert dist == before
+
+
+def test_refresh_stats_rebuilds_the_distributed_scans(spark, tmp_path):
+    """A handle whose Spark scans were built before an append serves the
+    new epoch after refresh_stats(), exactly like a freshly opened one."""
+    fields = {"body": "content"}
+    cfg = EngineConfig(index=IndexConfig(n_buckets=4, bucket_groups=1, chunk_docs=32))
+    idx_dir = str(tmp_path / "idx")
+    build_index(spark, generate_corpus(spark, 120, seed=31), idx_dir, fields=fields, cfg=cfg)
+
+    def ranked(ix):
+        rows = ix.search("spark", 500, "or", prefer_local=False).collect()
+        return [(r.doc_id, r.score, r.rank) for r in rows]
+
+    ix = BM25Index(spark, idx_dir)
+    before = ranked(ix)  # builds the handle's postings/docids scans
+    b = generate_corpus(spark, 60, seed=32).withColumn(
+        "path", F.concat(F.lit("b/"), F.col("path"))
+    ).withColumn("doc_id", F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256))
+    append_epoch(spark, idx_dir, b, fields=fields, cfg=cfg)
+    ix.refresh_stats()
+    after = ranked(ix)
+    assert after == ranked(BM25Index(spark, idx_dir))
+    epoch_docs = {r.doc_id for r in b.select("doc_id").collect()}
+    assert epoch_docs & {d for d, _, _ in after}
+    assert not epoch_docs & {d for d, _, _ in before}
 
 
 def test_term_expansion_reads_only_committed_epochs(spark, tmp_path, monkeypatch):

@@ -11,8 +11,11 @@ import pytest
 from beetle_search_engine_spark.config import EngineConfig, IndexConfig
 from beetle_search_engine_spark.operators.build import build_index
 from beetle_search_engine_spark.plans.query import (
+    _RANKED_STRUCT,
     BATCH_RESULT_SCHEMA,
+    BATCH_RESULT_STRUCT,
     RESULT_SCHEMA,
+    RESULT_STRUCT,
     BM25Index,
 )
 
@@ -38,19 +41,24 @@ def idx(spark, tmp_path_factory):
     return BM25Index(spark, d)
 
 
-def _collect_counting_jobs(spark, df):
-    """(rows, ids of the Spark jobs that ``df.collect()`` submitted)."""
+def _counting_jobs(spark, fn):
+    """(``fn()``, ids of the Spark jobs it submitted)."""
     sc = spark.sparkContext
     group = f"local-path-test-{next(_groups)}"
-    sc.setJobGroup(group, "collect under test")
+    sc.setJobGroup(group, "call under test")
     try:
-        rows = df.collect()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     # the status tracker is fed by the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return rows, list(sc.statusTracker().getJobIdsForGroup(group))
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _collect_counting_jobs(spark, df):
+    """(rows, ids of the Spark jobs that ``df.collect()`` submitted)."""
+    return _counting_jobs(spark, df.collect)
 
 
 def _optimized_root(df) -> str:
@@ -181,3 +189,115 @@ def test_distributed_batch_answers_every_or_on_the_distributed_path(spark, idx, 
     key = lambda r: (r.query_id, r.doc_id, r.score, r.rank)  # noqa: E731
     assert [key(r) for r in got] == [key(r) for r in want]
     assert {r.query_id for r in got} == {"a", "b"}
+
+
+def test_open_refresh_and_first_local_search_are_job_free(spark, idx):
+    """A handle builds its Spark scans on first use: opening it,
+    refresh_stats() and a first local search submit no Spark job (each
+    scan's schema inference would be one)."""
+    def open_refresh_search():
+        fresh = BM25Index(spark, idx.index_dir)
+        fresh.refresh_stats()
+        return fresh, fresh.search("alpha beta", 5, "and", prefer_local=True).collect()
+
+    (fresh, rows), jobs = _counting_jobs(spark, open_refresh_search)
+    assert rows and jobs == [], f"open/refresh/local search ran Spark jobs {jobs}"
+    postings, docids = fresh.postings, fresh.docids
+    assert fresh.postings is postings and fresh.docids is docids
+    fresh.refresh_stats()
+    assert fresh.postings is not postings and fresh.docids is not docids
+
+
+# column values of the frame parity rows: a non-ASCII doc_id, a docnum
+# past 2**32, a negative zero score
+_FRAME_COLUMNS = {
+    "query_id": ["q0", "q0", "q1"],
+    "doc_id": ["d1", "dé-\u4e2d\U0001f600", "d3"],
+    "docnum": [3, 1, 2**40],
+    "score": [2.5, 1.25, -0.0],
+    "rank": [1, 2, 1],
+}
+_FRAME_CONFS = {
+    "default": {},
+    "large-var-types": {"spark.sql.execution.arrow.useLargeVarTypes": "true"},
+    "rdd-backed": {"spark.sql.execution.arrow.localRelationThreshold": "0"},
+}
+
+
+def _jvm_schema(df):
+    import json
+
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(df._jdf.schema().json()))
+
+
+@pytest.mark.parametrize("conf", list(_FRAME_CONFS))
+@pytest.mark.parametrize("n", [0, 3], ids=["empty", "3rows"])
+@pytest.mark.parametrize(
+    "schema", [RESULT_STRUCT, BATCH_RESULT_STRUCT, _RANKED_STRUCT],
+    ids=["result", "batch", "ranked"],
+)
+def test_local_frame_matches_create_data_frame(spark, idx, schema, n, conf):
+    """The handle's lean frame holds the rows and schema PySpark's own
+    Arrow-table createDataFrame gives, with 32- or 64-bit string offsets
+    and above the LocalRelation threshold (an RDD-backed frame)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    columns = [_FRAME_COLUMNS[f][:n] for f in schema.fieldNames()]
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    saved = {k: spark.conf.get(k, None) for k in _FRAME_CONFS[conf]}
+    try:
+        for k, v in _FRAME_CONFS[conf].items():
+            spark.conf.set(k, v)
+        got = idx._local_frame(columns, schema)
+        want = spark.createDataFrame(table, schema)
+        assert got.schema == want.schema == schema
+        assert _jvm_schema(got) == _jvm_schema(want) == schema
+        rows = got.collect()
+        assert rows == want.collect() and len(rows) == n
+        if conf != "rdd-backed":
+            assert _optimized_root(got) == "LocalRelation"
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_warm_local_frame_round_trips(spark, idx, monkeypatch):
+    """A warm frame crosses into the JVM only to read one conf and hand
+    over the Arrow stream: a handful of py4j round trips, where PySpark's
+    createDataFrame(pa.Table) takes over 20."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    columns = [_FRAME_COLUMNS[f] for f in RESULT_STRUCT.fieldNames()]
+    idx._local_frame(columns, RESULT_STRUCT)  # resolves the handle's JVM classes
+    sent, created = [], set()
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting(self, command):
+        answer = send(self, command)
+        # the frame's round trips: this thread's commands, less memory
+        # deletes ("m\nd\n<id>") of JavaObjects the frame did not create
+        # (earlier tests' garbage freed meanwhile)
+        if threading.get_ident() == caller:
+            if not command.startswith("m\nd\n") or command.split("\n")[2] in created:
+                sent.append(command)
+            if answer.startswith("yro"):  # success, a new object reference
+                created.add(answer[2:])
+        return answer
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    df = idx._local_frame(columns, RESULT_STRUCT)
+    assert len(sent) <= 10, sent
+    monkeypatch.undo()
+    assert len(df.collect()) == 3

@@ -1,9 +1,8 @@
-"""ML sidecars: weak->strong classifier shape and IVF-pruned ANN recall."""
+"""ML sidecars: weak->strong classifier shape and the embedding readers."""
 
-from beetle_search_engine_spark.operators.ml import ivf_index, ivf_search, train_weak_to_strong
+from beetle_search_engine_spark.operators.ml import train_weak_to_strong
 from beetle_search_engine_spark.operators.textops import heuristic_label
-from beetle_search_engine_spark.plans.knn import knn_cosine
-from beetle_search_engine_spark.sources.corpus import load_documents, load_embeddings
+from beetle_search_engine_spark.sources.corpus import load_documents
 
 SF = "/root/testdata/sf0.01"
 
@@ -42,37 +41,6 @@ def test_weak_to_strong_hash_split(spark):
     # deterministic: the same call yields the same split sizes
     _, _, m2 = train_weak_to_strong(data, shuffle=False)
     assert (m2["n_train"], m2["n_test"]) == (metrics["n_train"], metrics["n_test"])
-
-
-def test_ivf_stored_partition_pruned(spark, tmp_path):
-    """write_ivf_index -> cluster-partitioned parquet; a probe scans only
-    the nprobe clusters (PartitionFilters in the plan) and returns the
-    same results as the in-memory probe."""
-    from beetle_search_engine_spark.operators.ml import ivf_probe_stored, write_ivf_index
-
-    emb = load_embeddings(spark, SF)
-    assigned, km = ivf_index(emb, n_clusters=8, seed=42)
-    path = str(tmp_path / "ivf")
-    write_ivf_index(assigned, km, path)
-
-    qvec = emb.filter("vec_id = 0").collect()[0]["embedding"]
-    stored = ivf_probe_stored(spark, path, qvec, 10, nprobe=4, exclude_id=0)
-    mem = ivf_search(assigned, km, 0, 10, nprobe=4)
-    assert [tuple(r) for r in stored.collect()] == [tuple(r) for r in mem.collect()]
-    plan = stored._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cluster" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_ivf_recall_vs_bruteforce(spark):
-    emb = load_embeddings(spark, SF)
-    assigned, km = ivf_index(emb, n_clusters=8, seed=42)
-    exact = [r["vec_id"] for r in knn_cosine(emb, 0, 10).collect()]
-    approx = [r["vec_id"] for r in ivf_search(assigned, km, 0, 10, nprobe=4).collect()]
-    # nprobe=4 of 8 clusters: expect decent overlap with exact top-10
-    assert len(set(exact) & set(approx)) >= 5
-    # full probe == exact
-    full = [r["vec_id"] for r in ivf_search(assigned, km, 0, 10, nprobe=8).collect()]
-    assert full == exact
 
 
 def test_read_embeddings_bounded_sample(tmp_path):
