@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .fusion import rrf_fuse, with_rank
 from .knn import knn_cosine
-from .query import BM25Index
+from .query import RESULT_STRUCT, BM25Index
 
 
 def overlap_reranker(query: str, analyzer_name: str = "whoosh") -> Callable:
@@ -105,12 +105,17 @@ def search_and_rerank(
         # a plain term query parses to exactly the conjunctive semantics.
         # collect the tiny top-k once: probing emptiness lazily would
         # re-execute the whole retrieval for every downstream action
-        rows = index.search(query, top_k, mode="parse").collect()
+        found = index.search(query, top_k, mode="parse")
+        rows = found.collect()
         if not rows and or_fallback:
-            rows = index.search(query, top_k, mode="or").collect()
+            found = index.search(query, top_k, mode="or")
+            rows = found.collect()
         if not rows:
-            return spark.createDataFrame([], "doc_id string, score double, rank int")
-        cands = spark.createDataFrame(rows)
+            return found
+        # the collected rows as a driver-held frame (a JVM LocalRelation
+        # at the join): a distributed search frame is a lazy docid join
+        # that every downstream action would run again
+        cands = index._local_frame(list(zip(*rows)), RESULT_STRUCT)
     elif method in ("knn", "faiss"):  # "faiss" is the reference's name
         if embeddings is None or (query_vec_id is None and query_vec is None):
             raise ValueError(f"{method} method needs embeddings + a query vector")

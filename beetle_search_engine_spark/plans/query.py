@@ -20,16 +20,18 @@ for the top-k merge.  The reference's equivalent path is
 search_bm25.py:27-39 (Whoosh searcher).
 
 The driver-local path (``prefer_local``, small indexes) runs no Spark job
-at all: pyarrow reads the same pruned posting rows, the same kernels
-score them on the driver, and the <= k result rows come back as an
-Arrow-backed ``LocalRelation`` (``BM25Index._local_frame``), whose
-``collect()`` is served from the driver without scheduling a job.  Every
-frame this module builds from driver rows takes that route, and crosses
-into the JVM only to hand over the Arrow stream.  Opening or refreshing
-a handle touches no JVM either: the Spark scans (``postings``,
-``docids``) are built on first use, by the distributed path or a Spark
-fallback.  Match-all queries ('*', '* OR x') have no cursors; their own
-plans answer them.
+and makes no py4j round trip: pyarrow reads the same pruned posting
+rows, the same kernels score them on the driver, and the <= k result
+rows come back as a driver-held frame (``BM25Index._local_frame``).
+Its ``schema`` and ``collect()`` are answered from the Arrow table the
+driver already holds, without entering the JVM; any other DataFrame
+method first turns that table into an Arrow ``LocalRelation``.  Every
+frame this module builds from driver rows takes that route.  Opening or
+refreshing a handle touches no JVM either: the Spark scans
+(``postings``, ``docids``) are built on first use, by the distributed
+path or a Spark fallback, with the schema pyarrow reads from the footers.
+Match-all queries ('*', '* OR x') have no cursors; their own plans
+answer them.
 """
 
 from __future__ import annotations
@@ -38,10 +40,11 @@ import json
 from functools import cached_property
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import (
-    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+    DoubleType, IntegerType, LongType, StringType, StructField, StructType, _create_row,
 )
 
 from ..functions.analyzer import get_analyzer
@@ -82,6 +85,45 @@ def _top_rows(scored, top_k: int) -> list[tuple]:
     return rows
 
 
+class _HeldFrame(ClassicDataFrame):
+    """A result frame whose rows the driver holds as an Arrow table.
+    ``schema`` and ``collect()`` answer from that table; the JVM frame is
+    built from the same table (``to_jvm``) on the first use of any other
+    DataFrame method.  Like the LocalRelation it becomes, a held frame is
+    an immutable snapshot.  Construct with ``of``:
+    ``pyspark.sql.DataFrame(...)`` always returns the plain classic class."""
+
+    @classmethod
+    def of(cls, spark: SparkSession, table, schema: StructType, to_jvm) -> _HeldFrame:
+        df = object.__new__(cls)
+        ClassicDataFrame.__init__(df, None, spark)
+        # ``schema`` is a cached_property of the classic frame: preset it,
+        # as the frame's own copy (``StructType.add`` mutates in place, and
+        # ``schema`` is usually a module constant)
+        df.__dict__.update(
+            schema=StructType.fromJson(schema.jsonValue()),
+            _held_schema=schema, _table=table, _to_jvm=to_jvm,
+        )
+        return df
+
+    @property
+    def _jdf(self):
+        if self._held_jdf is None:
+            self._held_jdf = self._to_jvm(self._table, self._held_schema)
+        return self._held_jdf
+
+    @_jdf.setter
+    def _jdf(self, jdf) -> None:  # the classic __init__ assigns None
+        self._held_jdf = jdf
+
+    def collect(self) -> list[Row]:
+        # Arrow's to_pylist gives the Python values the JVM round trip
+        # gives for these types (str, float, int, None)
+        names = self._table.column_names
+        columns = (c.to_pylist() for c in self._table.columns)
+        return [_create_row(names, values) for values in zip(*columns)]
+
+
 def read_index_metrics(index_dir: str) -> dict:
     """Per-group build manifests -> {groups, postings, max_skew_ratio}.
     Shared by BM25Index.metrics() and bench.py's skew block."""
@@ -117,7 +159,7 @@ class BM25Index:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self._jvm_frame = None  # JVM handles of _local_frame, set by its first call
+        self._jvm_frame = None  # JVM handles of _jvm_relation, set by its first call
         self.refresh_stats()
         self.analyzer = get_analyzer(self.stats.get("analyzer", "whoosh"))
 
@@ -145,37 +187,66 @@ class BM25Index:
     # retried append overwrites them in place).  Base groups (< 1000) are
     # guarded by the group-manifest cleanup at build time.
     # ``_arrow_postings`` / ``_docids_arrow`` apply the same filters to the
-    # pyarrow reads.  Each scan costs a schema-inference job when built.
+    # pyarrow reads.
+
+    def _spark_scan(self, name: str) -> DataFrame:
+        """``spark.read.parquet`` of one index directory (``postings`` or
+        ``docids``) with the schema of its cached pyarrow dataset, every
+        field nullable as Spark's file reader reports it, so building the
+        scan runs no schema-inference job.  Inference stays the fallback
+        when pyarrow cannot open the path (the ``_pruned_rows`` rule)."""
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        path = f"{self.index_dir}/{name}"
+        try:
+            arrow = self._dataset(name).schema
+        except Exception:
+            return self.spark.read.parquet(path)
+        schema = StructType([StructField(f.name, f.dataType) for f in from_arrow_schema(arrow)])
+        return self.spark.read.schema(schema).parquet(path)
 
     @cached_property
     def postings(self) -> DataFrame:
         """The committed posting rows as a Spark scan."""
-        return self.spark.read.parquet(f"{self.index_dir}/postings").filter(
+        return self._spark_scan("postings").filter(
             (F.col("group") < 1000) | F.col("group").isin(self._epoch_groups)
         )
 
     @cached_property
     def docids(self) -> DataFrame:
         """The committed docnum -> doc_id dimension as a Spark scan."""
-        return self.spark.read.parquet(f"{self.index_dir}/docids").filter(
-            F.col("epoch").isin(self.epochs)
-        )
+        return self._spark_scan("docids").filter(F.col("epoch").isin(self.epochs))
 
     def _local_frame(self, columns, schema: StructType) -> DataFrame:
         """Driver-side columns (one sequence per ``schema`` field, in order)
-        -> an Arrow-backed LocalRelation.  Below Spark's
+        -> a driver-held frame (``_HeldFrame``) over their Arrow table.
+        Making it and its ``collect()`` make no py4j round trip and run no
+        Spark job; a list of tuples would become a pickled RDD whose every
+        ``collect()`` runs jobs with Python workers.  Other DataFrame
+        methods use the Arrow-backed LocalRelation ``_jvm_relation``
+        builds from the same table on first use."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(schema)
+        table = pa.Table.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
+        )
+        return _HeldFrame.of(self.spark, table, schema, self._jvm_relation)
+
+    def _jvm_relation(self, table, schema: StructType):
+        """A held frame's Arrow table -> the JVM DataFrame of an Arrow
+        LocalRelation.  Below Spark's
         ``spark.sql.execution.arrow.localRelationThreshold`` an Arrow
-        stream becomes a LocalRelation, so ``collect()`` is served on the
-        driver with no Spark job; a list of tuples would become a pickled
-        RDD whose every ``collect()`` runs jobs with Python workers.
+        stream becomes a LocalRelation, so its ``collect()`` needs no
+        Spark job either.
 
         These are the JVM calls of PySpark's own Arrow-table conversion
         minus the py4j round trips that buy nothing here: the
         PythonSQLUtils methods and the session's SQLConf are resolved once
-        per handle, on the first frame.  The conf is still read on every
-        frame, for the string offset width the JVM expects
+        per handle, on the first build.  The conf is still read on every
+        build, for the string offset width the JVM expects
         (``arrow.useLargeVarTypes``)."""
-        import pyarrow as pa
         from pyspark.sql.pandas.serializers import ArrowStreamSerializer
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -184,18 +255,14 @@ class BM25Index:
             utils = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils
             self._jvm_frame = (utils.readArrowStreamFromFile, utils.toDataFrame, spark._jconf)
         read_stream, to_frame, sql_conf = self._jvm_frame
-        arrow = to_arrow_schema(schema, prefers_large_types=sql_conf.arrowUseLargeVarTypes())
-        table = pa.Table.from_arrays(
-            [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
-        )
+        if sql_conf.arrowUseLargeVarTypes():
+            table = table.cast(to_arrow_schema(schema, prefers_large_types=True))
         # a temp file, or a socket when the session encrypts its IO
         jiter = spark.sparkContext._serialize_to_jvm(
             table.to_batches(), ArrowStreamSerializer(), read_stream,
             lambda: spark._jvm.ArrowIteratorServer(),
         )
-        df = DataFrame(to_frame(jiter, schema.json(), spark._jsparkSession), spark)
-        df._schema = schema
-        return df
+        return to_frame(jiter, schema.json(), spark._jsparkSession)
 
     def _empty_frame(self, schema: StructType) -> DataFrame:
         return self._local_frame([[] for _ in schema.fields], schema)
@@ -411,9 +478,11 @@ class BM25Index:
         ``prefer_local`` short-circuits the distributed kernel when the
         index is small: pyarrow reads the bucket-pruned posting rows and
         the same kernels score them on the driver.  That path runs no
-        Spark job, and its result is an Arrow ``LocalRelation`` whose
-        ``collect()`` runs none either (interactive latency).  Defaults
-        to n_docs <= 200k; results identical by construction."""
+        Spark job, and its result is a driver-held frame (``_HeldFrame``)
+        whose ``schema`` and ``collect()`` do not enter the JVM
+        (interactive latency); it becomes an Arrow LocalRelation only
+        when another DataFrame method needs the JVM frame.  Defaults to
+        n_docs <= 200k; results identical by construction."""
         pq = self._parse(query, mode)
         if pq and (pq.every or pq.every_or):
             return self._every(pq, top_k, prefer_local)
@@ -505,8 +574,9 @@ class BM25Index:
         smaller than the union gets a term mask (a one-query batch never
         does).  ``schema`` (RESULT_STRUCT or BATCH_RESULT_STRUCT) names
         the output columns.  Both paths merge the kernels' per-chunk rows
-        with ``_top_rows``.  Local: a LocalRelation.  Distributed: a lazy
-        docid join."""
+        with ``_top_rows``.  Local: a driver-held frame (``_HeldFrame``,
+        a LocalRelation once a method other than ``schema``/``collect()``
+        needs the JVM frame).  Distributed: a lazy docid join."""
         if not parsed:
             return self._empty_frame(schema)
         fetch = {qid: self._fetch_terms(pq) for qid, pq in parsed.items()}

@@ -1,9 +1,11 @@
 """The driver-local query path answers without a Spark job: pyarrow reads
 the pruned postings, the kernels score on the driver, and the result is
-an Arrow-backed LocalRelation whose collect() schedules nothing."""
+a driver-held frame whose collect() enters no JVM; any other DataFrame
+method runs on the Arrow-backed LocalRelation built from the same rows."""
 
 from __future__ import annotations
 
+import dataclasses
 import itertools
 
 import pytest
@@ -27,17 +29,32 @@ CFG = EngineConfig(
 _groups = itertools.count()
 
 
-@pytest.fixture(scope="module")
-def idx(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("local_path") / "idx")
+def _corpus(spark, ids):
     rows = []
-    for i in range(20):
+    for i in ids:
         toks = ["alpha", f"filler{i}"]
         if i % 2 == 0:
             toks.append("beta gamma")
         rows.append((f"d{i}", " ".join(toks * (1 + i % 3))))
-    corpus = spark.createDataFrame(rows, "doc_id string, content string")
-    build_index(spark, corpus, d, fields={"body": "content"}, cfg=CFG)
+    return spark.createDataFrame(rows, "doc_id string, content string")
+
+
+@pytest.fixture(scope="module")
+def idx(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("local_path") / "idx")
+    build_index(spark, _corpus(spark, range(20)), d, fields={"body": "content"}, cfg=CFG)
+    return BM25Index(spark, d)
+
+
+@pytest.fixture(scope="module")
+def positions_idx(spark, tmp_path_factory):
+    """Positions stored (the binary ``pos`` column) and a second epoch."""
+    from beetle_search_engine_spark.streaming.incremental import append_epoch
+
+    d = str(tmp_path_factory.mktemp("local_path") / "positions")
+    cfg = dataclasses.replace(CFG, index=dataclasses.replace(CFG.index, store_positions=True))
+    build_index(spark, _corpus(spark, range(12)), d, fields={"body": "content"}, cfg=cfg)
+    append_epoch(spark, d, _corpus(spark, range(12, 20)), fields={"body": "content"}, cfg=cfg)
     return BM25Index(spark, d)
 
 
@@ -54,6 +71,33 @@ def _counting_jobs(spark, fn):
     # the status tracker is fed by the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _py4j_commands(monkeypatch, fn):
+    """(``fn()``, the py4j commands it sent): the calling thread's
+    commands, less memory deletes ("m\nd\n<id>") of JavaObjects ``fn``
+    did not create (earlier tests' garbage freed meanwhile)."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    sent, created = [], set()
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting(self, command):
+        answer = send(self, command)
+        if threading.get_ident() == caller:
+            if not command.startswith("m\nd\n") or command.split("\n")[2] in created:
+                sent.append(command)
+            if answer.startswith("yro"):  # success, a new object reference
+                created.add(answer[2:])
+        return answer
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        out = fn()
+    return out, sent
 
 
 def _collect_counting_jobs(spark, df):
@@ -208,6 +252,69 @@ def test_open_refresh_and_first_local_search_are_job_free(spark, idx):
     assert fresh.postings is not postings and fresh.docids is not docids
 
 
+@pytest.mark.parametrize("index", ["idx", "positions_idx"])
+def test_spark_scans_take_the_footer_schema(spark, index, request, monkeypatch):
+    """The Spark scans read with the schema pyarrow takes from the same
+    files, so a fresh handle's first distributed search runs no
+    schema-inference job: it submits as many jobs as the second.  Without
+    pyarrow access Spark infers the same schema.  An index with stored
+    positions and a second epoch's files reads the same way."""
+    idx = request.getfixturevalue(index)
+    if index == "positions_idx":
+        assert idx.stats["store_positions"] and len(idx.epochs) == 2
+    inferred = {n: spark.read.parquet(f"{idx.index_dir}/{n}").schema for n in ("postings", "docids")}
+    fresh = BM25Index(spark, idx.index_dir)
+    scans = lambda: {n: getattr(fresh, n).schema for n in inferred}  # noqa: E731
+    assert scans() == inferred
+    fresh.refresh_stats()
+    search = lambda: fresh.search("alpha beta", 5, "and", prefer_local=False).collect()  # noqa: E731
+    (first_rows, first), (rows, second) = _counting_jobs(spark, search), _counting_jobs(spark, search)
+    assert first_rows == rows and len(first) == len(second), (first, second)
+
+    def no_arrow(*_a, **_k):
+        raise OSError("pyarrow cannot open this filesystem")
+
+    monkeypatch.setattr(fresh, "_dataset", no_arrow)
+    fresh.refresh_stats()
+    assert scans() == inferred
+
+
+def test_warm_local_search_makes_no_py4j_round_trip(spark, idx, monkeypatch):
+    """A warm local search() and its collect() stay on the driver: no py4j
+    command at all (the JVM LocalRelation is never built)."""
+    search = lambda: idx.search("alpha beta", 5, "and", prefer_local=True).collect()  # noqa: E731
+    want = search()
+    rows, sent = _py4j_commands(monkeypatch, search)
+    assert rows == want and sent == [], sent
+
+
+def test_held_frame_is_a_dataframe(spark, idx, monkeypatch):
+    """A held frame is a pyspark DataFrame: schema and columns cost no
+    round trip, and the DataFrame API over its lazily built JVM frame
+    answers as a plain frame on that JVM frame does."""
+    from pandas.testing import assert_frame_equal
+    from pyspark.sql import DataFrame
+
+    held = lambda: idx.search("alpha beta", 5, "and", prefer_local=True)  # noqa: E731
+    df = held()
+    assert isinstance(df, DataFrame)
+    (schema, columns), sent = _py4j_commands(monkeypatch, lambda: (df.schema, df.columns))
+    assert sent == [] and schema == RESULT_STRUCT and columns == RESULT_STRUCT.fieldNames()
+    plain = DataFrame(held()._jdf, spark)
+    assert type(plain) is not type(df)
+    assert held().select("doc_id", "rank").collect() == plain.select("doc_id", "rank").collect()
+    assert held().unionByName(plain).collect() == plain.unionByName(plain).collect()
+    assert_frame_equal(held().toPandas(), plain.toPandas())
+    assert held().count() == plain.count() == 5
+    # each frame owns its schema: mutating one leaves later frames whole
+    names, rows = list(RESULT_STRUCT.fieldNames()), df.collect()
+    df.schema.add("extra", "string")
+    later = held()
+    assert later.schema.fieldNames() == names == RESULT_STRUCT.fieldNames()
+    assert later.collect() == rows and all(r.__fields__ == names for r in later.collect())
+    assert DataFrame(later._jdf, spark).collect() == rows
+
+
 # column values of the frame parity rows: a non-ASCII doc_id, a docnum
 # past 2**32, a negative zero score
 _FRAME_COLUMNS = {
@@ -239,10 +346,12 @@ def _jvm_schema(df):
     ids=["result", "batch", "ranked"],
 )
 def test_local_frame_matches_create_data_frame(spark, idx, schema, n, conf):
-    """The handle's lean frame holds the rows and schema PySpark's own
-    Arrow-table createDataFrame gives, with 32- or 64-bit string offsets
-    and above the LocalRelation threshold (an RDD-backed frame)."""
+    """The handle's held frame and the JVM frame built from it hold the
+    rows and schema PySpark's own Arrow-table createDataFrame gives, with
+    32- or 64-bit string offsets and above the LocalRelation threshold (an
+    RDD-backed frame): the same values, Python types and field names."""
     import pyarrow as pa
+    from pyspark.sql import DataFrame
     from pyspark.sql.pandas.types import to_arrow_schema
 
     columns = [_FRAME_COLUMNS[f][:n] for f in schema.fieldNames()]
@@ -259,7 +368,10 @@ def test_local_frame_matches_create_data_frame(spark, idx, schema, n, conf):
         assert got.schema == want.schema == schema
         assert _jvm_schema(got) == _jvm_schema(want) == schema
         rows = got.collect()
-        assert rows == want.collect() and len(rows) == n
+        assert len(rows) == n
+        shape = lambda rs: [(r.__fields__, [type(v) for v in r]) for r in rs]  # noqa: E731
+        for other in (DataFrame(got._jdf, spark).collect(), want.collect()):
+            assert rows == other and shape(rows) == shape(other)
         if conf != "rdd-backed":
             assert _optimized_root(got) == "LocalRelation"
     finally:
@@ -271,33 +383,14 @@ def test_local_frame_matches_create_data_frame(spark, idx, schema, n, conf):
 
 
 def test_warm_local_frame_round_trips(spark, idx, monkeypatch):
-    """A warm frame crosses into the JVM only to read one conf and hand
-    over the Arrow stream: a handful of py4j round trips, where PySpark's
+    """Making a frame enters no JVM.  Its JVM build, on the first ``_jdf``
+    use of a warm frame, crosses in only to read one conf and hand over
+    the Arrow stream: a handful of py4j round trips, where PySpark's
     createDataFrame(pa.Table) takes over 20."""
-    import threading
-
-    from py4j.clientserver import ClientServerConnection
-
     columns = [_FRAME_COLUMNS[f] for f in RESULT_STRUCT.fieldNames()]
-    idx._local_frame(columns, RESULT_STRUCT)  # resolves the handle's JVM classes
-    sent, created = [], set()
-    send = ClientServerConnection.send_command
-    caller = threading.get_ident()
-
-    def counting(self, command):
-        answer = send(self, command)
-        # the frame's round trips: this thread's commands, less memory
-        # deletes ("m\nd\n<id>") of JavaObjects the frame did not create
-        # (earlier tests' garbage freed meanwhile)
-        if threading.get_ident() == caller:
-            if not command.startswith("m\nd\n") or command.split("\n")[2] in created:
-                sent.append(command)
-            if answer.startswith("yro"):  # success, a new object reference
-                created.add(answer[2:])
-        return answer
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    df = idx._local_frame(columns, RESULT_STRUCT)
+    idx._local_frame(columns, RESULT_STRUCT)._jdf  # resolves the handle's JVM classes
+    df, made = _py4j_commands(monkeypatch, lambda: idx._local_frame(columns, RESULT_STRUCT))
+    assert made == [], made
+    _, sent = _py4j_commands(monkeypatch, lambda: df._jdf)
     assert len(sent) <= 10, sent
-    monkeypatch.undo()
     assert len(df.collect()) == 3

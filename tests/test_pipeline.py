@@ -27,6 +27,20 @@ def test_bm25_no_rerank(spark, setup):
     assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
 
 
+def test_bm25_candidates_keep_the_result_schema(spark, setup):
+    """The BM25 leg joins the search rows with rank an int, as the search
+    result has it, and a query without hits returns the empty search
+    frame itself."""
+    from beetle_search_engine_spark.plans.query import RESULT_STRUCT
+
+    idx, docs = setup
+    hits = search_and_rerank(spark, idx, docs, "transformer models", "bm25", 10, 5)
+    assert hits.schema == RESULT_STRUCT
+    assert [r["rank"] for r in hits.collect()] == [1, 2, 3, 4, 5]
+    empty = search_and_rerank(spark, idx, docs, "zzznope transformer", "bm25", 10, 5)
+    assert empty.schema == RESULT_STRUCT and empty.collect() == []
+
+
 def test_bm25_with_rerank(spark, setup):
     idx, docs = setup
     rows = search_and_rerank(spark, idx, docs, "transformer models", "bm25", 10, 5, rerank=True).collect()
