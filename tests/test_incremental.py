@@ -4,6 +4,7 @@ query modes — this is the multi-epoch df-override + bound-rescale path.
 Plus a Structured Streaming foreachBatch smoke (each micro-batch -> epoch).
 """
 
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +15,7 @@ from beetle_search_engine_spark.sources.corpus import generate_corpus
 from beetle_search_engine_spark.streaming.incremental import append_epoch, stream_refresh
 
 from .oracle import assert_rank_identical
+from .test_local_path import _counting_jobs
 
 FIELDS = {"title": "path", "body": "content"}
 CFG = EngineConfig(
@@ -138,10 +140,9 @@ def test_uncommitted_epoch_is_not_served(spark, tmp_path):
     idx_dir = str(tmp_path / "idx")
     a = generate_corpus(spark, 120, seed=31)
     build_index(spark, a, idx_dir, fields=fields, cfg=cfg)
-    before = [
-        (r.doc_id, r.score)
-        for r in BM25Index(spark, idx_dir).search("spark", 10, "or").collect()
-    ]
+    # a handle that has already searched, before the crash
+    warm = BM25Index(spark, idx_dir)
+    before = [(r.doc_id, r.score) for r in warm.search("spark", 10, "or").collect()]
     # simulate the crash: append a real epoch, then roll back ONLY the
     # stats commit
     with open(f"{idx_dir}/stats.json") as f:
@@ -170,6 +171,63 @@ def test_uncommitted_epoch_is_not_served(spark, tmp_path):
         for r in BM25Index(spark, idx_dir).search("spark", 10, "or", prefer_local=False).collect()
     ]
     assert dist == before
+    # ...and the warm handle, before and after a refresh: the orphan's
+    # rows never enter the buckets it holds
+    for refresh in (False, True):
+        if refresh:
+            warm.refresh_stats()
+        assert [(r.doc_id, r.score) for r in warm.search("spark", 10, "or").collect()] == before
+        held = [t for key, pieces in warm._datasets.items() if isinstance(key, tuple)
+                for _, t in pieces]
+        assert held and all(pc.max(t["group"]).as_py() < 1000 for t in held)
+
+
+def test_warm_handle_serves_an_append_after_refresh(spark, tmp_path):
+    """One warm handle across an append: it keeps answering from the index
+    as it was until refresh_stats(), and afterwards its local search,
+    prefix expansion and docid lookups hold the epoch's documents and
+    terms, equal to a freshly opened handle's answers."""
+    import pyarrow.dataset as ds
+
+    fields = {"body": "content"}
+    cfg = EngineConfig(index=IndexConfig(n_buckets=4, bucket_groups=1, chunk_docs=32))
+    idx_dir = str(tmp_path / "idx")
+    build_index(spark, generate_corpus(spark, 120, seed=31), idx_dir, fields=fields, cfg=cfg)
+    queries = [("spark", "or"), ("spark partition", "and"), ("spa* OR quer*", "parse")]
+
+    def answers(ix):
+        return [
+            [(r.doc_id, r.score, r.rank) for r in ix.search(q, 500, m, prefer_local=True).collect()]
+            for q, m in queries
+        ]
+
+    warm = BM25Index(spark, idx_dir)
+    before, dictionary = answers(warm), warm._expand_term_range(None, None)
+    b = generate_corpus(spark, 60, seed=32).withColumn(
+        "path", F.concat(F.lit("b/"), F.col("path"))
+    ).withColumn("doc_id", F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256))
+    append_epoch(spark, idx_dir, b, fields=fields, cfg=cfg)
+    # point in time: the held view is the index as of the last refresh
+    assert answers(warm) == before and warm._expand_term_range(None, None) == dictionary
+    warm.refresh_stats()
+    fresh = BM25Index(spark, idx_dir)
+    after = answers(warm)
+    assert after == answers(fresh) and after != before
+    epoch_docs = {r.doc_id for r in b.select("doc_id").collect()}
+    assert all(epoch_docs & {d for d, _, _ in rows} for rows in after)
+    t = ds.dataset(f"{idx_dir}/postings", format="parquet", partitioning="hive").to_table(
+        columns=["term"], filter=ds.field("group") == 1001
+    )
+    epoch_only = set(t.column("term").to_pylist()) - set(dictionary)
+    assert epoch_only
+    grown = warm._expand_term_range(None, None)
+    assert grown == fresh._expand_term_range(None, None) and epoch_only <= set(grown)
+    for p in ("s", "qu", "zz"):
+        assert warm._expand_prefix(p) == fresh._expand_prefix(p)
+    docnums = [0, 119, 120, 179]  # first/last of the base and of the epoch
+    ids = warm._doc_ids(docnums)
+    assert ids == fresh._doc_ids(docnums) and sorted(ids) == docnums
+    assert {ids[120], ids[179]} <= epoch_docs
 
 
 def test_refresh_stats_rebuilds_the_distributed_scans(spark, tmp_path):
@@ -201,8 +259,9 @@ def test_refresh_stats_rebuilds_the_distributed_scans(spark, tmp_path):
 def test_term_expansion_reads_only_committed_epochs(spark, tmp_path, monkeypatch):
     """The term-dictionary walk behind prefix/range/wildcard expansion
     skips an uncommitted epoch's orphan postings on the pyarrow path,
-    exactly like the Spark fallback: terms that exist only there neither
-    count toward MAX_EXPANSION nor widen the scan."""
+    also in a handle that expanded before the crash and is refreshed
+    after it, exactly like the Spark fallback: terms that exist only
+    there neither count toward MAX_EXPANSION nor widen the scan."""
     import pyarrow.dataset as ds
 
     fields = {"body": "content"}
@@ -214,6 +273,10 @@ def test_term_expansion_reads_only_committed_epochs(spark, tmp_path, monkeypatch
     b = generate_corpus(spark, 60, seed=32).withColumn(
         "path", F.concat(F.lit("b/"), F.col("path"))
     ).withColumn("doc_id", F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256))
+    # a handle that has already searched and expanded, before the crash
+    warm = BM25Index(spark, idx_dir)
+    assert warm.search("spa* OR quer*", 5, "parse", prefer_local=True).collect()
+    committed = warm._expand_term_range(None, None)
     append_epoch(spark, idx_dir, b, fields=fields, cfg=cfg)
     with open(f"{idx_dir}/stats.json", "w") as f:
         f.write(stats_before)  # roll back the commit: group=1001 is an orphan
@@ -229,12 +292,19 @@ def test_term_expansion_reads_only_committed_epochs(spark, tmp_path, monkeypatch
     idx = BM25Index(spark, idx_dir)
     arrow = idx._expand_term_range(None, None)
     assert not orphan_only & set(arrow)
+    # the warm handle's dictionary, rebuilt over the orphan's files
+    warm.refresh_stats()
+    assert warm._expand_term_range(None, None) == arrow == committed
 
     def no_arrow(*_a, **_k):
         raise OSError("pyarrow cannot open this filesystem")
 
+    # refresh_stats drops the dictionary the handle holds, so the Spark
+    # fallback answers, and its jobs show it did
     monkeypatch.setattr(idx, "_dataset", no_arrow)
-    assert arrow == idx._expand_term_range(None, None)
+    idx.refresh_stats()
+    spark_terms, jobs = _counting_jobs(spark, lambda: idx._expand_term_range(None, None))
+    assert spark_terms == arrow and jobs
 
 
 def test_append_epoch_rejects_mismatched_fields(spark, tmp_path):

@@ -201,7 +201,9 @@ def test_local_search_builds_no_spark_scan(spark, idx, monkeypatch):
 
 def test_local_search_spark_fallback_matches(spark, idx, monkeypatch):
     """Without pyarrow access the local path reads the same pruned rows
-    through the Spark scan and answers identically."""
+    through the Spark scan and answers identically, also on a handle that
+    already holds the buckets and docids the same queries read."""
+    idx.refresh_stats()  # no Spark scan built yet
     queries = [("alpha beta", "and"), ("beta OR filler5", "parse")]
     want = [_triples(idx.search(q, 5, m, prefer_local=True).collect()) for q, m in queries]
     batch_want = idx.search_many({f"q{i}": q for i, (q, _) in enumerate(queries)}, 5, "parse",
@@ -212,11 +214,106 @@ def test_local_search_spark_fallback_matches(spark, idx, monkeypatch):
 
     monkeypatch.setattr(idx, "_pruned_rows_arrow", no_arrow)
     monkeypatch.setattr(idx, "_docids_arrow", no_arrow)
-    got = [_triples(idx.search(q, 5, m, prefer_local=True).collect()) for q, m in queries]
-    assert got == want
-    batch_got = idx.search_many({f"q{i}": q for i, (q, _) in enumerate(queries)}, 5, "parse",
-                                prefer_local=True).collect()
-    assert batch_got == batch_want
+    assert "postings" not in idx.__dict__ and "docids" not in idx.__dict__
+    # the fallbacks must still be the ones answering: their Spark jobs
+    # show, and each built the Spark scan it reads
+    got, jobs = _counting_jobs(spark, lambda: [
+        _triples(idx.search(q, 5, m, prefer_local=True).collect()) for q, m in queries
+    ])
+    assert got == want and jobs
+    assert "postings" in idx.__dict__ and "docids" in idx.__dict__
+    batch_got, jobs = _counting_jobs(spark, lambda: idx.search_many(
+        {f"q{i}": q for i, (q, _) in enumerate(queries)}, 5, "parse", prefer_local=True
+    ).collect())
+    assert batch_got == batch_want and jobs
+
+
+def test_repeated_local_query_reads_no_parquet(spark, idx, monkeypatch):
+    """A warm handle answers a repeated local query from what it holds
+    (posting buckets, docids, term dictionary): with every pyarrow read
+    failing, the same answers come back and no Spark fallback runs."""
+    queries = [("alpha beta", "and"), ("beta OR filler5", "parse"), ("filler1*", "parse"),
+               ("alpha NOT gamma", "parse")]
+    batch = {f"q{i}": q for i, (q, _) in enumerate(queries)}
+
+    def answers():
+        single = [_triples(idx.search(q, 5, m, prefer_local=True).collect()) for q, m in queries]
+        return single, idx.search_many(batch, 5, "parse", prefer_local=True).collect()
+
+    want = answers()
+    assert all(want[0]) and len(idx._expand_prefix("filler1")) == 11
+
+    def no_parquet(*_a, **_k):
+        raise OSError("parquet read on a warm handle")
+
+    monkeypatch.setattr(idx, "_dataset", no_parquet)
+    got, jobs = _counting_jobs(spark, answers)
+    assert got == want and jobs == [], jobs
+
+
+def test_delete_docs_applies_to_a_warm_handle(spark, tmp_path):
+    """Deletions drop documents at once from a handle that already holds
+    its buckets and docids, exactly as from a freshly opened one."""
+    d = str(tmp_path / "idx")
+    build_index(spark, _corpus(spark, range(20)), d, fields={"body": "content"}, cfg=CFG)
+    warm = BM25Index(spark, d)
+    search = lambda ix: _triples(ix.search("alpha beta", 5, "and", prefer_local=True).collect())  # noqa: E731
+    before = search(warm)
+    gone = before[0][0]
+    assert warm.delete_docs([gone]) == 1
+    after = search(warm)
+    assert gone not in {doc for doc, _, _ in after}
+    assert after == search(BM25Index(spark, d))
+    assert [doc for doc, _, _ in after][:4] == [doc for doc, _, _ in before][1:]
+
+
+def _frame_top_rows(scored, top_k: int) -> list[tuple]:
+    """The pandas ordering ``_top_rows`` replaced: sort_values on
+    (query_id asc, score desc, docnum asc), then rank within query_id."""
+    scored = scored.sort_values(["query_id", "score", "docnum"], ascending=[True, False, True])
+    rows, prev, rank = [], None, 0
+    for qid, d, s in zip(*(scored[c].tolist() for c in ("query_id", "docnum", "score"))):
+        rank = rank + 1 if qid == prev else 1
+        prev = qid
+        if rank <= top_k:
+            rows.append((qid, d, s, rank))
+    return rows
+
+
+def test_top_rows_matches_the_frame_sort():
+    """``_top_rows`` over plain tuples ranks exactly as the pandas frame
+    sort did, row for row: per-chunk kernel rows of several queries, with
+    score ties within and across chunks and queries, cut at random k."""
+    for seed in range(100):
+        _check_top_rows(seed)
+
+
+def _check_top_rows(seed: int) -> None:
+    import numpy as np
+    import pandas as pd
+
+    from beetle_search_engine_spark.plans.query import _top_rows
+
+    rng = np.random.default_rng(seed)
+    k = int(rng.integers(1, 8))
+    qids = [f"q{i}" for i in rng.choice(12, size=int(rng.integers(1, 5)), replace=False)]
+    tied = [1.0, 2.5, 2.5 + 2**-50, 7.25]
+    rows = []
+    for chunk in range(int(rng.integers(1, 5))):
+        for qid in qids:
+            n = int(rng.integers(0, k + 1))
+            docs = rng.choice(64, size=n, replace=False) + 64 * chunk
+            scores = np.where(rng.random(n) < 0.6, rng.choice(tied, size=n), rng.random(n) * 8)
+            rows += zip([qid] * n, docs.tolist(), scores.tolist())
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    frame = pd.DataFrame(rows, columns=["query_id", "docnum", "score"]).astype(
+        {"query_id": object, "docnum": "int64", "score": "float64"}
+    )
+    want = _frame_top_rows(frame, k)
+    got = _top_rows(rows, k)
+    assert got == want, seed
+    assert [tuple(map(type, r)) for r in got] == [tuple(map(type, r)) for r in want], seed
+    assert _top_rows([], k) == []
 
 
 def test_distributed_batch_answers_every_or_on_the_distributed_path(spark, idx, monkeypatch):

@@ -10,9 +10,11 @@ every kernel call ``make_wand_kernel`` hands to ``_rank``, ``_doc_ids``,
 ``_local_frame`` and the result's ``collect()``.  The first ``WARMUP``
 (20) queries are not measured, so every table row is taken after the
 same warm-up.  Prints one markdown table row per index (the
-ROADMAP local-latency budget table), each cell ``mean / p50`` in ms per
-query.  With ``--build-docs N`` and no index in INDEX_DIR, it first
-builds one from the seed's perfbench corpus of N documents.
+ROADMAP local-latency budget table), each stage cell ``mean / p50`` in ms
+per query, and a last cell with the MB the handle holds after the run:
+posting buckets / docids / term dictionary.  With ``--build-docs N`` and
+no index in INDEX_DIR, it first builds one from the seed's perfbench
+corpus of N documents.
 """
 
 from __future__ import annotations
@@ -43,8 +45,24 @@ def build(spark, index_dir: str, n_docs: int, seed: int) -> None:
     build_index(spark, corpus, index_dir, fields=inputs.FIELDS)
 
 
-def profile(spark, index_dir: str, seed: int, n_queries: int) -> dict[str, list[float]]:
-    """{"total" and each stage: seconds per measured query}."""
+def held_bytes(ix) -> dict[str, int]:
+    """Bytes of what a handle holds in ``_datasets``: the posting
+    buckets (``("postings", bucket)`` keys), the docids (``docnum_ids``)
+    and the term dictionary (``terms``)."""
+    out = {"postings": 0, "docids": 0, "terms": 0}
+    for key, held in ix._datasets.items():
+        if isinstance(key, tuple):
+            out["postings"] += sum(t.nbytes for _, t in held)
+        elif key == "docnum_ids":
+            out["docids"] += sum(part.nbytes for part in held)
+        elif key == "terms":
+            out["terms"] += held.nbytes
+    return out
+
+
+def profile(spark, index_dir: str, seed: int, n_queries: int):
+    """({"total" and each stage: seconds per measured query}, the
+    handle's ``held_bytes`` after the run)."""
     ix = query_mod.BM25Index(spark, index_dir)
     spent: dict[str, float] = {}
 
@@ -75,13 +93,14 @@ def profile(spark, index_dir: str, seed: int, n_queries: int) -> dict[str, list[
                 out["total"].append(total)
                 for s in STAGES:
                     out[s].append(spent.get(s, 0.0))
-        return out
+        return out, held_bytes(ix)
     finally:
         query_mod.make_wand_kernel = make_kernel
 
 
-def table_row(label: str, times: dict[str, list[float]]) -> str:
+def table_row(label: str, times: dict[str, list[float]], held: dict[str, int]) -> str:
     cells = [f"{mean(v) * 1e3:.1f} / {median(v) * 1e3:.1f}" for v in times.values()]
+    cells.append(" / ".join(f"{b / 2**20:.1f}" for b in held.values()))
     return f"| {label} | " + " | ".join(cells) + " |"
 
 
@@ -101,15 +120,16 @@ def main(argv=None) -> int:
             if not args.build_docs:
                 ap.error(f"no index in {args.index_dir}; pass --build-docs N to build one")
             build(spark, args.index_dir, args.build_docs, args.seed)
-        times = profile(spark, args.index_dir, args.seed, args.queries)
+        times, held = profile(spark, args.index_dir, args.seed, args.queries)
         n_docs = query_mod.BM25Index(spark, args.index_dir).stats["n_docs"]
     finally:
         spark.stop()
     print(f"{args.queries} warm queries of perfbench stream seed {args.seed} "
           f"after {WARMUP} unmeasured; ms per query, mean / p50")
-    print("| index | call | " + " | ".join(f"`{s}`" if s[0] == "_" else s for s in STAGES) + " |")
-    print("|---" * (len(STAGES) + 2) + "|")
-    print(table_row(f"{n_docs // 1000}k", times))
+    print("| index | call | " + " | ".join(f"`{s}`" if s[0] == "_" else s for s in STAGES)
+          + " | held MB (postings / docids / terms) |")
+    print("|---" * (len(STAGES) + 3) + "|")
+    print(table_row(f"{n_docs // 1000}k", times, held))
     return 0
 
 
