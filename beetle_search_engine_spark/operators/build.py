@@ -587,70 +587,28 @@ def _stored_config(stats: dict, cfg: EngineConfig = DEFAULT, **index_kw) -> Engi
 
 def _group_metrics_agg(spark: SparkSession, out_path: str) -> dict:
     """Per-group build metrics (postings/rows/bytes + per-bucket storage
-    skew) over 3 tiny int columns of the just-written group.
-
-    Driver-local pyarrow read first: a freshly-written group is hundreds
-    of one-per-bucket files, and a Spark scan pays per-file footer/task
+    skew) over 3 tiny int columns of the just-written group, read on the
+    driver with pyarrow: a freshly-written group is hundreds of
+    one-per-bucket files, and a Spark scan pays per-file footer/task
     overhead that can exceed the encode it measures at low core counts.
-    Falls back to a column-pruned Spark aggregation on filesystems the
-    driver can't read directly (the path that matters on a real cluster,
-    where this agg is trivially parallel)."""
-    try:
-        import pyarrow.dataset as ds
+    A group whose bucket range got no postings (tiny corpora / many
+    groups) holds no parquet file, and zero metrics are the truth."""
+    import pyarrow.dataset as ds
 
-        t = ds.dataset(out_path, format="parquet", partitioning="hive").to_table(
-            columns=["bucket", "n", "row_bytes"]
-        )
-        pdf = t.to_pandas()
-        per_bucket = pdf.groupby("bucket")["n"].sum()
-        return {
-            "postings": int(pdf["n"].sum()),
-            "rows": int(len(pdf)),
-            "bytes": int(pdf["row_bytes"].sum()),
-            "max_bucket": int(per_bucket.max()) if len(per_bucket) else 0,
-            "avg_bucket": float(per_bucket.mean()) if len(per_bucket) else 1.0,
-        }
-    except Exception:
-        zero = {"postings": 0, "rows": 0, "bytes": 0, "max_bucket": 0, "avg_bucket": 1.0}
-        # a group whose bucket range got no postings (tiny corpora /
-        # many groups) writes only _SUCCESS — neither reader can infer a
-        # schema from zero files, and zero metrics are the truth.  Only
-        # decidable with a LOCAL listing: os.walk on an hdfs://|s3:// URI
-        # yields nothing, which must not be read as "empty" — remote
-        # paths fall through to the Spark aggregation (the whole point
-        # of this branch on a real cluster) and the schema-inference
-        # error for a genuinely empty remote dir is caught below.
-        if os.path.isdir(out_path) and not any(
-            fn.endswith(".parquet")
-            for _r, _d, fns in os.walk(out_path)
-            for fn in fns
-        ):
-            return zero
-        try:
-            reader = spark.read.parquet(out_path)
-        except Exception as e:
-            if "UNABLE_TO_INFER_SCHEMA" in str(e) or "infer schema" in str(e).lower():
-                return zero
-            raise
-        row = (
-            reader
-            .groupBy("bucket")
-            .agg(
-                F.sum("n").alias("postings"),
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("row_bytes").alias("bytes"),  # column-pruned: never
-                # rereads the binary posting blobs
-            )
-            .agg(
-                F.sum("postings").alias("postings"),
-                F.sum("rows").alias("rows"),
-                F.sum("bytes").alias("bytes"),
-                F.max("postings").alias("max_bucket"),
-                F.avg("postings").alias("avg_bucket"),
-            )
-            .collect()[0]
-        )
-        return {k: row[k] for k in ("postings", "rows", "bytes", "max_bucket", "avg_bucket")}
+    if not any(fn.endswith(".parquet") for _r, _d, fns in os.walk(out_path) for fn in fns):
+        return {"postings": 0, "rows": 0, "bytes": 0, "max_bucket": 0, "avg_bucket": 1.0}
+    t = ds.dataset(out_path, format="parquet", partitioning="hive").to_table(
+        columns=["bucket", "n", "row_bytes"]
+    )
+    pdf = t.to_pandas()
+    per_bucket = pdf.groupby("bucket")["n"].sum()
+    return {
+        "postings": int(pdf["n"].sum()),
+        "rows": int(len(pdf)),
+        "bytes": int(pdf["row_bytes"].sum()),
+        "max_bucket": int(per_bucket.max()) if len(per_bucket) else 0,
+        "avg_bucket": float(per_bucket.mean()) if len(per_bucket) else 1.0,
+    }
 
 
 def _build_metrics(t0: float, n_docs: int, groups: list[dict], vocab_size: int, n_hot_terms: int) -> dict:

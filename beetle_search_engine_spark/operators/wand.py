@@ -83,12 +83,13 @@ class _Row:
 
 
 class _Cursor:
-    """Per (field, term) sorted row list with a suffix-max score bound."""
+    """Per (field, term) row list, sorted by (doc_lo, epoch), with a
+    suffix-max score bound."""
 
     __slots__ = ("field", "term", "rows", "ptr", "suffix_ub", "df", "n")
 
     def __init__(self, field, term, rows):
-        rows.sort(key=lambda r: r.doc_lo)
+        rows.sort(key=lambda r: (r.doc_lo, r.epoch))
         self.field, self.term, self.rows = field, term, rows
         self.ptr = 0
         ub = 0.0
@@ -120,6 +121,12 @@ class _Cursor:
 
 
 def _cursors_from_pdf(pdf: pd.DataFrame) -> dict[tuple[str, str], _Cursor]:
+    """One cursor per (field, term) of a chunk's posting rows, in
+    (field, term) order, each cursor's rows in (doc_lo, epoch) order.
+    Every kernel loop walks cursors and rows in this canonical order, so
+    the float sums of a document's score, and with them the scores, do
+    not depend on the order the rows arrive in (a Spark scan and a
+    pyarrow read hand them over differently)."""
     groups: dict[tuple[str, str], list[_Row]] = {}
     fields = pdf["field"].to_numpy()
     terms = pdf["term"].to_numpy()
@@ -140,7 +147,7 @@ def _cursors_from_pdf(pdf: pd.DataFrame) -> dict[tuple[str, str], _Cursor]:
                 docs[i], tfs[i], dls[i], pos[i] if pos is not None else b"",
             )
         )
-    return {k: _Cursor(k[0], k[1], v) for k, v in groups.items()}
+    return {k: _Cursor(k[0], k[1], groups[k]) for k in sorted(groups)}
 
 
 def _gather_segments(flat: np.ndarray, starts: np.ndarray, counts: np.ndarray):

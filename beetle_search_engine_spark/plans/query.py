@@ -38,8 +38,10 @@ later queries from them in memory, so a warm local query reads no
 parquet.  ``refresh_stats()`` drops all of it; tombstones are re-read
 by ``delete_docs`` itself, so deletions apply at once.  Opening or
 refreshing a handle touches no JVM either: the Spark scans
-(``postings``, ``docids``) are built on first use, by the distributed
-path or a Spark fallback, with the schema pyarrow reads from the footers.
+(``postings``, ``docids``) are built on first use by the distributed
+path, with the schema pyarrow reads from the footers.  The local path
+has no Spark fallback: an index the engine opens is a driver-visible
+directory, and a failing pyarrow read raises.
 Match-all queries ('*', '* OR x') have no cursors; their own plans
 answer them.
 """
@@ -97,8 +99,8 @@ def _top_rows(scored, top_k: int) -> list[tuple]:
 
 
 def _chunks(pdf):
-    """The posting rows split by ``chunk``, ascending, each chunk's rows
-    in scan order (one stable sort; one chunk is the same code path)."""
+    """The posting rows split by ``chunk``, ascending (one stable sort;
+    one chunk is the same code path)."""
     import numpy as np
 
     keys = pdf["chunk"].to_numpy()
@@ -169,10 +171,10 @@ def read_index_metrics(index_dir: str) -> dict:
 class BM25Index:
     """Handle over a built index directory; caches stats and tombstones,
     holds what the local path reads, and builds the Spark scans only when
-    a distributed call or a Spark fallback first needs them (the
-    reference reopens its index from disk on every query,
-    search_bm25.py:27 — here the driver holds the cached plan).  Opening
-    a handle runs no Spark job and makes no py4j round trip.
+    a distributed call first needs them (the reference reopens its index
+    from disk on every query, search_bm25.py:27 — here the driver holds
+    the cached plan).  Opening a handle runs no Spark job and makes no
+    py4j round trip.
 
     Held in ``_datasets``, each read on first use: the pyarrow datasets,
     every touched bucket's committed posting rows, the committed docids
@@ -221,24 +223,19 @@ class BM25Index:
     # stats; the partition-column isin filters prune them for free (and a
     # retried append overwrites them in place).  Base groups (< 1000) are
     # guarded by the group-manifest cleanup at build time.
-    # ``_arrow_postings`` / ``_docids_arrow`` apply the same filters to the
+    # ``_arrow_postings`` / ``_doc_ids`` apply the same filters to the
     # pyarrow reads.
 
     def _spark_scan(self, name: str) -> DataFrame:
         """``spark.read.parquet`` of one index directory (``postings`` or
         ``docids``) with the schema of its cached pyarrow dataset, every
         field nullable as Spark's file reader reports it, so building the
-        scan runs no schema-inference job.  Inference stays the fallback
-        when pyarrow cannot open the path (the ``_pruned_rows`` rule)."""
+        scan runs no schema-inference job."""
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        path = f"{self.index_dir}/{name}"
-        try:
-            arrow = self._dataset(name).schema
-        except Exception:
-            return self.spark.read.parquet(path)
+        arrow = self._dataset(name).schema
         schema = StructType([StructField(f.name, f.dataType) for f in from_arrow_schema(arrow)])
-        return self.spark.read.schema(schema).parquet(path)
+        return self.spark.read.schema(schema).parquet(f"{self.index_dir}/{name}")
 
     @cached_property
     def postings(self) -> DataFrame:
@@ -329,44 +326,30 @@ class BM25Index:
             columns=columns, filter=committed if flt is None else committed & flt
         )
 
-    def _scan_order(self) -> dict[tuple[int, int], int]:
-        """{(group, bucket): the place of its posting directory in the
-        pyarrow scan order}, from the dataset's file list."""
-        import re
-
-        def order():
-            out: dict[tuple[int, int], int] = {}
-            for path in self._dataset("postings").files:
-                m = re.search(r"group=(\d+)/bucket=(\d+)/[^/]*$", path)
-                out.setdefault((int(m[1]), int(m[2])), len(out))
-            return out
-
-        return self._held("scan_order", order)
-
-    def _bucket_rows(self, buckets: list[int]) -> list[tuple[int, object]]:
-        """The committed posting rows of ``buckets`` as [(scan place,
-        pyarrow table)], one table per group directory, so that rows of
-        several buckets can be put in the order one scan of them returns
-        (``_pruned_rows_arrow``).  A bucket's rows are read on its first
-        use (all of a query's new buckets in one scan) and held under
+    def _bucket_rows(self, buckets: list[int]) -> list:
+        """The committed posting rows of ``buckets``, one pyarrow table
+        per bucket.  A bucket's rows are read on its first use (all of a
+        query's new buckets in one scan) and held under
         ``("postings", bucket)`` for the handle's life."""
         import numpy as np
+        import pyarrow as pa
         import pyarrow.dataset as ds
 
         new = [b for b in buckets if ("postings", b) not in self._datasets]
         if new:
             t = self._arrow_postings(ds.field("bucket").isin(new))
-            groups, bucket = t["group"].to_numpy(), t["bucket"].to_numpy()
-            change = (np.diff(groups) != 0) | (np.diff(bucket) != 0)
-            cuts = [0, *(np.flatnonzero(change) + 1).tolist(), t.num_rows]
+            bucket = t["bucket"].to_numpy()
+            cuts = [0, *(np.flatnonzero(np.diff(bucket)) + 1).tolist(), t.num_rows]
+            # zero-copy: a bucket's runs (one per group directory) as slices
             held = {b: [] for b in new}
-            place = self._scan_order()
             for a, z in zip(cuts, cuts[1:]):
                 if z > a:
-                    g, b = int(groups[a]), int(bucket[a])
-                    held[b].append((place[(g, b)], t.slice(a, z - a)))
-            self._datasets.update((("postings", b), pieces) for b, pieces in held.items())
-        return [p for b in buckets for p in self._datasets[("postings", b)]]
+                    held[int(bucket[a])].append(t.slice(a, z - a))
+            self._datasets.update(
+                (("postings", b), pa.concat_tables(runs or [t.slice(0, 0)]))
+                for b, runs in held.items()
+            )
+        return [self._datasets[("postings", b)] for b in buckets]
 
     def _buckets_for(self, terms: list[str]) -> dict[str, int]:
         # driver-local pure-Python XXH64, parity-tested vs Spark's
@@ -390,18 +373,13 @@ class BM25Index:
         import os
 
         import numpy as np
+        import pyarrow.dataset as ds
 
         tomb_dir = f"{self.index_dir}/tombstones"
         self.deleted = None
         if os.path.isdir(tomb_dir):
-            try:
-                import pyarrow.dataset as ds
-
-                t = ds.dataset(tomb_dir, format="parquet").to_table(columns=["docnum"])
-                arr = np.unique(np.asarray(t.column("docnum").to_numpy(), dtype=np.int64))
-            except Exception:
-                rows = self.spark.read.parquet(tomb_dir).select("docnum").distinct().collect()
-                arr = np.array(sorted(int(r["docnum"]) for r in rows), dtype=np.int64)
+            t = ds.dataset(tomb_dir, format="parquet").to_table(columns=["docnum"])
+            arr = np.unique(np.asarray(t.column("docnum").to_numpy(), dtype=np.int64))
             if arr.size:
                 self.deleted = arr
 
@@ -565,7 +543,10 @@ class BM25Index:
         and ``collect()`` do not enter the JVM (interactive latency); it
         becomes an Arrow LocalRelation only when another DataFrame
         method needs the JVM frame.  Defaults to n_docs <= 200k; results
-        identical by construction."""
+        identical by construction: the kernels walk their rows in one
+        canonical order (``wand._cursors_from_pdf``), so both paths give
+        the same ids and bit-identical scores
+        (``tests/test_local_path.py::test_paths_agree_bit_for_bit``)."""
         pq = self._parse(query, mode)
         if pq and (pq.every or pq.every_or):
             return self._every(pq, top_k, prefer_local)
@@ -753,24 +734,12 @@ class BM25Index:
         The handle's held term dictionary (``_term_dictionary``) answers
         it by bisection.  Unlike single-term lookups a range cannot prune
         bucket partitions (terms are hash-bucketed), so the dictionary is
-        every committed term, read once per handle.  Without pyarrow the
-        range is a term predicate pushed into the Spark scan (row-group
-        min/max stats skip what lies outside it).  A None bound is
+        every committed term, read once per handle.  A None bound is
         open-ended.  Reads committed epochs only, like every other scan
         of this handle."""
         import bisect
 
-        try:
-            terms = self._term_dictionary()
-        except Exception:
-            flt = None
-            if lo is not None:
-                flt = F.col("term") >= lo if lo_incl else F.col("term") > lo
-            if hi is not None:
-                h = F.col("term") <= hi if hi_incl else F.col("term") < hi
-                flt = h if flt is None else flt & h
-            scan = self.postings if flt is None else self.postings.filter(flt)
-            return sorted(r["term"] for r in scan.select("term").distinct().collect())
+        terms = self._term_dictionary()
 
         def at(bound, after):
             """Where ``bound`` sorts in the dictionary: before an equal
@@ -904,38 +873,24 @@ class BM25Index:
             ranges=[], excluded_ranges=[], wildcards=[], excluded_wildcards=[],
         )
 
-    def _pruned_rows_arrow(self, terms: list[str], buckets: dict[str, int]):
-        """Driver-local pruned read of the posting parquet via pyarrow —
-        no Spark job at all.  Each touched bucket's committed rows are read
-        once per handle (``_bucket_rows``); a query then filters the held
-        tables by term in memory, in the row order a bucket-pruned scan
-        of the files returns, and drops the ``group``/``bucket``
-        partition columns, which no kernel reads, before ``to_pandas``."""
+    def _pruned_rows(self, terms: list[str], buckets: dict[str, int]):
+        """Driver-local pruned read of the posting parquet as pandas — no
+        Spark job at all.  Each touched bucket's committed rows are read
+        through pyarrow once per handle (``_bucket_rows``, dropped by
+        ``refresh_stats``); a query then filters the held tables by term
+        in memory and drops the ``group``/``bucket`` partition columns,
+        which no kernel reads, before ``to_pandas``."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        pieces = sorted(self._bucket_rows(sorted(set(buckets.values()))), key=lambda p: p[0])
-        t = pa.concat_tables(
-            [t for _, t in pieces] or [self._dataset("postings").schema.empty_table()]
-        )
+        t = pa.concat_tables(self._bucket_rows(sorted(set(buckets.values()))))
         t = t.filter(pc.is_in(t["term"], value_set=pa.array(terms, pa.string())))
         return t.drop_columns(["group", "bucket"]).to_pandas()
 
-    def _pruned_rows(self, terms: list[str], buckets: dict[str, int]):
-        """The pruned posting rows as pandas: from the buckets the handle
-        holds (read through pyarrow once per handle, dropped by
-        ``refresh_stats``) when pyarrow can read the index, else the same
-        pruning through the Spark scan (e.g. a filesystem pyarrow cannot
-        open)."""
-        try:
-            return self._pruned_rows_arrow(terms, buckets)
-        except Exception:
-            return self._pruned_scan(terms, buckets).toPandas()
-
-    def _docids_arrow(self, docnums: list[int]) -> dict[int, str]:
-        """docnum -> display id from the committed docids dimension, read
-        through pyarrow once per handle and held with its docnum sort
-        order: a lookup is a ``searchsorted`` and a ``take``."""
+    def _doc_ids(self, docnums: list[int]) -> dict[int, str]:
+        """docnum -> display id for the winners, from the committed docids
+        dimension, read through pyarrow once per handle and held with its
+        docnum sort order: a lookup is a ``searchsorted`` and a ``take``."""
         import numpy as np
         import pyarrow.dataset as ds
 
@@ -955,18 +910,6 @@ class BM25Index:
         at = np.minimum(np.searchsorted(nums, want), nums.size - 1)
         hit = nums[at] == want
         return dict(zip(want[hit].tolist(), ids.take(order[at[hit]]).to_pylist()))
-
-    def _doc_ids(self, docnums: list[int]) -> dict[int, str]:
-        """docnum -> display id for the winners: the handle's held
-        docids (``_docids_arrow``), else a Spark lookup."""
-        try:
-            return self._docids_arrow(docnums)
-        except Exception:
-            rows = (
-                self.docids.filter(F.col("docnum").isin(docnums))
-                .select("docnum", "doc_id").collect()
-            )
-            return {r["docnum"]: r["doc_id"] for r in rows}
 
 
 def search_bm25(spark: SparkSession, index_dir: str, query: str, top_k: int = 10, mode: str = "and") -> DataFrame:

@@ -11,6 +11,7 @@ import json
 import os
 import re
 
+import pyarrow as pa
 import pyarrow.dataset as ds
 import pytest
 
@@ -180,3 +181,25 @@ def test_groups_without_postings_get_dir_and_zero_manifest(spark, tmp_path):
     idx = BM25Index(spark, d)
     assert sorted(r.doc_id for r in idx.search("alpha", 5, "or").collect()) == ["d0", "d1"]
     assert idx.search("beta", 5, "or").collect() == []
+
+
+def test_group_metrics_of_a_success_only_group_are_zero(spark, tmp_path):
+    """A group directory holding only a ``_SUCCESS`` marker has zero
+    metrics, read without Spark; a group with files is read with
+    pyarrow alone, so a failing read raises instead of running a Spark
+    aggregation."""
+    empty = tmp_path / "group=0"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    zero, jobs = _with_jobs(spark, lambda: B._group_metrics_agg(spark, str(empty)))
+    assert jobs == 0
+    assert zero == {"postings": 0, "rows": 0, "bytes": 0, "max_bucket": 0, "avg_bucket": 1.0}
+    broken = tmp_path / "group=1" / "bucket=3"
+    broken.mkdir(parents=True)
+    (broken / "part-0.parquet").write_bytes(b"not parquet")
+
+    def read_broken():
+        with pytest.raises(pa.ArrowInvalid):
+            B._group_metrics_agg(spark, str(tmp_path / "group=1"))
+
+    assert _with_jobs(spark, read_broken)[1] == 0

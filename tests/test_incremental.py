@@ -177,8 +177,7 @@ def test_uncommitted_epoch_is_not_served(spark, tmp_path):
         if refresh:
             warm.refresh_stats()
         assert [(r.doc_id, r.score) for r in warm.search("spark", 10, "or").collect()] == before
-        held = [t for key, pieces in warm._datasets.items() if isinstance(key, tuple)
-                for _, t in pieces]
+        held = [t for key, t in warm._datasets.items() if isinstance(key, tuple)]
         assert held and all(pc.max(t["group"]).as_py() < 1000 for t in held)
 
 
@@ -258,10 +257,11 @@ def test_refresh_stats_rebuilds_the_distributed_scans(spark, tmp_path):
 
 def test_term_expansion_reads_only_committed_epochs(spark, tmp_path, monkeypatch):
     """The term-dictionary walk behind prefix/range/wildcard expansion
-    skips an uncommitted epoch's orphan postings on the pyarrow path,
-    also in a handle that expanded before the crash and is refreshed
-    after it, exactly like the Spark fallback: terms that exist only
-    there neither count toward MAX_EXPANSION nor widen the scan."""
+    skips an uncommitted epoch's orphan postings, also in a handle that
+    expanded before the crash and is refreshed after it: terms that
+    exist only there neither count toward MAX_EXPANSION nor widen the
+    scan.  A failing read of the dictionary raises, and runs no Spark
+    job in its place."""
     import pyarrow.dataset as ds
 
     fields = {"body": "content"}
@@ -299,12 +299,17 @@ def test_term_expansion_reads_only_committed_epochs(spark, tmp_path, monkeypatch
     def no_arrow(*_a, **_k):
         raise OSError("pyarrow cannot open this filesystem")
 
-    # refresh_stats drops the dictionary the handle holds, so the Spark
-    # fallback answers, and its jobs show it did
+    # refresh_stats drops the dictionary the handle holds, so the
+    # expansion reads it again, and that read fails
     monkeypatch.setattr(idx, "_dataset", no_arrow)
     idx.refresh_stats()
-    spark_terms, jobs = _counting_jobs(spark, lambda: idx._expand_term_range(None, None))
-    assert spark_terms == arrow and jobs
+
+    def expand():
+        with pytest.raises(OSError, match="cannot open"):
+            idx._expand_term_range(None, None)
+
+    _, jobs = _counting_jobs(spark, expand)
+    assert jobs == []
 
 
 def test_append_epoch_rejects_mismatched_fields(spark, tmp_path):

@@ -122,7 +122,12 @@ def random_tree(rng):
     return (top, tuple(kids))
 
 
-def run_kernels(seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False, tree=False):
+def run_kernels(
+    seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False, tree=False, shuffle=None
+):
+    """(kernel top-k, brute-force top-k) of one random corpus and query.
+    With ``shuffle`` (a seed), each chunk's posting rows reach the
+    kernel in a random order."""
     rng = random.Random(seed)
     cfg = EngineConfig(
         bm25=BM25Params(field_boosts={"body": 1.0}),
@@ -220,6 +225,8 @@ def run_kernels(seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False, 
     )
     results = []
     for chunk, grp in enc[enc.term.isin(terms)].groupby("chunk"):
+        if shuffle is not None:
+            grp = grp.sample(frac=1.0, random_state=shuffle + int(chunk))
         results.append(wk(grp.reset_index(drop=True)))
     got = pd.concat(results, ignore_index=True) if results else pd.DataFrame({"docnum": [], "score": []})
     got = got.sort_values(["score", "docnum"], ascending=[False, True]).head(k)
@@ -287,3 +294,25 @@ def test_group_kernel_matches_brute_force(seed, n_docs, hot_salts, tree):
         assert abs(gs - ws) < 1e-9, (got, want)
         if gd != wd:  # tie swap only
             assert abs(gs - ws) < 1e-9
+
+
+@given(
+    seed=st.integers(0, 10_000),
+    n_docs=st.integers(5, 120),
+    shape=st.sampled_from(["and", "or", "taat", "group", "tree"]),
+    hot_salts=st.sampled_from([1, 2, 3]),
+    shuffle=st.integers(0, 1_000),
+)
+@settings(max_examples=200, deadline=None)
+def test_kernel_output_ignores_row_order(seed, n_docs, shape, hot_salts, shuffle):
+    """Every kernel (and, WAND or, TAAT or, group, tree) returns the same
+    docs and bit-identical scores whatever order a chunk's posting rows
+    arrive in: the Spark scan and the pyarrow read differ in it."""
+    mode = {"taat": "or", "tree": "group"}.get(shape, shape)
+    kw = dict(
+        taat_density=0.0 if shape == "taat" else 2.0 if shape == "or" else 0.25,
+        groups=shape == "group", tree=shape == "tree",
+    )
+    got, _ = run_kernels(seed, n_docs, mode, hot_salts, **kw)
+    shuffled, _ = run_kernels(seed, n_docs, mode, hot_salts, shuffle=shuffle, **kw)
+    assert shuffled == got

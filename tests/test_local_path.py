@@ -190,7 +190,7 @@ def test_local_and_distributed_frames_union(spark, idx):
 
 
 def test_local_search_builds_no_spark_scan(spark, idx, monkeypatch):
-    """The Spark posting scan is only built by the pyarrow fallback."""
+    """The local path never builds the Spark posting scan."""
     def no_scan(*_a, **_k):
         raise AssertionError("Spark scan built on the pyarrow path")
 
@@ -199,33 +199,76 @@ def test_local_search_builds_no_spark_scan(spark, idx, monkeypatch):
     assert _triples(idx.search("alpha beta", 5, "and", prefer_local=True).collect()) == want
 
 
-def test_local_search_spark_fallback_matches(spark, idx, monkeypatch):
-    """Without pyarrow access the local path reads the same pruned rows
-    through the Spark scan and answers identically, also on a handle that
-    already holds the buckets and docids the same queries read."""
-    idx.refresh_stats()  # no Spark scan built yet
-    queries = [("alpha beta", "and"), ("beta OR filler5", "parse")]
-    want = [_triples(idx.search(q, 5, m, prefer_local=True).collect()) for q, m in queries]
-    batch_want = idx.search_many({f"q{i}": q for i, (q, _) in enumerate(queries)}, 5, "parse",
-                                 prefer_local=True).collect()
+@pytest.mark.parametrize("failing", ["postings", "docids"])
+@pytest.mark.parametrize("query", ["alpha beta", "filler1* OR gamma"])
+def test_failing_arrow_read_raises_without_spark_jobs(spark, idx, monkeypatch, failing, query):
+    """The local path has no Spark fallback: when a fresh handle's
+    pyarrow read of the postings (buckets or term dictionary) or of the
+    docids fails, a local search() raises that error and submits no
+    Spark job."""
+    fresh = BM25Index(spark, idx.index_dir)
+    dataset = fresh._dataset
 
-    def no_arrow(*_a, **_k):
-        raise OSError("pyarrow cannot open this filesystem")
+    def failing_read(name):
+        if name == failing:
+            raise OSError(f"pyarrow cannot open {name}")
+        return dataset(name)
 
-    monkeypatch.setattr(idx, "_pruned_rows_arrow", no_arrow)
-    monkeypatch.setattr(idx, "_docids_arrow", no_arrow)
-    assert "postings" not in idx.__dict__ and "docids" not in idx.__dict__
-    # the fallbacks must still be the ones answering: their Spark jobs
-    # show, and each built the Spark scan it reads
-    got, jobs = _counting_jobs(spark, lambda: [
-        _triples(idx.search(q, 5, m, prefer_local=True).collect()) for q, m in queries
-    ])
-    assert got == want and jobs
-    assert "postings" in idx.__dict__ and "docids" in idx.__dict__
-    batch_got, jobs = _counting_jobs(spark, lambda: idx.search_many(
-        {f"q{i}": q for i, (q, _) in enumerate(queries)}, 5, "parse", prefer_local=True
-    ).collect())
-    assert batch_got == batch_want and jobs
+    monkeypatch.setattr(fresh, "_dataset", failing_read)
+
+    def search():
+        with pytest.raises(OSError, match=f"cannot open {failing}"):
+            fresh.search(query, 5, "parse", prefer_local=True)
+
+    _, jobs = _counting_jobs(spark, search)
+    assert jobs == [], f"a failing local read ran Spark jobs {jobs}"
+
+
+@pytest.fixture(scope="module")
+def perfbench_idx(spark, tmp_path_factory):
+    """The 4000-document perfbench corpus of seed 601, default layout."""
+    from beetle_search_engine_spark.sources import generate_corpus
+    from perfbench import inputs
+
+    d = str(tmp_path_factory.mktemp("local_path") / "perfbench")
+    build_index(spark, generate_corpus(spark, inputs.CORPUS_DOCS, seed=601), d,
+                fields=inputs.FIELDS)
+    return BM25Index(spark, d)
+
+
+def _both_paths(ix, batch: dict[str, str], top_k: int) -> list[list[tuple]]:
+    """(query_id, doc_id, score, rank) rows of ``batch`` on the local and
+    on the distributed path."""
+    return [
+        [(r.query_id, r.doc_id, r.score, r.rank)
+         for r in ix.search_many(batch, top_k, "parse", prefer_local=local).collect()]
+        for local in (True, False)
+    ]
+
+
+def test_paths_agree_bit_for_bit(spark, perfbench_idx):
+    """The local and distributed paths return the same ids and ranks and
+    equal (==) scores for the 200 queries of the perfbench stream: the
+    kernels walk cursors and rows in one canonical order, whatever order
+    the pyarrow read and the Spark scan hand the rows over in."""
+    from perfbench import inputs
+
+    batch = {f"q{i}": q for i, q in enumerate(inputs.queries(901, 200))}
+    local, dist = _both_paths(perfbench_idx, batch, inputs.TOP_K)
+    assert len({r[0] for r in local}) > 150  # most stream queries match
+    differ = sorted({r[0] for r in set(local) ^ set(dist)})
+    assert local == dist, f"{len(differ)} queries differ: {differ[:10]}"
+
+
+def test_paths_agree_bit_for_bit_across_epochs(spark, positions_idx):
+    """The same on an index with positions and a second epoch, whose
+    rows share a chunk (docnums 8-15) with the first epoch's."""
+    queries = ["alpha", "alpha beta", "gamma OR filler3 OR filler15", '"beta gamma"',
+               "alpha NOT gamma", "filler1*", "alpha OR beta OR gamma", '"alpha beta"~3']
+    batch = {f"q{i}": q for i, q in enumerate(queries)}
+    local, dist = _both_paths(positions_idx, batch, 20)
+    assert {r[0] for r in local} == set(batch)
+    assert local == dist
 
 
 def test_repeated_local_query_reads_no_parquet(spark, idx, monkeypatch):
@@ -350,12 +393,12 @@ def test_open_refresh_and_first_local_search_are_job_free(spark, idx):
 
 
 @pytest.mark.parametrize("index", ["idx", "positions_idx"])
-def test_spark_scans_take_the_footer_schema(spark, index, request, monkeypatch):
+def test_spark_scans_take_the_footer_schema(spark, index, request):
     """The Spark scans read with the schema pyarrow takes from the same
     files, so a fresh handle's first distributed search runs no
-    schema-inference job: it submits as many jobs as the second.  Without
-    pyarrow access Spark infers the same schema.  An index with stored
-    positions and a second epoch's files reads the same way."""
+    schema-inference job: it submits as many jobs as the second.  An
+    index with stored positions and a second epoch's files reads the
+    same way."""
     idx = request.getfixturevalue(index)
     if index == "positions_idx":
         assert idx.stats["store_positions"] and len(idx.epochs) == 2
@@ -367,13 +410,6 @@ def test_spark_scans_take_the_footer_schema(spark, index, request, monkeypatch):
     search = lambda: fresh.search("alpha beta", 5, "and", prefer_local=False).collect()  # noqa: E731
     (first_rows, first), (rows, second) = _counting_jobs(spark, search), _counting_jobs(spark, search)
     assert first_rows == rows and len(first) == len(second), (first, second)
-
-    def no_arrow(*_a, **_k):
-        raise OSError("pyarrow cannot open this filesystem")
-
-    monkeypatch.setattr(fresh, "_dataset", no_arrow)
-    fresh.refresh_stats()
-    assert scans() == inferred
 
 
 def test_warm_local_search_makes_no_py4j_round_trip(spark, idx, monkeypatch):

@@ -52,7 +52,7 @@ def held_bytes(ix) -> dict[str, int]:
     out = {"postings": 0, "docids": 0, "terms": 0}
     for key, held in ix._datasets.items():
         if isinstance(key, tuple):
-            out["postings"] += sum(t.nbytes for _, t in held)
+            out["postings"] += held.nbytes
         elif key == "docnum_ids":
             out["docids"] += sum(part.nbytes for part in held)
         elif key == "terms":
