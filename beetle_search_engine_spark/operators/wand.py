@@ -1,11 +1,16 @@
 """Query-time top-k kernels (SURVEY.md §4.2.3, J7/K1).
 
-Runs per docnum *chunk* — under ``groupBy("chunk").applyInPandas`` on
+Runs per docnum *chunk* — under ``groupBy("chunk").applyInArrow`` on
 the distributed path, one chunk after another on the driver-local path.
 The posting rows for the query's terms, already bucket-pruned at the
 scan, are grouped by chunk so every chunk scores independently and
 returns at most k rows; ``plans/query._rank`` merges each query's
 (chunks x k) rows into its global top-k on the driver.
+
+Arrow in, Arrow out: a kernel takes a chunk's posting rows as a
+``pa.Table`` and returns a ``pa.Table`` of ``OUT_SCHEMA`` (docnum int64,
+score float64), so neither search path builds a pandas frame.  A pandas
+frame is still accepted and converted once on entry.
 
 Two kernels, mirroring the reference's query semantics:
 
@@ -38,23 +43,32 @@ from __future__ import annotations
 import heapq
 import math
 from functools import reduce
+from itertools import repeat
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from .codecs import decode_docgaps, decode_positions, varint_decode
 from .scoring import term_scores
 
-EMPTY = pd.DataFrame({"docnum": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
+OUT_SCHEMA = pa.schema([("docnum", pa.int64()), ("score", pa.float64())])
+EMPTY = OUT_SCHEMA.empty_table()
+
+
+def _out(docs, scores) -> pa.Table:
+    """A kernel's top rows as a table of ``OUT_SCHEMA``."""
+    return pa.Table.from_arrays(
+        [pa.array(docs, pa.int64()), pa.array(scores, pa.float64())], schema=OUT_SCHEMA
+    )
 
 
 class _Row:
     __slots__ = (
-        "doc_lo", "doc_hi", "max_score", "df", "epoch", "epoch_n",
+        "doc_lo", "doc_hi", "max_score", "df", "epoch", "epoch_n", "n",
         "_docs", "_tfs", "_dls", "_pos", "_dec",
     )
 
-    def __init__(self, doc_lo, doc_hi, max_score, df, epoch, epoch_n, docs, tfs, dls, pos=b""):
+    def __init__(self, doc_lo, doc_hi, max_score, df, epoch, epoch_n, n, docs, tfs, dls, pos=b""):
         self.doc_lo = doc_lo
         self.doc_hi = doc_hi
         self.max_score = max_score  # encode-time upper bound (rescaled by
@@ -62,6 +76,7 @@ class _Row:
         self.df = df                # df within this row's epoch
         self.epoch = epoch
         self.epoch_n = epoch_n      # corpus size at this row's encode time
+        self.n = n                  # postings in this row
         self._docs, self._tfs, self._dls = docs, tfs, dls
         self._pos = pos
         self._dec = None
@@ -120,33 +135,29 @@ class _Cursor:
             self.suffix_ub[i] = ub
 
 
-def _cursors_from_pdf(pdf: pd.DataFrame) -> dict[tuple[str, str], _Cursor]:
-    """One cursor per (field, term) of a chunk's posting rows, in
-    (field, term) order, each cursor's rows in (doc_lo, epoch) order.
-    Every kernel loop walks cursors and rows in this canonical order, so
-    the float sums of a document's score, and with them the scores, do
-    not depend on the order the rows arrive in (a Spark scan and a
-    pyarrow read hand them over differently)."""
+# the numeric posting-row columns, in _Row's argument order
+_NUMERIC = ("doc_lo", "doc_hi", "max_score", "df", "epoch", "epoch_n", "n")
+
+
+def _cursors(rows) -> dict[tuple[str, str], _Cursor]:
+    """One cursor per (field, term) of a chunk's posting rows (a
+    ``pa.Table``; a pandas frame is converted once), in (field, term)
+    order, each cursor's rows in (doc_lo, epoch) order.  Every kernel
+    loop walks cursors and rows in this canonical order, so the float
+    sums of a document's score, and with them the scores, do not depend
+    on the order the rows arrive in (a Spark scan and a pyarrow read
+    hand them over differently).  Each column is read once: numerics
+    through numpy, strings and blobs as Python lists."""
+    if not isinstance(rows, pa.Table):
+        rows = pa.Table.from_pandas(rows, preserve_index=False)
+    numeric = [rows[c].to_numpy().tolist() for c in _NUMERIC]
+    blobs = [rows[c].to_pylist() for c in ("docs", "tfs", "dls")]
+    pos = rows["pos"].to_pylist() if "pos" in rows.column_names else repeat(b"")
     groups: dict[tuple[str, str], list[_Row]] = {}
-    fields = pdf["field"].to_numpy()
-    terms = pdf["term"].to_numpy()
-    lo = pdf["doc_lo"].to_numpy()
-    hi = pdf["doc_hi"].to_numpy()
-    ms = pdf["max_score"].to_numpy()
-    dfv = pdf["df"].to_numpy()
-    ep = pdf["epoch"].to_numpy()
-    epn = pdf["epoch_n"].to_numpy()
-    docs = pdf["docs"].to_numpy()
-    tfs = pdf["tfs"].to_numpy()
-    dls = pdf["dls"].to_numpy()
-    pos = pdf["pos"].to_numpy() if "pos" in pdf.columns else None
-    for i in range(len(pdf)):
-        groups.setdefault((fields[i], terms[i]), []).append(
-            _Row(
-                int(lo[i]), int(hi[i]), float(ms[i]), int(dfv[i]), int(ep[i]), int(epn[i]),
-                docs[i], tfs[i], dls[i], pos[i] if pos is not None else b"",
-            )
-        )
+    for field, term, *row in zip(
+        rows["field"].to_pylist(), rows["term"].to_pylist(), *numeric, *blobs, pos
+    ):
+        groups.setdefault((field, term), []).append(_Row(*row))
     return {k: _Cursor(k[0], k[1], groups[k]) for k in sorted(groups)}
 
 
@@ -297,7 +308,8 @@ def make_wand_kernel(
     slop_phrases: list[tuple[list[tuple[str, int]], int]] | None = None,
     excluded_slop_phrases: list[tuple[list[tuple[str, int]], int]] | None = None,
 ):
-    """Build the applyInPandas kernel for one query.
+    """Build the kernel for one query: a chunk's posting rows
+    (``pa.Table``) -> its top-k rows (``pa.Table`` of ``OUT_SCHEMA``).
 
     ``df_override`` maps (field, term) -> true document frequency summed
     across index epochs; required for exact scoring on incrementally
@@ -514,8 +526,10 @@ def make_wand_kernel(
         return node_eval(tree)
 
     # ---------------- conjunctive (and / group / tree) ----------------
-    def kernel_and(pdf: pd.DataFrame) -> pd.DataFrame:
-        cursors = _cursors_from_pdf(pdf)
+    # (both kernels are fully type-hinted: applyInArrow reads its eval
+    # type from the hints and fails on a partly annotated function)
+    def kernel_and(rows: pa.Table) -> pa.Table:
+        cursors = _cursors(rows)
         by_term: dict[str, list[_Cursor]] = {}
         for (f, t), c in cursors.items():
             if t in excluded_set or not _allowed(c):
@@ -573,10 +587,10 @@ def make_wand_kernel(
                     m = (idx < cand.size) & (cand[np.minimum(idx, cand.size - 1)] == d)
                     scores[idx[m]] += sc[m]
         sel = np.lexsort((cand, -scores))[:k]
-        return pd.DataFrame({"docnum": cand[sel], "score": scores[sel]})
+        return _out(cand[sel], scores[sel])
 
     # ---------------- disjunctive: vectorized TAAT (dense queries) -----
-    def _taat(cursors, ex=None) -> pd.DataFrame:
+    def _taat(cursors, ex=None) -> pa.Table:
         lo = min(r.doc_lo for c in cursors for r in c.rows)
         hi = max(r.doc_hi for c in cursors for r in c.rows)
         scores = np.zeros(hi - lo + 1, dtype=np.float64)
@@ -592,12 +606,11 @@ def make_wand_kernel(
         if nz.size == 0:
             return EMPTY
         sel = np.lexsort((nz, -scores[nz]))[:k]
-        docs = nz[sel] + lo
-        return pd.DataFrame({"docnum": docs.astype(np.int64), "score": scores[nz[sel] ]})
+        return _out(nz[sel] + lo, scores[nz[sel]])
 
     # ---------------- disjunctive (block-max WAND) ----------------
-    def kernel_or(pdf: pd.DataFrame) -> pd.DataFrame:
-        all_cursors = _cursors_from_pdf(pdf)
+    def kernel_or(rows: pa.Table) -> pa.Table:
+        all_cursors = _cursors(rows)
         cursors = [
             c for c in all_cursors.values()
             if c.term in qterms and c.term not in excluded_set and _allowed(c)
@@ -605,15 +618,11 @@ def make_wand_kernel(
         if not cursors:
             return EMPTY
         ex = _dropped(all_cursors)
-        # density over the SCORING cursors only: a whole-pdf n-sum also
+        # density over the SCORING cursors only: a whole-chunk n-sum also
         # counts excluded/off-field terms' rows, whose posting mass
         # would inflate the estimate and flip a sparse query to TAAT
         # (exact but pruning-free) whenever a NOT term is dense
-        score_keys = {(c.field, c.term) for c in cursors}
-        _mask = [
-            (f, t) in score_keys for f, t in zip(pdf["field"], pdf["term"])
-        ]
-        total_postings = int(pdf.loc[_mask, "n"].sum())
+        total_postings = sum(r.n for c in cursors for r in c.rows)
         span = max(r.doc_hi for c in cursors for r in c.rows) - min(
             r.doc_lo for c in cursors for r in c.rows
         ) + 1
@@ -701,12 +710,7 @@ def make_wand_kernel(
         if not heap:
             return EMPTY
         items = sorted(heap, key=lambda x: (-x[0], -x[1]))
-        return pd.DataFrame(
-            {
-                "docnum": np.array([-i[1] for i in items], dtype=np.int64),
-                "score": np.array([i[0] for i in items], dtype=np.float64),
-            }
-        )
+        return _out([-i[1] for i in items], [i[0] for i in items])
 
     # "group" (And over OR clauses) and a nested tree run the conjunctive
     # kernel; pure "or" keeps the block-max WAND path

@@ -51,7 +51,9 @@ from __future__ import annotations
 import json
 from functools import cached_property
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
@@ -61,7 +63,7 @@ from pyspark.sql.types import (
 
 from ..functions.analyzer import get_analyzer
 from ..functions.xxhash import pmod_bucket
-from ..operators.wand import make_wand_kernel
+from ..operators.wand import OUT_SCHEMA, make_wand_kernel
 from .parser import ParsedQuery, parse_query
 
 RESULT_SCHEMA = "doc_id string, score double, rank int"
@@ -76,11 +78,7 @@ BATCH_RESULT_STRUCT = StructType([_QUERY_ID, *RESULT_STRUCT.fields])
 # docnum-keyed winners of the distributed path, before the docid fetch
 _RANKED_STRUCT = StructType([_QUERY_ID, StructField("docnum", LongType()), *_SCORE_RANK])
 # the kernels' per-chunk rows of a distributed batch, before the merge
-_NO_SCORED = pd.DataFrame({
-    "query_id": pd.Series(dtype=object),
-    "docnum": pd.Series(dtype="int64"),
-    "score": pd.Series(dtype="float64"),
-})
+_NO_SCORED = pa.schema([("query_id", pa.string()), *OUT_SCHEMA]).empty_table()
 
 
 def _top_rows(scored, top_k: int) -> list[tuple]:
@@ -98,16 +96,18 @@ def _top_rows(scored, top_k: int) -> list[tuple]:
     return rows
 
 
-def _chunks(pdf):
-    """The posting rows split by ``chunk``, ascending (one stable sort;
-    one chunk is the same code path)."""
-    import numpy as np
-
-    keys = pdf["chunk"].to_numpy()
+def _chunks(rows: pa.Table):
+    """The posting rows (a ``pa.Table``) split by ``chunk``, ascending
+    (one stable sort): the table itself when it holds one chunk, else
+    one ``take`` per chunk."""
+    keys = rows["chunk"].to_numpy()
     order = np.argsort(keys, kind="stable")
     cuts = np.flatnonzero(np.diff(keys[order])) + 1
-    for rows in np.split(order, cuts):
-        yield pdf.take(rows).reset_index(drop=True)
+    if cuts.size == 0:
+        yield rows
+        return
+    for part in np.split(order, cuts):
+        yield rows.take(part)
 
 
 class _HeldFrame(ClassicDataFrame):
@@ -257,7 +257,6 @@ class BM25Index:
         ``collect()`` runs jobs with Python workers.  Other DataFrame
         methods use the Arrow-backed LocalRelation ``_jvm_relation``
         builds from the same table on first use."""
-        import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow = to_arrow_schema(schema)
@@ -331,8 +330,6 @@ class BM25Index:
         per bucket.  A bucket's rows are read on its first use (all of a
         query's new buckets in one scan) and held under
         ``("postings", bucket)`` for the handle's life."""
-        import numpy as np
-        import pyarrow as pa
         import pyarrow.dataset as ds
 
         new = [b for b in buckets if ("postings", b) not in self._datasets]
@@ -372,7 +369,6 @@ class BM25Index:
         inside the query closure."""
         import os
 
-        import numpy as np
         import pyarrow.dataset as ds
 
         tomb_dir = f"{self.index_dir}/tombstones"
@@ -425,12 +421,18 @@ class BM25Index:
         )
 
     @staticmethod
-    def _summed_dfs(pdf) -> dict[tuple[str, str], int]:
+    def _summed_dfs(rows: pa.Table) -> dict[tuple[str, str], int]:
         """Multi-epoch index: a term's true df is the sum of its per-epoch
-        dfs (every posting row carries its own epoch's df)."""
-        per_epoch = pdf.groupby(["field", "term", "epoch"])["df"].first().reset_index()
-        agg = per_epoch.groupby(["field", "term"])["df"].sum()
-        return {(f, t): int(v) for (f, t), v in agg.items()}
+        dfs (every posting row carries its own epoch's df): an Arrow
+        ``group_by`` to the per-(field, term, epoch) df, then a sum."""
+        per_epoch = rows.group_by(["field", "term", "epoch"], use_threads=False).aggregate(
+            [("df", "first")]
+        )
+        agg = per_epoch.group_by(["field", "term"]).aggregate([("df_first", "sum")])
+        return dict(zip(
+            zip(agg["field"].to_pylist(), agg["term"].to_pylist()),
+            agg["df_first_sum"].to_pylist(),
+        ))
 
     @staticmethod
     def _summed_dfs_spark(scan: DataFrame) -> dict[tuple[str, str], int]:
@@ -456,7 +458,6 @@ class BM25Index:
         scan at all unless the query excludes terms."""
         import os
 
-        import numpy as np
         from pyspark.sql.window import Window
 
         from ..operators.build import TOKENS_SCHEMA, _make_decode_kernel
@@ -544,7 +545,7 @@ class BM25Index:
         becomes an Arrow LocalRelation only when another DataFrame
         method needs the JVM frame.  Defaults to n_docs <= 200k; results
         identical by construction: the kernels walk their rows in one
-        canonical order (``wand._cursors_from_pdf``), so both paths give
+        canonical order (``wand._cursors``), so both paths give
         the same ids and bit-identical scores
         (``tests/test_local_path.py::test_paths_agree_bit_for_bit``)."""
         pq = self._parse(query, mode)
@@ -638,9 +639,13 @@ class BM25Index:
         smaller than the union gets a term mask (a one-query batch never
         does).  ``schema`` (RESULT_STRUCT or BATCH_RESULT_STRUCT) names
         the output columns.  Both paths merge the kernels' per-chunk rows
-        with ``_top_rows``.  Local: a driver-held frame (``_HeldFrame``,
-        a LocalRelation once a method other than ``schema``/``collect()``
-        needs the JVM frame).  Distributed: a lazy docid join."""
+        with ``_top_rows``.  The kernels read and return Arrow tables on
+        both paths: the local path hands them the held rows chunk by
+        chunk; the distributed one runs them under
+        ``groupBy("chunk").applyInArrow`` and collects with ``toArrow``.
+        Local: a driver-held frame (``_HeldFrame``, a LocalRelation once
+        a method other than ``schema``/``collect()`` needs the JVM
+        frame).  Distributed: a lazy docid join."""
         if not parsed:
             return self._empty_frame(schema)
         fetch = {qid: self._fetch_terms(pq) for qid, pq in parsed.items()}
@@ -650,10 +655,10 @@ class BM25Index:
             prefer_local = self.stats["n_docs"] <= 200_000
         multi_epoch = len(self.epochs) > 1
         if prefer_local:
-            pdf = self._pruned_rows(union, buckets)
-            if len(pdf) == 0:
+            rows = self._pruned_rows(union, buckets)
+            if rows.num_rows == 0:
                 return self._empty_frame(schema)
-            df_override = self._summed_dfs(pdf) if multi_epoch else None
+            df_override = self._summed_dfs(rows) if multi_epoch else None
         else:
             scan = self._pruned_scan(union, buckets)
             df_override = self._summed_dfs_spark(scan) if multi_epoch else None
@@ -670,39 +675,43 @@ class BM25Index:
                     slop_phrases=pq.slop_phrases or None,
                     excluded_slop_phrases=pq.excluded_slop_phrases or None,
                 ),
-                None if len(fetch[qid]) == len(union) else set(fetch[qid]),
+                None if len(fetch[qid]) == len(union) else pa.array(fetch[qid], pa.string()),
             )
             for qid, pq in parsed.items()
         ]
 
-        def kernel_outs(chunk):
+        def kernel_outs(chunk: pa.Table):
             """(query_id, kernel rows) of every query with rows over one
-            chunk: docnum and score, at most k per query."""
+            chunk: a table of docnum and score, at most k rows per query."""
             for qid, kernel, mask in kernels:
                 rows = chunk if mask is None else (
-                    chunk[chunk["term"].isin(mask)].reset_index(drop=True)
+                    chunk.filter(pc.is_in(chunk["term"], value_set=mask))
                 )
-                if len(rows):
+                if rows.num_rows:
                     out = kernel(rows)
-                    if len(out):
+                    if out.num_rows:
                         yield qid, out
 
         if prefer_local:
             scored = [
                 (qid, d, s)
-                for chunk in _chunks(pdf)
+                for chunk in _chunks(rows)
                 for qid, out in kernel_outs(chunk)
-                for d, s in zip(out["docnum"].tolist(), out["score"].tolist())
+                for d, s in zip(out["docnum"].to_pylist(), out["score"].to_pylist())
             ]
         else:
-            def scored_rows(chunk):
-                outs = [out.assign(query_id=qid) for qid, out in kernel_outs(chunk)]
-                return pd.concat(outs, ignore_index=True) if outs else _NO_SCORED
+            # applyInArrow reads its eval type from these type hints
+            def scored_rows(chunk: pa.Table) -> pa.Table:
+                outs = [
+                    out.add_column(0, "query_id", pa.array([qid] * out.num_rows, pa.string()))
+                    for qid, out in kernel_outs(chunk)
+                ]
+                return pa.concat_tables(outs) if outs else _NO_SCORED
 
-            collected = scan.groupBy("chunk").applyInPandas(
+            collected = scan.groupBy("chunk").applyInArrow(
                 scored_rows, "query_id string, docnum long, score double"
-            ).toPandas()
-            scored = zip(*(collected[c].tolist() for c in ("query_id", "docnum", "score")))
+            ).toArrow()
+            scored = zip(*(collected[c].to_pylist() for c in ("query_id", "docnum", "score")))
         top_rows = _top_rows(scored, top_k)
         if not top_rows:
             return self._empty_frame(schema)
@@ -756,7 +765,6 @@ class BM25Index:
         built on the first prefix/range/wildcard expansion and held (Arrow
         ``unique`` + sort: a Python set and ``sorted`` over the term column
         cost ~5x more)."""
-        import pyarrow.compute as pc
 
         def build():
             terms = pc.unique(self._arrow_postings(columns=["term"])["term"])
@@ -873,25 +881,22 @@ class BM25Index:
             ranges=[], excluded_ranges=[], wildcards=[], excluded_wildcards=[],
         )
 
-    def _pruned_rows(self, terms: list[str], buckets: dict[str, int]):
-        """Driver-local pruned read of the posting parquet as pandas — no
-        Spark job at all.  Each touched bucket's committed rows are read
-        through pyarrow once per handle (``_bucket_rows``, dropped by
-        ``refresh_stats``); a query then filters the held tables by term
-        in memory and drops the ``group``/``bucket`` partition columns,
-        which no kernel reads, before ``to_pandas``."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
+    def _pruned_rows(self, terms: list[str], buckets: dict[str, int]) -> pa.Table:
+        """Driver-local pruned read of the posting parquet as a pyarrow
+        table — no Spark job and no pandas frame.  Each touched bucket's
+        committed rows are read through pyarrow once per handle
+        (``_bucket_rows``, dropped by ``refresh_stats``); a query then
+        filters the held tables by term in memory and drops the
+        ``group``/``bucket`` partition columns, which no kernel reads.
+        The kernels take the filtered table as it is."""
         t = pa.concat_tables(self._bucket_rows(sorted(set(buckets.values()))))
         t = t.filter(pc.is_in(t["term"], value_set=pa.array(terms, pa.string())))
-        return t.drop_columns(["group", "bucket"]).to_pandas()
+        return t.drop_columns(["group", "bucket"])
 
     def _doc_ids(self, docnums: list[int]) -> dict[int, str]:
         """docnum -> display id for the winners, from the committed docids
         dimension, read through pyarrow once per handle and held with its
         docnum sort order: a lookup is a ``searchsorted`` and a ``take``."""
-        import numpy as np
         import pyarrow.dataset as ds
 
         def read():

@@ -57,6 +57,29 @@ def test_epoch_append_matches_full_rebuild(spark, indexes, mode, local):
         assert_rank_identical(got, want, rel_tol=1e-9)
 
 
+def test_summed_dfs_match_the_spark_aggregation(spark):
+    """The local path's Arrow ``_summed_dfs`` equals ``_summed_dfs_spark``
+    on the same posting rows: two epochs, several rows (chunks) per
+    (field, term, epoch), a term in two fields, a term in one epoch."""
+    import pyarrow as pa
+
+    # (field, term, epoch, df, chunk): each (field, term, epoch) keeps
+    # its epoch's df on every one of its rows
+    raw = [
+        ("body", "spark", 0, 7, 0), ("body", "spark", 0, 7, 1), ("body", "spark", 0, 7, 2),
+        ("body", "spark", 1, 3, 2), ("body", "spark", 1, 3, 3),
+        ("title", "spark", 0, 2, 0), ("title", "spark", 1, 5, 3), ("title", "spark", 1, 5, 4),
+        ("body", "query", 0, 4, 1), ("body", "query", 0, 4, 0),
+        ("body", "shuffle", 1, 6, 3), ("body", "shuffle", 1, 6, 4),
+    ]
+    names = ["field", "term", "epoch", "df", "chunk"]
+    rows = pa.table({n: [r[i] for r in raw] for i, n in enumerate(names)})
+    want = {("body", "spark"): 10, ("title", "spark"): 7, ("body", "query"): 4,
+            ("body", "shuffle"): 6}
+    scan = spark.createDataFrame(raw, "field string, term string, epoch int, df int, chunk int")
+    assert BM25Index._summed_dfs(rows) == BM25Index._summed_dfs_spark(scan) == want
+
+
 def test_stream_refresh_foreachbatch(spark, indexes, tmp_path):
     _, inc_dir = indexes
     # stream a third batch of docs from a parquet dir -> epoch 2

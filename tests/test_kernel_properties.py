@@ -4,7 +4,9 @@ encode kernel (operators/build._make_encode_kernel) -> posting rows ->
 WAND kernels (operators/wand.make_wand_kernel), compared against brute
 force scoring, over randomized corpora: random chunk/block boundaries,
 salted hot terms, AND/OR modes.  Runs the exact production kernels as
-plain generators/functions — no SparkSession.
+plain generators/functions — no SparkSession.  The WAND kernels get each
+chunk's posting rows as a pyarrow table, as both search paths hand them
+over, and return pyarrow tables.
 """
 
 from __future__ import annotations
@@ -14,12 +16,14 @@ import random
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from beetle_search_engine_spark.config import BM25Params, EngineConfig, IndexConfig
 from beetle_search_engine_spark.operators.build import _make_encode_kernel
-from beetle_search_engine_spark.operators.wand import make_wand_kernel
+from beetle_search_engine_spark.operators.wand import OUT_SCHEMA, make_wand_kernel
 from beetle_search_engine_spark.plans.parser import tree_terms
 
 VOCAB = [f"t{i}" for i in range(12)]
@@ -123,11 +127,15 @@ def random_tree(rng):
 
 
 def run_kernels(
-    seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False, tree=False, shuffle=None
+    seed, n_docs, mode, hot_salts, taat_density=0.25, groups=False, tree=False, shuffle=None,
+    as_pandas=False, outputs=None,
 ):
     """(kernel top-k, brute-force top-k) of one random corpus and query.
-    With ``shuffle`` (a seed), each chunk's posting rows reach the
-    kernel in a random order."""
+    Each chunk's posting rows reach the kernel as a pyarrow table, the
+    production input.  With ``shuffle`` (a seed) they come in a random
+    order; with ``as_pandas`` as a pandas frame (the perfbench kernel
+    probe's input).  ``outputs``, a list, receives each chunk's kernel
+    table."""
     rng = random.Random(seed)
     cfg = EngineConfig(
         bm25=BM25Params(field_boosts={"body": 1.0}),
@@ -178,7 +186,7 @@ def run_kernels(
         for d, (tf, dl) in pl.items():
             salt = (d // cfg.index.chunk_docs) % hot_salts if ("body", t) in hot else 0
             rows.append((salt, field, t, d, tf, dl))
-    out_frames = []
+    out_batches = []
     for salt in sorted({r[0] for r in rows}):
         part = sorted([r for r in rows if r[0] == salt], key=lambda r: (r[1], r[2], r[3]))
         pdf = pd.DataFrame(
@@ -194,15 +202,13 @@ def run_kernels(
         )
         # feed in small batches to exercise the carry logic (the kernel
         # is mapInArrow since round 7: RecordBatches in, RecordBatches out)
-        import pyarrow as pa
-
         bsz = max(1, len(pdf) // rng.randint(1, 4))
         batches = [
             pa.RecordBatch.from_pandas(pdf.iloc[i : i + bsz], preserve_index=False)
             for i in range(0, len(pdf), bsz)
         ]
-        out_frames.extend(rb.to_pandas() for rb in kernel(iter(batches)))
-    enc = pd.concat(out_frames, ignore_index=True)
+        out_batches.extend(kernel(iter(batches)))
+    enc = pa.Table.from_batches(out_batches)
 
     # query: 1-3 random terms, (groups) 1-3 clauses of 1-3 members, or
     # (tree) a random two-level And/Or tree
@@ -224,13 +230,18 @@ def run_kernels(
         terms, stats, k, mode, taat_density=taat_density, groups=clauses, tree=qtree
     )
     results = []
-    for chunk, grp in enc[enc.term.isin(terms)].groupby("chunk"):
+    rows = enc.filter(pc.is_in(enc["term"], value_set=pa.array(terms)))
+    for chunk in sorted(set(rows["chunk"].to_pylist())):
+        grp = rows.filter(pc.equal(rows["chunk"], chunk))
         if shuffle is not None:
-            grp = grp.sample(frac=1.0, random_state=shuffle + int(chunk))
-        results.append(wk(grp.reset_index(drop=True)))
-    got = pd.concat(results, ignore_index=True) if results else pd.DataFrame({"docnum": [], "score": []})
-    got = got.sort_values(["score", "docnum"], ascending=[False, True]).head(k)
-    got_pairs = [(int(d), float(s)) for d, s in zip(got.docnum, got.score)]
+            order = np.random.RandomState(shuffle + chunk).permutation(grp.num_rows)
+            grp = grp.take(order)
+        results.append(wk(grp.to_pandas() if as_pandas else grp))
+    if outputs is not None:
+        outputs.extend(results)
+    got = pa.concat_tables([OUT_SCHEMA.empty_table(), *results])
+    got = got.sort_by([("score", "descending"), ("docnum", "ascending")]).slice(0, k)
+    got_pairs = list(zip(got["docnum"].to_pylist(), got["score"].to_pylist()))
 
     if tree:
         want = brute_force_tree(postings, n_docs, avgdl, qtree, k=k)
@@ -316,3 +327,28 @@ def test_kernel_output_ignores_row_order(seed, n_docs, shape, hot_salts, shuffle
     got, _ = run_kernels(seed, n_docs, mode, hot_salts, **kw)
     shuffled, _ = run_kernels(seed, n_docs, mode, hot_salts, shuffle=shuffle, **kw)
     assert shuffled == got
+
+
+@given(
+    seed=st.integers(0, 10_000),
+    n_docs=st.integers(5, 120),
+    shape=st.sampled_from(["and", "or", "taat", "group", "tree"]),
+    hot_salts=st.sampled_from([1, 2, 3]),
+)
+@settings(max_examples=100, deadline=None)
+def test_pandas_chunks_give_the_same_table(seed, n_docs, shape, hot_salts):
+    """A chunk handed over as a pandas frame (the perfbench kernel
+    probe's input) gives the kernel table the Arrow chunk gives, bit for
+    bit, in the kernels' one output schema."""
+    mode = {"taat": "or", "tree": "group"}.get(shape, shape)
+    kw = dict(
+        taat_density=0.0 if shape == "taat" else 2.0 if shape == "or" else 0.25,
+        groups=shape == "group", tree=shape == "tree",
+    )
+    arrow_out, pandas_out = [], []
+    run_kernels(seed, n_docs, mode, hot_salts, outputs=arrow_out, **kw)
+    run_kernels(seed, n_docs, mode, hot_salts, as_pandas=True, outputs=pandas_out, **kw)
+    assert len(arrow_out) == len(pandas_out)
+    for a, p in zip(arrow_out, pandas_out):
+        assert a.schema == p.schema == OUT_SCHEMA
+        assert a.equals(p)

@@ -294,6 +294,37 @@ def test_repeated_local_query_reads_no_parquet(spark, idx, monkeypatch):
     assert got == want and jobs == [], jobs
 
 
+@pytest.mark.parametrize("index", ["idx", "positions_idx"])
+def test_warm_local_search_builds_no_pandas_frame(spark, index, request, monkeypatch):
+    """A warm local search() or search_many() hands the held Arrow rows
+    to the kernels and merges their Arrow tables: with every pandas frame
+    construction raising, the same rows come back with 0 Spark jobs.
+    ``positions_idx`` has two epochs, so its summed dfs run too."""
+    import pandas as pd
+
+    ix = request.getfixturevalue(index)
+    queries = [("alpha beta", "and"), ("beta OR filler5", "parse"), ("filler1*", "parse"),
+               ("alpha NOT gamma", "parse"), ("gamma OR filler3 OR alpha", "or")]
+    batch = {f"q{i}": q for i, (q, _) in enumerate(queries)}
+
+    def answers():
+        single = [_triples(ix.search(q, 5, m, prefer_local=True).collect()) for q, m in queries]
+        return single, ix.search_many(batch, 5, "parse", prefer_local=True).collect()
+
+    want = answers()
+    assert all(want[0]) and len(want[1]) > len(queries)
+
+    def no_frame(*_a, **_k):
+        raise AssertionError("a pandas frame on the local search path")
+
+    # pyarrow's to_pandas and pandas' own take build frames with
+    # _from_mgr, which does not call __init__
+    monkeypatch.setattr(pd.DataFrame, "__init__", no_frame)
+    monkeypatch.setattr(pd.DataFrame, "_from_mgr", classmethod(no_frame))
+    got, jobs = _counting_jobs(spark, answers)
+    assert got == want and jobs == [], jobs
+
+
 def test_delete_docs_applies_to_a_warm_handle(spark, tmp_path):
     """Deletions drop documents at once from a handle that already holds
     its buckets and docids, exactly as from a freshly opened one."""

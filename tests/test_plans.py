@@ -87,7 +87,7 @@ def test_distributed_search_single_shuffle_chunks(spark, mode):
     from beetle_search_engine_spark.operators.wand import make_wand_kernel
 
     kernel = make_wand_kernel(terms, idx.stats, 10, mode)
-    scored = scan.groupBy("chunk").applyInPandas(kernel, "docnum long, score double")
+    scored = scan.groupBy("chunk").applyInArrow(kernel, "docnum long, score double")
     p = _plan(scored)
     # exactly one exchange: the chunk shuffle into the kernel
     assert p.count("Exchange hashpartitioning") == 1

@@ -7,7 +7,9 @@ Runs the perfbench search stream of ``--seed`` (parse mode, top 10, the
 default ``prefer_local``) against the index in INDEX_DIR and times the
 real ``BM25Index`` stages with wrappers: ``_parse``, ``_pruned_rows``,
 every kernel call ``make_wand_kernel`` hands to ``_rank``, ``_doc_ids``,
-``_local_frame`` and the result's ``collect()``.  The first ``WARMUP``
+``_local_frame`` and the result's ``collect()``; the last stage,
+``other``, is the call time outside those stages (glue such as
+``_chunks``, the term masks and the top-k merge).  The first ``WARMUP``
 (20) queries are not measured, so every table row is taken after the
 same warm-up.  Prints one markdown table row per index (the
 ROADMAP local-latency budget table), each stage cell ``mean / p50`` in ms
@@ -35,7 +37,8 @@ from beetle_search_engine_spark.plans import query as query_mod  # noqa: E402
 from beetle_search_engine_spark.sources import generate_corpus, get_spark  # noqa: E402
 
 WARMUP = 20
-STAGES = ("kernel", "_local_frame", "collect()", "_doc_ids", "_pruned_rows", "_parse")
+TIMED = ("kernel", "_local_frame", "collect()", "_doc_ids", "_pruned_rows", "_parse")
+STAGES = (*TIMED, "other")
 
 
 def build(spark, index_dir: str, n_docs: int, seed: int) -> None:
@@ -91,8 +94,9 @@ def profile(spark, index_dir: str, seed: int, n_queries: int):
             total = time.perf_counter() - t0
             if i >= WARMUP:
                 out["total"].append(total)
-                for s in STAGES:
+                for s in TIMED:
                     out[s].append(spent.get(s, 0.0))
+                out["other"].append(total - sum(spent.values()))
         return out, held_bytes(ix)
     finally:
         query_mod.make_wand_kernel = make_kernel
