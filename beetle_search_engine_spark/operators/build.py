@@ -73,7 +73,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT, BM25Params, EngineConfig, IndexConfig
 from ..functions.analyzer import _cached_stem, get_analyzer
-from .codecs import decode_docgaps, decode_positions, varint_decode
+from .codecs import decode_positions
 from .docnums import numbered, stage_corpus, write_docids
 from .tokenize import TOKENS_SCHEMA, TOKENS_SCHEMA_POS, resolve_impl, tokenize
 
@@ -935,51 +935,48 @@ def _encode_groups(
 
 
 def _make_decode_kernel(deleted: np.ndarray, positions: bool):
-    """mapInPandas kernel: posting rows -> the token-stage rows they were
-    encoded from (docnum, field, term, tf, dl[, pos]), minus tombstoned
-    docnums.  Per-row numpy decode at the same ~1024-posting granularity
-    the query kernels work at."""
+    """mapInArrow kernel: posting rows (field, term, n, docs, tfs, dls
+    [, pos]) -> the token-stage rows they were encoded from (docnum,
+    field, term, tf, dl[, pos]), minus tombstoned docnums.  A batch's
+    docs/tfs/dls decode in one ``decode_posting_columns`` call; each
+    row's position blob decodes on its own."""
+    import pyarrow as pa
+
+    from .codecs import decode_posting_columns
+
+    out_schema = pa.schema(
+        [("docnum", pa.int64()), ("field", pa.string()), ("term", pa.string()),
+         ("tf", pa.int32()), ("dl", pa.int32())]
+        + ([("pos", pa.list_(pa.int32()))] if positions else [])
+    )
 
     def kernel(batches):
-        for pdf in batches:
-            docs_out, fld_out, trm_out, tf_out, dl_out = [], [], [], [], []
-            pos_out: list = []
-            pos_col = pdf["pos"] if positions else [b""] * len(pdf)
-            for f_, t_, docs_, tfs_, dls_, pos_ in zip(
-                pdf["field"], pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"], pos_col
-            ):
-                d = decode_docgaps(docs_)
-                tf = varint_decode(tfs_).astype(np.int64)
-                dl = varint_decode(dls_).astype(np.int64)
-                m = ~np.isin(d, deleted) if deleted.size else np.ones(d.size, dtype=bool)
-                kept = int(m.sum())
-                if kept == 0:
-                    continue
-                docs_out.append(d[m])
-                tf_out.append(tf[m])
-                dl_out.append(dl[m])
-                fld_out.append(np.full(kept, f_, dtype=object))
-                trm_out.append(np.full(kept, t_, dtype=object))
-                if positions:
-                    flat, starts = decode_positions(pos_, tf)
-                    ends = starts + tf
-                    pos_out.extend(
-                        flat[s:e].astype(np.int32).tolist()
-                        for s, e, km in zip(starts, ends, m)
-                        if km
-                    )
-            if not docs_out:
+        for batch in batches:
+            n = np.asarray(batch["n"], dtype=np.int64)
+            docs, tfs, dls = (
+                c.values.to_numpy()
+                for c in decode_posting_columns(batch["docs"], batch["tfs"], batch["dls"], n)
+            )
+            row = np.repeat(np.arange(batch.num_rows), n)
+            keep = ~np.isin(docs, deleted) if deleted.size else np.ones(docs.size, dtype=bool)
+            if not keep.any():
                 continue
-            out = {
-                "docnum": np.concatenate(docs_out),
-                "field": np.concatenate(fld_out),
-                "term": np.concatenate(trm_out),
-                "tf": np.concatenate(tf_out).astype(np.int32),
-                "dl": np.concatenate(dl_out).astype(np.int32),
-            }
+            cols = [
+                docs[keep], batch["field"].take(row[keep]), batch["term"].take(row[keep]),
+                tfs[keep], dls[keep],
+            ]
             if positions:
-                out["pos"] = pos_out
-            yield pd.DataFrame(out)
+                # every posting's positions, rows back to back
+                flat = np.concatenate([np.empty(0, dtype=np.int64)] + [
+                    decode_positions(blob, tf)[0]
+                    for blob, tf in zip(batch["pos"].to_pylist(), np.split(tfs, np.cumsum(n)[:-1]))
+                ])
+                offsets = np.zeros(int(keep.sum()) + 1, dtype=np.int32)
+                np.cumsum(tfs[keep], out=offsets[1:])
+                cols.append(pa.ListArray.from_arrays(
+                    pa.array(offsets), pa.array(flat[np.repeat(keep, tfs)].astype(np.int32))
+                ))
+            yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
     return kernel
 
@@ -1089,11 +1086,11 @@ def optimize_index(spark: SparkSession, index_dir: str, cfg: EngineConfig | None
     # The stage write MATERIALIZES the decode before any old file is
     # removed — a crash mid-optimize leaves the original index intact.
     postings = spark.read.parquet(f"{index_dir}/postings")
-    cols = ["field", "term", "docs", "tfs", "dls"] + (["pos"] if store_pos else [])
+    cols = ["field", "term", "n", "docs", "tfs", "dls"] + (["pos"] if store_pos else [])
     stage = f"{index_dir}/_stage/merge_tokens"
     (
         postings.select(*cols)
-        .mapInPandas(
+        .mapInArrow(
             _make_decode_kernel(deleted, store_pos),
             schema=TOKENS_SCHEMA_POS if store_pos else TOKENS_SCHEMA,
         )

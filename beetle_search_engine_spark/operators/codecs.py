@@ -6,12 +6,15 @@ JSON ``{term: [[doc, w], ...]}`` dict for SPLADE (reference:
 src/index/build_splade.py:57-63).  Here postings are parquet rows holding
 binary blobs: sorted docnums as gap-encoded varints, tfs and doc-lengths
 as plain varints.  Everything is numpy-vectorized — no per-value Python
-in the hot path (BASELINE.json input_hint mandate).
+in the hot path (BASELINE.json input_hint mandate).  A table of posting
+rows decodes column by column (``decode_posting_columns``): one
+``varint_decode`` per column, not one per row.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _U7 = np.uint64(7)
 _U127 = np.uint64(127)
@@ -25,9 +28,10 @@ def varint_encode(values: np.ndarray) -> bytes:
 def varint_decode(buf: bytes) -> np.ndarray:
     """Decode LEB128 bytes back to a uint64 array (vectorized)."""
     raw = np.frombuffer(buf, dtype=np.uint8)
-    if raw.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    ends = np.flatnonzero(raw < 128)
+    last = raw < 128
+    if last.all():  # every value fits one byte (every tf blob, most dls)
+        return raw.astype(np.uint64)
+    ends = np.flatnonzero(last)
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
@@ -131,6 +135,78 @@ def encode_positions_rows(
     return [b[s:e] for s, e in zip(offsets[:-1].tolist(), offsets[1:].tolist())]
 
 
+def _undo_gaps(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Runs of ``counts`` gap-coded values, back to back -> the values:
+    a run's first value is absolute, each later one ``gap + 1`` past
+    its predecessor (one cumsum for every run)."""
+    if gaps.size == 0:
+        return gaps
+    counts = counts[counts > 0]
+    starts = np.cumsum(counts) - counts
+    adj = gaps + 1
+    adj[starts] = gaps[starts]  # run-initial values stay absolute
+    cs = np.cumsum(adj)
+    return cs - np.repeat(cs[starts] - adj[starts], counts)  # minus the cumsum before each run
+
+
+def _blob_bytes(col) -> np.ndarray:
+    """The bytes of a binary column's values, every row's blob back to
+    back (a zero-copy view of one chunk's data buffer; the chunks of a
+    ``ChunkedArray`` concatenated).  An array slice starts and ends where
+    its first and last rows do."""
+    chunks = col.chunks if isinstance(col, pa.ChunkedArray) else [col]
+    parts = []
+    for a in chunks:
+        _validity, offsets, data = a.buffers()
+        if len(a) == 0 or data is None:
+            continue
+        width = np.int64 if pa.types.is_large_binary(a.type) else np.int32
+        offs = np.frombuffer(
+            offsets, dtype=width, count=len(a) + 1, offset=a.offset * width().itemsize
+        )
+        parts.append(np.frombuffer(data, dtype=np.uint8)[offs[0]:offs[-1]])
+    if len(parts) == 1:
+        return parts[0]
+    return np.concatenate(parts) if parts else np.empty(0, dtype=np.uint8)
+
+
+def _row_values(col, n: np.ndarray, name: str) -> np.ndarray:
+    """Every value of a binary varint column as one int64 array (one
+    ``varint_decode`` call: each blob ends on a byte < 128, so the blobs
+    back to back are one valid varint stream).  Raises ``ValueError``
+    when the count is not ``n.sum()``."""
+    vals = varint_decode(_blob_bytes(col)).view(np.int64)
+    if vals.size != n.sum():
+        raise ValueError(
+            f"posting column {name!r} holds {vals.size} values, its rows' n sum to {n.sum()}"
+        )
+    return vals
+
+
+def decode_posting_columns(docs, tfs, dls, n) -> tuple[pa.ListArray, pa.ListArray, pa.ListArray]:
+    """Posting rows' ``docs``/``tfs``/``dls`` blob columns (binary Arrow
+    arrays or chunked arrays) and their posting counts ``n`` -> the same
+    rows as ``list<int64>`` docnums and ``list<int32>`` tfs and dls,
+    one list per row, the three sharing one offsets array built from
+    ``n``.  Each column is decoded in one pass; the docnum gaps are
+    undone for all rows at once (a row's first value is absolute, every
+    later one is ``gap + 1`` past its predecessor).  Equal, row by row,
+    to ``decode_docgaps``/``varint_decode`` of each blob."""
+    n = np.asarray(n, dtype=np.int64)
+    offsets = np.zeros(n.size + 1, dtype=np.int64)
+    np.cumsum(n, out=offsets[1:])
+    docnums = _undo_gaps(_row_values(docs, n, "docs"), n)
+    list_offsets = pa.array(offsets, pa.int32())
+    # a checked cast: a tf or dl past int32 raises (ArrowInvalid, a ValueError)
+    return (
+        pa.ListArray.from_arrays(list_offsets, pa.array(docnums, pa.int64())),
+        *(
+            pa.ListArray.from_arrays(list_offsets, pa.array(_row_values(col, n, name), pa.int32()))
+            for col, name in ((tfs, "tfs"), (dls, "dls"))
+        ),
+    )
+
+
 def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Decode one row's position blob back to (flat positions,
     posting_starts).  ``tfs`` gives each posting's position count."""
@@ -138,15 +214,7 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarra
     starts = np.zeros(counts.size, dtype=np.int64)
     if counts.size > 1:
         np.cumsum(counts[:-1], out=starts[1:])
-    gaps = varint_decode(buf).astype(np.int64)
-    if gaps.size == 0:
-        return gaps, starts
-    adj = gaps + 1
-    adj[starts] = gaps[starts]  # posting-initial values stay absolute
-    cs = np.cumsum(adj)
-    seg_base = cs[starts] - adj[starts]  # cumsum before each posting
-    vals = cs - np.repeat(seg_base, counts)
-    return vals, starts
+    return _undo_gaps(varint_decode(buf).astype(np.int64), counts), starts
 
 
 def encode_docgaps(docnums: np.ndarray) -> bytes:

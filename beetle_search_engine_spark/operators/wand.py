@@ -10,7 +10,12 @@ returns at most k rows; ``plans/query._rank`` merges each query's
 Arrow in, Arrow out: a kernel takes a chunk's posting rows as a
 ``pa.Table`` and returns a ``pa.Table`` of ``OUT_SCHEMA`` (docnum int64,
 score float64), so neither search path builds a pandas frame.  A pandas
-frame is still accepted and converted once on entry.
+frame is still accepted and converted once on entry.  The rows' postings
+arrive either as varint blobs (the Spark scan's ``binary`` columns),
+which ``_cursors`` decodes for the whole chunk at once, or already
+decoded as ``list<>`` columns (the local path decodes a term's rows
+once per handle, ``plans/query._pruned_rows``); every row then reads a
+slice of the chunk's flat value arrays.
 
 Two kernels, mirroring the reference's query semantics:
 
@@ -24,13 +29,13 @@ Two kernels, mirroring the reference's query semantics:
   seeds the candidates with its exact match set and scores.  All three
   then run the same vectorized sorted-set intersection rarest-clause-
   first, with row-range (block) skipping — rows whose [doc_lo, doc_hi]
-  cannot intersect the candidate range are never decoded — and the same
-  NOT / tombstone / phrase gates.
+  cannot intersect the candidate range are never read or scored — and
+  the same NOT / tombstone / phrase gates.
 
 * ``or`` — disjunctive block-max WAND: row-granularity pivoting on
   suffix-max upper bounds, block-max window check against the heap floor,
   and vectorized exact scoring of surviving windows.  Rows whose bound
-  cannot beat the current top-k floor are skipped without decoding.
+  cannot beat the current top-k floor are skipped without scoring.
   Dense queries switch to a vectorized term-at-a-time accumulation.
 
 Exact scores are recomputed in float64 from (tf, dl, df) — the stored
@@ -47,8 +52,9 @@ from itertools import repeat
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
-from .codecs import decode_docgaps, decode_positions, varint_decode
+from .codecs import decode_positions, decode_posting_columns
 from .scoring import term_scores
 
 OUT_SCHEMA = pa.schema([("docnum", pa.int64()), ("score", pa.float64())])
@@ -63,12 +69,15 @@ def _out(docs, scores) -> pa.Table:
 
 
 class _Row:
+    """One posting row of a chunk.  Its postings are ``n`` values from
+    ``start`` in the chunk's flat (docs, tfs, dls) arrays, which
+    ``_cursors`` decodes once per chunk; ``decode()`` returns views."""
+
     __slots__ = (
-        "doc_lo", "doc_hi", "max_score", "df", "epoch", "epoch_n", "n",
-        "_docs", "_tfs", "_dls", "_pos", "_dec",
+        "doc_lo", "doc_hi", "max_score", "df", "epoch", "epoch_n", "n", "_start", "_flat", "_pos",
     )
 
-    def __init__(self, doc_lo, doc_hi, max_score, df, epoch, epoch_n, n, docs, tfs, dls, pos=b""):
+    def __init__(self, doc_lo, doc_hi, max_score, df, epoch, epoch_n, n, start, flat, pos=b""):
         self.doc_lo = doc_lo
         self.doc_hi = doc_hi
         self.max_score = max_score  # encode-time upper bound (rescaled by
@@ -77,22 +86,19 @@ class _Row:
         self.epoch = epoch
         self.epoch_n = epoch_n      # corpus size at this row's encode time
         self.n = n                  # postings in this row
-        self._docs, self._tfs, self._dls = docs, tfs, dls
+        self._start = start
+        self._flat = flat           # the chunk's (docs int64, tfs, dls float64)
         self._pos = pos
-        self._dec = None
 
     def decode(self):
-        if self._dec is None:
-            self._dec = (
-                decode_docgaps(self._docs),
-                varint_decode(self._tfs).astype(np.float64),
-                varint_decode(self._dls).astype(np.float64),
-            )
-        return self._dec
+        """(docnums, tfs, dls) of this row: read-only views."""
+        a, z = self._start, self._start + self.n
+        docs, tfs, dls = self._flat
+        return docs[a:z], tfs[a:z], dls[a:z]
 
     def positions(self):
         """(flat positions, per-posting starts) — requires an index built
-        with store_positions=True."""
+        with store_positions=True.  Decodes this row's position blob."""
         d, tf, _ = self.decode()
         return decode_positions(self._pos, tf.astype(np.int64))
 
@@ -137,6 +143,25 @@ class _Cursor:
 
 # the numeric posting-row columns, in _Row's argument order
 _NUMERIC = ("doc_lo", "doc_hi", "max_score", "df", "epoch", "epoch_n", "n")
+# the posting columns a row's postings are read from, with their dtype
+_VALUES = (("docs", np.int64), ("tfs", np.float64), ("dls", np.float64))
+
+
+def _flat_values(rows: pa.Table) -> tuple[np.ndarray, ...]:
+    """A chunk's postings as flat, read-only (docs, tfs, dls) arrays,
+    rows back to back.  Binary blob columns (a Spark scan's, a probe's)
+    are decoded here, once per chunk (``decode_posting_columns``);
+    ``list<>`` columns the local path holds decoded are flattened."""
+    cols = [rows[c] for c, _ in _VALUES]
+    if not pa.types.is_list(cols[0].type):
+        cols = decode_posting_columns(*cols, rows["n"])
+    flat = tuple(
+        np.asarray(pc.list_flatten(col).to_numpy(), dtype=dtype)
+        for col, (_, dtype) in zip(cols, _VALUES)
+    )
+    for a in flat:
+        a.flags.writeable = False  # rows share them: decode() hands out views
+    return flat
 
 
 def _cursors(rows) -> dict[tuple[str, str], _Cursor]:
@@ -147,17 +172,20 @@ def _cursors(rows) -> dict[tuple[str, str], _Cursor]:
     sums of a document's score, and with them the scores, do not depend
     on the order the rows arrive in (a Spark scan and a pyarrow read
     hand them over differently).  Each column is read once: numerics
-    through numpy, strings and blobs as Python lists."""
+    through numpy, strings as Python lists, postings as the flat arrays
+    of ``_flat_values`` that every row slices."""
     if not isinstance(rows, pa.Table):
         rows = pa.Table.from_pandas(rows, preserve_index=False)
+    flat = _flat_values(rows)
+    n = rows["n"].to_numpy().astype(np.int64)
     numeric = [rows[c].to_numpy().tolist() for c in _NUMERIC]
-    blobs = [rows[c].to_pylist() for c in ("docs", "tfs", "dls")]
     pos = rows["pos"].to_pylist() if "pos" in rows.column_names else repeat(b"")
     groups: dict[tuple[str, str], list[_Row]] = {}
-    for field, term, *row in zip(
-        rows["field"].to_pylist(), rows["term"].to_pylist(), *numeric, *blobs, pos
+    for field, term, *row, p in zip(
+        rows["field"].to_pylist(), rows["term"].to_pylist(), *numeric,
+        (np.cumsum(n) - n).tolist(), pos,
     ):
-        groups.setdefault((field, term), []).append(_Row(*row))
+        groups.setdefault((field, term), []).append(_Row(*row, flat, p))
     return {k: _Cursor(k[0], k[1], groups[k]) for k in sorted(groups)}
 
 
@@ -333,7 +361,7 @@ def make_wand_kernel(
     them in ANY field is dropped before scoring; excluded terms never
     contribute to scores.  The query planner includes them in the
     posting scan so their cursors arrive here.  A NOT on a stop-like
-    term decodes that term's full posting range for the chunk — the
+    term reads that term's full posting range for the chunk — the
     documented cost of negation, bounded per chunk.
 
     ``groups``: conjunctive clause list (parser mode "group", Whoosh's
@@ -384,7 +412,7 @@ def make_wand_kernel(
     Whoosh's matchers exactly — And sums all children, Or sums only the
     MATCHING children, so a doc matching branch (a b) but not (c d)
     scores a+b even when c is present.  The tree is evaluated exactly per
-    chunk (decode + set ops, no block-max pruning across it) and seeds
+    chunk (set ops, no block-max pruning across it) and seeds
     the conjunctive kernel: the flat ``groups`` clauses (in tree mode:
     phrase singletons + planner-appended expansions) gate beside it, as
     do excluded/phrase/REQUIRE constraints; ANDMAYBE terms add score on
@@ -490,7 +518,7 @@ def make_wand_kernel(
 
     def _tree_eval(by_term: dict):
         """(sorted docs, scores) of the tree's match set.  Each term's
-        postings decode ONCE (cached) into a sorted (docs, scores) pair;
+        postings are scored ONCE (cached) into a sorted (docs, scores) pair;
         And intersects + sums all children, Or unions + sums matching
         children only — Whoosh's Intersection/UnionMatcher semantics
         vectorized as numpy set ops."""
@@ -658,7 +686,7 @@ def make_wand_kernel(
             if pivot < 0:
                 break  # nothing remaining can beat the floor
             pivot_doc = cur_lo(actives[pivot])
-            # skip rows entirely before the pivot (no decode)
+            # skip rows entirely before the pivot (never scored)
             advanced = False
             for c in actives[:pivot]:
                 while not c.done and c.cur.doc_hi < pivot_doc:
@@ -679,7 +707,7 @@ def make_wand_kernel(
                 watermark = H  # window provably dead: nothing in it can win
                 for c in involved:
                     if c.cur.doc_hi <= H:
-                        c.ptr += 1  # block-max skip, no decode
+                        c.ptr += 1  # block-max skip, never scored
                 continue
             # exact scoring of the window (vectorized union)
             all_d, all_s = [], []

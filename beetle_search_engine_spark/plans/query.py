@@ -7,10 +7,10 @@ batch of many, and both run
       -> _parse: analyze (driver-side, same T1-T4 chain as indexing) and
          expand prefixes/ranges/wildcards against the term dictionary
       -> _rank, over the union of the queries' _fetch_terms:
-         -> bucket-pruned, term-filtered posting rows: the touched
-            buckets the handle holds, filtered by term in memory (the
-            Spark path: partition pruning on bucket dirs + row-group
-            pushdown on term)
+         -> bucket-pruned, term-filtered posting rows: each term's rows
+            as the handle holds them, filtered from a held bucket and
+            decoded on the term's first use (the Spark path: partition
+            pruning on bucket dirs + row-group pushdown on term)
          -> per chunk, each query's kernel  [<= k rows per query]
          -> per-query global top-k (score desc, docnum asc) on the driver:
             ``_top_rows`` over the collected (chunks x queries x k) rows
@@ -33,10 +33,11 @@ frame this module builds from driver rows takes that route.
 A handle is a resident searcher over the index as it was at open or at
 its last ``refresh_stats()`` (Lucene's point-in-time reader): it reads
 each touched posting bucket, the docids dimension and, on the first
-prefix/range/wildcard expansion, the term dictionary once, and answers
-later queries from them in memory, so a warm local query reads no
-parquet.  ``refresh_stats()`` drops all of it; tombstones are re-read
-by ``delete_docs`` itself, so deletions apply at once.  Opening or
+prefix/range/wildcard expansion, the term dictionary once, decodes each
+queried term's posting rows once, and answers later queries from them
+in memory, so a warm local query reads no parquet and decodes no blob.
+``refresh_stats()`` drops all of it; tombstones are re-read by
+``delete_docs`` itself, so deletions apply at once.  Opening or
 refreshing a handle touches no JVM either: the Spark scans
 (``postings``, ``docids``) are built on first use by the distributed
 path, with the schema pyarrow reads from the footers.  The local path
@@ -63,6 +64,7 @@ from pyspark.sql.types import (
 
 from ..functions.analyzer import get_analyzer
 from ..functions.xxhash import pmod_bucket
+from ..operators.codecs import decode_posting_columns
 from ..operators.wand import OUT_SCHEMA, make_wand_kernel
 from .parser import ParsedQuery, parse_query
 
@@ -94,20 +96,6 @@ def _top_rows(scored, top_k: int) -> list[tuple]:
         if rank <= top_k:
             rows.append((qid, d, -neg, rank))
     return rows
-
-
-def _chunks(rows: pa.Table):
-    """The posting rows (a ``pa.Table``) split by ``chunk``, ascending
-    (one stable sort): the table itself when it holds one chunk, else
-    one ``take`` per chunk."""
-    keys = rows["chunk"].to_numpy()
-    order = np.argsort(keys, kind="stable")
-    cuts = np.flatnonzero(np.diff(keys[order])) + 1
-    if cuts.size == 0:
-        yield rows
-        return
-    for part in np.split(order, cuts):
-        yield rows.take(part)
 
 
 class _HeldFrame(ClassicDataFrame):
@@ -177,14 +165,15 @@ class BM25Index:
     py4j round trip.
 
     Held in ``_datasets``, each read on first use: the pyarrow datasets,
-    every touched bucket's committed posting rows, the committed docids
-    dimension with its docnum sort order, and the sorted committed term
-    dictionary.
+    every touched bucket's committed posting rows, every queried term's
+    rows with their postings decoded, the committed docids dimension
+    with its docnum sort order, and the sorted committed term dictionary.
     They are a point-in-time view, as a Lucene reader is: the handle
     answers from the index as it was at open or at its last
     ``refresh_stats()``, which drops them all (at 150k documents, after
-    the 220 queries of ``tools/profile_search.py``: ~84 MB of posting
-    buckets, 12 MB of docids and 6 MB of term dictionary).
+    the 420 queries of ``tools/profile_search.py --queries 400``: ~85 MB
+    of posting buckets, ~64 MB of decoded term rows, 12 MB of docids and
+    6 MB of term dictionary).
 
     Queries analyze with the chain the index was BUILT with (the preset
     name is recorded in stats.json) — the reference relies on declaring
@@ -202,8 +191,9 @@ class BM25Index:
         """(Re-)read stats.json (at open, after an incremental append_epoch)
         and what derives from it: committed epochs and tombstones.  It
         also drops everything the handle holds (``_datasets``: the pyarrow
-        datasets, posting buckets, docids and term dictionary, which the
-        local path would otherwise keep serving as of the last refresh)
+        datasets, posting buckets, decoded term rows, docids and term
+        dictionary, which the local path would otherwise keep serving as
+        of the last refresh)
         and the Spark scans; the next use rebuilds each over the
         committed epochs."""
         with open(f"{self.index_dir}/stats.json") as f:
@@ -327,9 +317,11 @@ class BM25Index:
 
     def _bucket_rows(self, buckets: list[int]) -> list:
         """The committed posting rows of ``buckets``, one pyarrow table
-        per bucket.  A bucket's rows are read on its first use (all of a
-        query's new buckets in one scan) and held under
-        ``("postings", bucket)`` for the handle's life."""
+        per bucket, postings still varint blobs.  A bucket's rows are read
+        on its first use (all of a query's new buckets in one scan) and
+        held under ``("postings", bucket)`` for the handle's life; a term
+        not queried before is filtered and decoded from them
+        (``_pruned_rows``)."""
         import pyarrow.dataset as ds
 
         new = [b for b in buckets if ("postings", b) not in self._datasets]
@@ -471,8 +463,8 @@ class BM25Index:
             scan = self._pruned_scan(pq.excluded, self._buckets_for(pq.excluded))
             deleted = self.deleted if self.deleted is not None else np.empty(0, dtype=np.int64)
             ex = (
-                scan.select("field", "term", "docs", "tfs", "dls")
-                .mapInPandas(_make_decode_kernel(deleted, False), schema=TOKENS_SCHEMA)
+                scan.select("field", "term", "n", "docs", "tfs", "dls")
+                .mapInArrow(_make_decode_kernel(deleted, False), schema=TOKENS_SCHEMA)
                 .select("docnum")
                 .distinct()
             )
@@ -536,8 +528,9 @@ class BM25Index:
 
         ``prefer_local`` short-circuits the distributed kernel when the
         index is small: the same kernels score the bucket-pruned posting
-        rows on the driver, from the buckets the handle holds (pyarrow
-        reads a bucket on its first use; ``refresh_stats`` drops them),
+        rows on the driver, from the decoded term rows the handle holds
+        (pyarrow reads a bucket on its first use, a term's rows are
+        decoded on theirs; ``refresh_stats`` drops them),
         and the winners' display ids come from the held docids.  That
         path runs no Spark job, a warm one reads no parquet, and its
         result is a driver-held frame (``_HeldFrame``) whose ``schema``
@@ -640,9 +633,11 @@ class BM25Index:
         does).  ``schema`` (RESULT_STRUCT or BATCH_RESULT_STRUCT) names
         the output columns.  Both paths merge the kernels' per-chunk rows
         with ``_top_rows``.  The kernels read and return Arrow tables on
-        both paths: the local path hands them the held rows chunk by
-        chunk; the distributed one runs them under
-        ``groupBy("chunk").applyInArrow`` and collects with ``toArrow``.
+        both paths: the local path hands them the held, decoded term
+        rows chunk by chunk (``_pruned_rows``); the distributed one runs them
+        under ``groupBy("chunk").applyInArrow`` over the scan's blob rows,
+        which each kernel decodes per chunk, and collects with
+        ``toArrow``.
         Local: a driver-held frame (``_HeldFrame``, a LocalRelation once
         a method other than ``schema``/``collect()`` needs the JVM
         frame).  Distributed: a lazy docid join."""
@@ -655,10 +650,10 @@ class BM25Index:
             prefer_local = self.stats["n_docs"] <= 200_000
         multi_epoch = len(self.epochs) > 1
         if prefer_local:
-            rows = self._pruned_rows(union, buckets)
-            if rows.num_rows == 0:
+            chunks = self._pruned_rows(union, buckets)
+            if not chunks:
                 return self._empty_frame(schema)
-            df_override = self._summed_dfs(rows) if multi_epoch else None
+            df_override = self._summed_dfs(pa.concat_tables(chunks)) if multi_epoch else None
         else:
             scan = self._pruned_scan(union, buckets)
             df_override = self._summed_dfs_spark(scan) if multi_epoch else None
@@ -695,7 +690,7 @@ class BM25Index:
         if prefer_local:
             scored = [
                 (qid, d, s)
-                for chunk in _chunks(rows)
+                for chunk in chunks
                 for qid, out in kernel_outs(chunk)
                 for d, s in zip(out["docnum"].to_pylist(), out["score"].to_pylist())
             ]
@@ -881,17 +876,45 @@ class BM25Index:
             ranges=[], excluded_ranges=[], wildcards=[], excluded_wildcards=[],
         )
 
-    def _pruned_rows(self, terms: list[str], buckets: dict[str, int]) -> pa.Table:
-        """Driver-local pruned read of the posting parquet as a pyarrow
-        table — no Spark job and no pandas frame.  Each touched bucket's
-        committed rows are read through pyarrow once per handle
-        (``_bucket_rows``, dropped by ``refresh_stats``); a query then
-        filters the held tables by term in memory and drops the
-        ``group``/``bucket`` partition columns, which no kernel reads.
-        The kernels take the filtered table as it is."""
-        t = pa.concat_tables(self._bucket_rows(sorted(set(buckets.values()))))
-        t = t.filter(pc.is_in(t["term"], value_set=pa.array(terms, pa.string())))
-        return t.drop_columns(["group", "bucket"])
+    def _pruned_rows(self, terms: list[str], buckets: dict[str, int]) -> list[pa.Table]:
+        """Driver-local pruned read of the posting parquet: the committed
+        rows of ``terms`` split by chunk, one pyarrow table per chunk in
+        ascending chunk order — no Spark job and no pandas frame.  A
+        term's rows are filtered from its held bucket (``_bucket_rows``)
+        on the first query that needs it, their ``docs``/``tfs``/``dls``
+        blobs decoded into ``list<>`` columns (all of a query's new terms
+        in one ``decode_posting_columns`` call) and sorted by (term,
+        chunk).  The handle holds that table once and, under
+        ``("term", t)``, the table with the term's (chunk, start, length)
+        runs in it, until ``refresh_stats``; a ``pa.Table`` slice per
+        held term would cost ~7 KB of metadata each.  A chunk's table is
+        its runs' zero-copy slices, so no query decodes a held term again
+        or copies its rows."""
+        new = [t for t in terms if ("term", t) not in self._datasets]
+        if new:
+            held = pa.concat_tables(self._bucket_rows(sorted({buckets[t] for t in new})))
+            rows = held.filter(pc.is_in(held["term"], value_set=pa.array(new, pa.string())))
+            decoded = decode_posting_columns(rows["docs"], rows["tfs"], rows["dls"], rows["n"])
+            for name, col in zip(("docs", "tfs", "dls"), decoded):
+                rows = rows.set_column(rows.schema.get_field_index(name), name, col)
+            rows = rows.sort_by([("term", "ascending"), ("chunk", "ascending")])
+            names = rows["term"].to_numpy(zero_copy_only=False)
+            chunks = rows["chunk"].to_numpy()
+            cuts = np.flatnonzero((names[1:] != names[:-1]) | (chunks[1:] != chunks[:-1])) + 1
+            runs: dict[str, list[tuple[int, int, int]]] = {t: [] for t in new}
+            for a, z in zip([0, *cuts.tolist()], [*cuts.tolist(), rows.num_rows]):
+                if z > a:
+                    runs[names[a]].append((int(chunks[a]), a, z - a))
+            self._datasets.update((("term", t), (rows, runs[t])) for t in new)
+        by_chunk: dict[int, list[pa.Table]] = {}
+        for t in terms:
+            rows, runs = self._datasets[("term", t)]
+            for chunk, a, n in runs:
+                by_chunk.setdefault(chunk, []).append(rows.slice(a, n))
+        return [
+            parts[0] if len(parts) == 1 else pa.concat_tables(parts)
+            for _, parts in sorted(by_chunk.items())
+        ]
 
     def _doc_ids(self, docnums: list[int]) -> dict[int, str]:
         """docnum -> display id for the winners, from the committed docids

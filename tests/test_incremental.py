@@ -195,13 +195,20 @@ def test_uncommitted_epoch_is_not_served(spark, tmp_path):
     ]
     assert dist == before
     # ...and the warm handle, before and after a refresh: the orphan's
-    # rows never enter the buckets it holds
+    # rows never enter what it holds, posting buckets and decoded term
+    # rows alike
     for refresh in (False, True):
         if refresh:
             warm.refresh_stats()
         assert [(r.doc_id, r.score) for r in warm.search("spark", 10, "or").collect()] == before
-        held = [t for key, t in warm._datasets.items() if isinstance(key, tuple)]
-        assert held and all(pc.max(t["group"]).as_py() < 1000 for t in held)
+        # a held term is (its decoded table, its runs in that table)
+        held = {
+            key: t if key[0] == "postings" else t[0]
+            for key, t in warm._datasets.items() if isinstance(key, tuple)
+        }
+        assert {kind for kind, _ in held} == {"postings", "term"}
+        assert warm._datasets[("term", "spark")][1]
+        assert all(t.num_rows == 0 or pc.max(t["group"]).as_py() < 1000 for t in held.values())
 
 
 def test_warm_handle_serves_an_append_after_refresh(spark, tmp_path):

@@ -325,6 +325,34 @@ def test_warm_local_search_builds_no_pandas_frame(spark, index, request, monkeyp
     assert got == want and jobs == [], jobs
 
 
+def test_warm_handle_decodes_no_posting_blob(spark, idx, monkeypatch):
+    """A warm handle holds each queried term's rows decoded: with the
+    column decoder and ``varint_decode`` raising, the same queries (and
+    a batch of them) return the same rows with 0 Spark jobs."""
+    from beetle_search_engine_spark.operators import codecs, wand
+    from beetle_search_engine_spark.plans import query
+
+    queries = [("alpha beta", "and"), ("beta OR filler5", "parse"), ("filler1*", "parse"),
+               ("alpha NOT gamma", "parse"), ("gamma OR filler3 OR alpha", "or")]
+    batch = {f"q{i}": q for i, (q, _) in enumerate(queries)}
+
+    def answers():
+        single = [_triples(idx.search(q, 5, m, prefer_local=True).collect()) for q, m in queries]
+        return single, idx.search_many(batch, 5, "parse", prefer_local=True).collect()
+
+    want = answers()
+    assert all(want[0])
+
+    def no_decode(*_a, **_k):
+        raise AssertionError("a posting blob decoded on a warm handle")
+
+    for module, name in ((codecs, "decode_posting_columns"), (wand, "decode_posting_columns"),
+                         (query, "decode_posting_columns"), (codecs, "varint_decode")):
+        monkeypatch.setattr(module, name, no_decode)
+    got, jobs = _counting_jobs(spark, answers)
+    assert got == want and jobs == [], jobs
+
+
 def test_delete_docs_applies_to_a_warm_handle(spark, tmp_path):
     """Deletions drop documents at once from a handle that already holds
     its buckets and docids, exactly as from a freshly opened one."""

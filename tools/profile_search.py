@@ -8,13 +8,13 @@ default ``prefer_local``) against the index in INDEX_DIR and times the
 real ``BM25Index`` stages with wrappers: ``_parse``, ``_pruned_rows``,
 every kernel call ``make_wand_kernel`` hands to ``_rank``, ``_doc_ids``,
 ``_local_frame`` and the result's ``collect()``; the last stage,
-``other``, is the call time outside those stages (glue such as
-``_chunks``, the term masks and the top-k merge).  The first ``WARMUP``
+``other``, is the call time outside those stages (glue such as the
+term masks and the top-k merge).  The first ``WARMUP``
 (20) queries are not measured, so every table row is taken after the
 same warm-up.  Prints one markdown table row per index (the
 ROADMAP local-latency budget table), each stage cell ``mean / p50`` in ms
 per query, and a last cell with the MB the handle holds after the run:
-posting buckets / docids / term dictionary.  With ``--build-docs N`` and
+posting buckets / decoded term rows / docids / term dictionary.  With ``--build-docs N`` and
 no index in INDEX_DIR, it first builds one from the seed's perfbench
 corpus of N documents.
 """
@@ -50,16 +50,22 @@ def build(spark, index_dir: str, n_docs: int, seed: int) -> None:
 
 def held_bytes(ix) -> dict[str, int]:
     """Bytes of what a handle holds in ``_datasets``: the posting
-    buckets (``("postings", bucket)`` keys), the docids (``docnum_ids``)
-    and the term dictionary (``terms``)."""
-    out = {"postings": 0, "docids": 0, "terms": 0}
+    buckets (``("postings", bucket)`` keys), the decoded rows of every
+    queried term (``("term", t)``: a table shared by the terms decoded
+    together, counted once, and the term's runs in it), the docids
+    (``docnum_ids``) and the term dictionary (``terms``)."""
+    out = {"postings": 0, "decoded": 0, "docids": 0, "terms": 0}
+    decoded = {}
     for key, held in ix._datasets.items():
-        if isinstance(key, tuple):
+        if isinstance(key, tuple) and key[0] == "postings":
             out["postings"] += held.nbytes
+        elif isinstance(key, tuple):
+            decoded[id(held[0])] = held[0].nbytes
         elif key == "docnum_ids":
             out["docids"] += sum(part.nbytes for part in held)
         elif key == "terms":
             out["terms"] += held.nbytes
+    out["decoded"] = sum(decoded.values())
     return out
 
 
@@ -131,7 +137,7 @@ def main(argv=None) -> int:
     print(f"{args.queries} warm queries of perfbench stream seed {args.seed} "
           f"after {WARMUP} unmeasured; ms per query, mean / p50")
     print("| index | call | " + " | ".join(f"`{s}`" if s[0] == "_" else s for s in STAGES)
-          + " | held MB (postings / docids / terms) |")
+          + " | held MB (postings / decoded / docids / terms) |")
     print("|---" * (len(STAGES) + 3) + "|")
     print(table_row(f"{n_docs // 1000}k", times, held))
     return 0
